@@ -32,10 +32,11 @@ def token_count(text: Column) -> Column:
 def bpe_ish_token_count(text: Column) -> Column:
     """BPE-ish token estimate: word-pieces of <=4 chars (regexp count).
 
-    Round 9: ``regexp_count`` instead of ``size(regexp_extract_all(...))``
-    — the same non-overlapping Java-regex match count without
-    materializing an array of every match string (guide §1.2 per-task
-    work; value-identical, oracle-gated via text_stats)."""
+    ``regexp_count`` is the non-overlapping Java-regex match count. It is
+    RuntimeReplaceable: the optimized plan evaluates it as
+    ``size(regexp_extract_all(text, pattern, 0))``, so it materializes the
+    same array of match strings and is a readability choice, not a speed
+    one (oracle-gated via text_stats)."""
     return F.regexp_count(
         text, F.lit(r"[A-Za-z0-9]{1,4}|[^\sA-Za-z0-9]")
     ).cast("long")

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codecs.api import decode_array, encode_array
+from ..worker import drop_zip_finders
 
 ENCODED_SCHEMA = (
     "chunk_id long, column string, col_idx int, n_rows long, codec string, "
@@ -334,6 +335,7 @@ def encode_pages(
     gd_bc = sc.broadcast(global_dicts or {})
 
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         done = skip_bc.value
         gds = gd_bc.value
         for batch in batches:
@@ -455,6 +457,7 @@ def decode_chunks(
     exp_names = {n for n, _ in exp_fields}
 
     def decode(table: pa.Table) -> pa.Table:
+        drop_zip_finders()
         gds = gd_bc.value
         t = table.sort_by("col_idx")
         got: dict[str, pa.Array] = {}
@@ -537,6 +540,7 @@ def decode_chunks_colocated(
     exp_types = dict(exp_fields)
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         gds = gd_bc.value
         pending: dict[int, list] = {}
         seen: set[int] = set()

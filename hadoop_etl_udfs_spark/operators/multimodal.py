@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..worker import drop_zip_finders
+
 FEATURE_SCHEMA = (
     "url string, n_bytes long, magic string, entropy double, "
     "mean_byte double, feature array<float>"
@@ -60,6 +62,7 @@ def extract_features(
     per-blob boundary work (len, join, magic probe) touches rows."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -134,6 +137,7 @@ def frame_sample(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -204,6 +208,7 @@ def resize_grayscale(
     schema = f"{key_col} string, pixels array<double>"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         hw = H * W
         for pdf in batches:
             n = len(pdf)

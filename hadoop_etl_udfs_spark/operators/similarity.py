@@ -17,6 +17,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..worker import drop_zip_finders
+
 DIM = 64
 N_PLANES = 8
 
@@ -109,6 +111,7 @@ def _lsh_bucket_udf(planes: np.ndarray):
 
     @pandas_udf("long")
     def bucket(emb):
+        drop_zip_finders()
         import pandas as pd
 
         if len(emb) == 0:
@@ -562,6 +565,7 @@ def _cell_assign_udf(centroids: np.ndarray):
 
     @pandas_udf("int")
     def assign(emb):
+        drop_zip_finders()
         import pandas as pd
 
         if len(emb) == 0:

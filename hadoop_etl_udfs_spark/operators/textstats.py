@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..worker import drop_zip_finders
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,8 +261,8 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     t3 = F.regexp_replace(t2, _IPV4_RE, "<IP>")
     return docs.select(
         "doc_id",
-        # regexp_count == size(regexp_extract_all(..., 0)): the same
-        # non-overlapping match count without building the match array
+        # regexp_count is RuntimeReplaceable to
+        # size(regexp_extract_all(..., 0)): the same match array is built
         F.regexp_count(t0, F.lit(_URL_RE))
         .cast("long").alias("n_urls"),
         F.regexp_count(t1, F.lit(_EMAIL_RE))
@@ -639,6 +640,7 @@ def repetition_signals_df(docs: DataFrame) -> DataFrame:
                 top2_chars, dup5_chars)
 
     def kernel(batches: _Iter[_pa.RecordBatch]) -> _Iter[_pa.RecordBatch]:
+        drop_zip_finders()
         for batch in batches:
             if batch.num_rows == 0:
                 continue

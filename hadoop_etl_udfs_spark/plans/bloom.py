@@ -48,6 +48,8 @@ import numpy as np
 import pandas as pd  # module-level: the pandas UDF's type hints resolve here
 import pyarrow as pa
 
+from ..worker import drop_zip_finders
+
 BLOOM_BITS_PER_VALUE = 10
 BLOOM_K = 6
 _MIN_BITS = 256  # floor so tiny chunks still get a real filter
@@ -177,6 +179,7 @@ def stats_hit_udf(spark, hashes: np.ndarray):
 
     @F.pandas_udf("boolean")
     def _hit(stats: pd.Series) -> pd.Series:
+        drop_zip_finders()
         h = h_bc.value
         out = []
         for s in stats:

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..worker import drop_zip_finders
+
 CHUNKS_SUBDIR = "chunks"
 
 
@@ -751,6 +753,7 @@ def delete_from_sink(
     gd_bc = spark.sparkContext.broadcast(global_dicts or {})
 
     def _kdec(tbl: pa.Table) -> pa.Table:
+        drop_zip_finders()
         if tbl.num_rows == 0:
             return pa.table(
                 {"chunk_id": pa.array([], pa.int64()),

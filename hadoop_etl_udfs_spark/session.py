@@ -2,7 +2,9 @@
 
 Local mode stands in for the multi-executor cluster (BASELINE.md §c): the
 same partitioning/shuffle design runs unchanged on a real cluster; bench.py
-evidences scaling by running at two parallelism levels (local[8] vs local[32]).
+evidences scaling by running at two parallelism levels (local[8] vs
+local[SPARK_GRAFT_CPUS]). Without overrides a session takes every core this
+process may run on and half of the host's memory as driver heap.
 """
 
 from __future__ import annotations
@@ -35,7 +37,13 @@ def get_spark(
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
+    # half of physical memory (MemTotal): in local mode the driver heap is
+    # the whole cluster; the rest stays with the Python workers and page cache
+    half_mem_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{half_mem_mb}m")
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = _engine_confs(
         SparkSession.builder.master(f"local[{cores}]").appName(app_name),
@@ -46,7 +54,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )

@@ -35,6 +35,8 @@ import os
 import struct
 import zlib
 
+from ..worker import drop_zip_finders
+
 MAGIC = b"Obj\x01"
 _SYNC = bytes(range(16))  # deterministic sync marker (no wall-clock/random)
 
@@ -338,6 +340,7 @@ def write_avro_spark(df, path: str) -> int:
     os.makedirs(path, exist_ok=True)
 
     def write_part(batches):
+        drop_zip_finders()
         rows: list[dict] = []
         for batch in batches:
             cols = {}
@@ -382,6 +385,7 @@ def read_avro_spark(spark, path: str, ddl_schema: str):
     )
 
     def decode(batches):
+        drop_zip_finders()
         for batch in batches:
             for content in batch.column(0):
                 schema, rows = read_avro_bytes(content.as_py())

@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .avro_lite import read_avro, write_avro
+from ..worker import drop_zip_finders
 
 FORMAT_VERSION = 1
 
@@ -383,6 +384,7 @@ def _bucket_udf(n: int, is_string: bool):
 
     @pandas_udf("int")
     def _b(s: pd.Series) -> pd.Series:
+        drop_zip_finders()
         if is_string:
             hv = _murmur3_bytes([x.encode("utf-8") for x in s])
         else:

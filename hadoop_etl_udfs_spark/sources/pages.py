@@ -22,6 +22,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
+from ..worker import drop_zip_finders
+
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 LANGS = np.array(["en", "de", "fr", "es", "ja", "zh", "ru", "pt"])
@@ -176,6 +178,7 @@ def synthesize_pages(
     """Distributed deterministic pages table of ``n_docs`` rows."""
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         for batch in batches:
             ids = batch.column(0).to_numpy().astype(np.uint64)
             yield _gen_batch(ids, seed)

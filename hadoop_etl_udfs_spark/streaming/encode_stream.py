@@ -23,6 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.encode import encode_pages
 from ..plans import lineage
 from ..sources.pages import PAGES_SCHEMA
+from ..worker import drop_zip_finders
 
 
 def start_encode_stream(
@@ -366,6 +367,7 @@ def sessionize_events(
         )
 
     def update(key, pdfs, state):
+        drop_zip_finders()
         import numpy as np
 
         user_id = key[0]
