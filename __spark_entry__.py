@@ -73,9 +73,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (the bucket kernel stays in-gate via cosine_topk_batch,
     embedding_neardup_pairs, and ann_recall_at_k), ivf_assignments (the
     cell kernel stays in-gate via cosine_topk_ivf, its over-encoded twin,
-    and ann_recall_at_k_ivf), and dedup_clusters (the star variant stays
-    in-gate against the SAME transitive-closure oracle; the propagation
-    variant keeps its chain/triangle pytests). All eight displaced
+    and ann_recall_at_k_ivf), and dedup_clusters (the same star
+    algorithm as the in-gate dedup_clusters_star, against the SAME
+    transitive-closure oracle). All eight displaced
     queries were driver-green r1-r7 and stay replica-gated every round."""
     return {
         # ---- slots 1-50: oracle-backed (driver-evaluated) ----
@@ -227,7 +227,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id_heuristic": textstats.lang_id_heuristic,
         "doc_fingerprints": textstats.doc_fingerprints,
         "corpus_split": textstats.corpus_split,
-        "dedup_clusters": dedup.dedup_clusters_checked,
+        "dedup_clusters": dedup.dedup_clusters_star_checked,
         "cosine_topk_lsh": similarity.cosine_topk_lsh,
         "lsh_buckets": similarity.lsh_buckets,
         "ivf_assignments": similarity.ivf_assignments,
@@ -464,7 +464,7 @@ def _dedup_clusters_sql() -> str:
     """Connected components over the SAME md5 band pairs, as a recursive
     CTE: reach(x, lbl) enumerates every label reachable from x through the
     undirected pair graph; min reachable = the component representative —
-    exactly duplicate_clusters' min-label fixpoint."""
+    exactly duplicate_clusters_star's component minimum."""
     return f"""
             WITH RECURSIVE {_dedup_clusters_ctes()}
             SELECT doc_id, cluster_rep,

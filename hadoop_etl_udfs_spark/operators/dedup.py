@@ -378,85 +378,6 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash64(spark, sf_dir, method="md5", n_bits=32)
 
 
-def duplicate_clusters(
-    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over near-dup candidate pairs — the step that
-    turns pairwise evidence into dedup DECISIONS: each document's
-    ``cluster_rep`` is the smallest doc_id reachable through the pair
-    graph (keep the rep, drop the rest), plus the cluster's size.
-
-    Algorithm: iterative min-label propagation. Each round is ONE join of
-    the (undirected) edge list against current labels + a map-side
-    combinable min aggregate; labels converge after ``diameter`` rounds,
-    and LSH candidate clusters are star-like (diameter ~2-4), so 3-5
-    rounds in practice. ``localCheckpoint`` after each round truncates the
-    growing plan (iterative self-joins otherwise stack lineage); the loop
-    stops at the first round with zero label changes and raises if
-    ``max_iter`` rounds were not enough (a silently unconverged labeling
-    would split clusters). At adversarial diameters (long chains) switch
-    to large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014) — same join primitive, O(log n)
-    rounds. Only documents that appear in some pair are returned
-    (singletons need no dedup decision)."""
-    # materialize the pairs projection ONCE: `pairs` is usually a lazy
-    # minhash/band-join plan, and the symmetrizing union below would
-    # otherwise evaluate that whole upstream twice inside one job (union
-    # branches share no exchange) — measured 7x on the bench's 205k-doc
-    # pipeline before the round-6 fix
-    e = pairs.select(
-        F.col(src).alias("x"), F.col(dst).alias("y")
-    ).localCheckpoint()
-    edges = (
-        e.union(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = edges.select("x").distinct().withColumn("rep", F.col("x"))
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                labels.select(
-                    F.col("x").alias("y"), F.col("rep").alias("nrep")
-                ),
-                "y",
-            )
-            .groupBy("x")
-            .agg(F.min("nrep").alias("nmin"))
-        )
-        new = labels.join(nbr, "x", "left").select(
-            "x",
-            F.least(F.col("rep"), F.coalesce("nmin", F.col("rep"))).alias("rep"),
-        ).localCheckpoint()
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "x")
-            .filter(F.col("n.rep") != F.col("o.rep"))
-            .limit(1)
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iter} rounds — "
-            "the pair graph has a longer diameter than expected; raise "
-            "max_iter or use a large-star/small-star implementation"
-        )
-    sizes = labels.groupBy("rep").agg(F.count("*").alias("cluster_size"))
-    return (
-        labels.join(sizes, "rep")
-        .select(
-            F.col("x").alias("doc_id"),
-            F.col("rep").alias("cluster_rep"),
-            "cluster_size",
-        )
-        .orderBy("doc_id")
-    )
-
-
 def _canon_edges(e: DataFrame) -> DataFrame:
     """Undirected edge set in canonical (lo, hi) form, no self-loops."""
     return (
@@ -512,14 +433,17 @@ def duplicate_clusters_star(
     pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b",
     max_iter: int = 25, stats: dict | None = None,
 ) -> DataFrame:
-    """Connected components by alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-    2014) — the adversarial-diameter escape ``duplicate_clusters``' min-label
-    propagation documents: propagation needs O(diameter) rounds (a 200-node
-    chain = 200 rounds), star contraction needs O(log n) ALTERNATIONS
-    regardless of diameter, with the same join+min primitive per round.
-    Same output contract as ``duplicate_clusters``: (doc_id, cluster_rep =
-    component minimum, cluster_size) for every document in some pair.
+    """Connected components over near-dup candidate pairs — the step that
+    turns pairwise evidence into dedup DECISIONS: each document's
+    ``cluster_rep`` is the smallest doc_id reachable through the pair graph
+    (keep the rep, drop the rest), plus the cluster's size, for every
+    document in some pair (singletons need no dedup decision).
+
+    Algorithm: alternating large-star/small-star contraction (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC 2014). It
+    needs O(log n) ALTERNATIONS regardless of the graph's diameter, where
+    min-label propagation needs O(diameter) rounds (a 200-node chain = 200
+    rounds).
     ``stats``, when passed, receives {"alternations", "n_edges"} — bench.py
     uses it to report the measured O(log n) round count."""
     # materialize the pairs projection ONCE at entry: the canon-edge
@@ -577,18 +501,11 @@ def duplicate_clusters_star(
     )
 
 
-def dedup_clusters_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_clusters_star_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: connected components over the oracle-checked MinHash
     candidate pairs — the full near-dup resolution pipeline (pairs ->
     clusters -> representative), value-verified against a DuckDB recursive
     CTE over the same md5 banding SQL."""
-    return duplicate_clusters(minhash_lsh_pairs_checked(spark, sf_dir))
-
-
-def dedup_clusters_star_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: the star-contraction algorithm over the SAME checked
-    pairs — both component algorithms are held to the same DuckDB
-    transitive-closure oracle."""
     return duplicate_clusters_star(minhash_lsh_pairs_checked(spark, sf_dir))
 
 

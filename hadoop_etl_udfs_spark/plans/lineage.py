@@ -115,26 +115,41 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
 _ISIN_PUSHDOWN_MAX = 100_000  # keep-set size above which IN becomes a join
 
 
-def _chunk_id_filter(enc: DataFrame, chunk_ids, keep: bool) -> DataFrame:
+def _chunk_id_filter(
+    enc: DataFrame, chunk_ids, keep: bool = True
+) -> tuple[DataFrame, int]:
     """Rows of ``enc`` whose chunk_id is in (``keep=True``) / not in
-    (``keep=False``) the driver-side id set — as an IN literal under
-    ``_ISIN_PUSHDOWN_MAX``, as a semi/anti join on a broadcast id table
-    past it. The rewrite ops (delete_from_sink, compact_sink) previously
-    built uncapped ``isin(affected)`` literals; a mass takedown or a
-    sink with hundreds of thousands of fragments would push a giant IN
-    expression through the planner (r8 verdict item 5). chunk_id is
-    never NULL (every manifest row carries one), so the anti-join and
-    ``~isin`` semantics agree."""
-    ids = list(chunk_ids)
+    (``keep=False``) an id set, and the set's size — the ONE place the
+    IN-literal-or-join decision is made, for every pruned read and rewrite.
+
+    ``chunk_ids`` is a driver-side iterable or a lazy ``chunk_id``
+    DataFrame (a zone-map or bloom keep set), which is collected once,
+    bounded. Up to ``_ISIN_PUSHDOWN_MAX`` ids the filter is an IN literal:
+    pushed to the parquet scan, no join stage. Past it a giant IN
+    expression would choke the planner (a mass takedown, a sink of
+    hundreds of thousands of fragments), so it becomes a broadcast
+    semi/anti join on the id table; a lazy keep set is checkpointed once
+    then, so its JSON-parsing probe never re-runs per consumer (nor
+    re-scans a manifest its caller has released). chunk_id is never NULL,
+    so the anti join and ``~isin`` agree."""
+    lazy = isinstance(chunk_ids, DataFrame)
+    ids = (
+        [r["chunk_id"] for r in chunk_ids.limit(_ISIN_PUSHDOWN_MAX + 1).collect()]
+        if lazy else list(chunk_ids)
+    )
     if len(ids) <= _ISIN_PUSHDOWN_MAX:
         pred = F.col("chunk_id").isin(ids)
-        return enc.filter(pred if keep else ~pred)
-    id_df = enc.sparkSession.createDataFrame(
-        [(int(i),) for i in ids], "chunk_id long"
-    )
-    return enc.join(
-        F.broadcast(id_df), "chunk_id", "leftsemi" if keep else "leftanti"
-    )
+        return enc.filter(pred if keep else ~pred), len(ids)
+    if lazy:
+        id_df = chunk_ids.select("chunk_id").localCheckpoint()
+        n = id_df.count()
+    else:
+        id_df = enc.sparkSession.createDataFrame(
+            [(int(i),) for i in ids], "chunk_id long"
+        )
+        n = len(ids)
+    how = "leftsemi" if keep else "leftanti"
+    return enc.join(F.broadcast(id_df), "chunk_id", how), n
 
 
 def decode_chunks_where(
@@ -173,54 +188,44 @@ def decode_chunks_where(
     the zone-map IN filter drops chunks of the surviving dirs). The stats
     probe always reads the PRUNE column's rows from the payload-pruned
     manifest scan, so the prune column need not be in the output subset."""
+    import json as _json
+
     from ..operators.encode import decode_chunks, subset_schema
 
     enc = read_encoded(spark, out_dir)
-    st = (
-        enc.filter(F.col("column") == column)
-        .select("chunk_id", "stats")
-        .cache()
-    )
-    try:
-        probe = st.filter(F.col("stats").isNotNull()).select("stats").first()
-        if probe is None and st.first() is None:
-            raise ValueError(
-                f"column {column!r} has no chunk rows in {out_dir} — "
-                "misspelled column names must fail loud, not decode nothing"
-            )
-        if probe is not None:
-            import json as _json
-
-            probe_stats = _json.loads(probe["stats"])
-            for bound, name in ((lo, "lo"), (hi, "hi")):
-                if isinstance(probe_stats["min"], str) != isinstance(bound, str):
-                    raise TypeError(
-                        f"bounds type {type(bound).__name__} ({name}) does "
-                        f"not match the stats domain of column {column!r} "
-                        f"({type(probe_stats['min']).__name__}) — comparing "
-                        "them would be lexicographic and silently wrong"
-                    )
-        mn = F.get_json_object("stats", "$.min")
-        mx = F.get_json_object("stats", "$.max")
-        if not isinstance(lo, str):
-            mn, mx = mn.cast("long"), mx.cast("long")
-        disjoint = (mx < F.lit(lo)) | (mn > F.lit(hi))
-        data = (
-            read_encoded_columns(spark, out_dir, columns) if columns else enc
+    st = enc.filter(F.col("column") == column).select("chunk_id", "stats")
+    mn = F.get_json_object("stats", "$.min")
+    mx = F.get_json_object("stats", "$.max")
+    # one job: does the column exist, and one zone map to type-check the
+    # bounds against (a bloom-only stats JSON carries no min)
+    probe = st.agg(
+        F.count("*").alias("n"),
+        F.first(F.when(mn.isNotNull(), F.col("stats")), ignorenulls=True)
+        .alias("stats"),
+    ).first()
+    if probe["n"] == 0:
+        raise ValueError(
+            f"column {column!r} has no chunk rows in {out_dir} — "
+            "misspelled column names must fail loud, not decode nothing"
         )
-        out_schema = subset_schema(columns, schema) if columns else schema
-        keep = st.filter(F.col("stats").isNull() | ~disjoint).select("chunk_id")
-        ids = [r["chunk_id"] for r in keep.limit(_ISIN_PUSHDOWN_MAX + 1).collect()]
-        if len(ids) <= _ISIN_PUSHDOWN_MAX:
-            # small keep set: push as an IN filter so parquet row-group
-            # pruning can apply (and no join stage at all). One job: the
-            # bounded limit+collect replaces the count-then-collect pair
-            pruned = data.filter(F.col("chunk_id").isin(ids))
-        else:
-            pruned = data.join(keep, "chunk_id")
-        return decode_chunks(pruned, out_schema, global_dicts)
-    finally:
-        st.unpersist()
+    if probe["stats"] is not None:
+        probe_min = _json.loads(probe["stats"])["min"]
+        for bound, name in ((lo, "lo"), (hi, "hi")):
+            if isinstance(probe_min, str) != isinstance(bound, str):
+                raise TypeError(
+                    f"bounds type {type(bound).__name__} ({name}) does "
+                    f"not match the stats domain of column {column!r} "
+                    f"({type(probe_min).__name__}) — comparing "
+                    "them would be lexicographic and silently wrong"
+                )
+    if not isinstance(lo, str):
+        mn, mx = mn.cast("long"), mx.cast("long")
+    disjoint = (mx < F.lit(lo)) | (mn > F.lit(hi))
+    keep = st.filter(F.col("stats").isNull() | ~disjoint).select("chunk_id")
+    data = read_encoded_columns(spark, out_dir, columns) if columns else enc
+    pruned, _ = _chunk_id_filter(data, keep)
+    out_schema = subset_schema(columns, schema) if columns else schema
+    return decode_chunks(pruned, out_schema, global_dicts)
 
 
 def cluster_ranges_keep_predicate(ranges: list[tuple[int, int]]):
@@ -385,21 +390,46 @@ def sink_stats(spark: SparkSession, enc_or_dir) -> DataFrame:
     )
 
 
+def _sink_probe(enc: DataFrame) -> dict:
+    """ONE aggregate over the payload-pruned manifest answers every question
+    a rewrite asks of a sink — the public :func:`sink_has_duplicates` and
+    :func:`sink_bloom_columns` read theirs from it too, so each answer has
+    a single definition:
+
+    - ``duplicated``: some (chunk_id, column) row appears more than once
+      (a job resumed over drifted input — lineage docstring above);
+    - ``chunks``: the number of distinct chunk ids;
+    - ``stamped``: some chunk row carries a cluster stamp;
+    - ``bloom_columns``: sorted names of the columns carrying a Bloom
+      filter in their stats — blooms name their column, so rewrites
+      re-derive ``bloom_by`` from the sink (cluster stamps do NOT record
+      their source column, so ``cluster_by`` must be passed).
+
+    Sinks written before the stats or cluster columns existed read as
+    unbloomed and unstamped."""
+    def col(name, ddl):
+        return F.col(name) if name in enc.columns else F.lit(None).cast(ddl)
+
+    bloomed = F.get_json_object(col("stats", "string"), "$.bloom.m").isNotNull()
+    r = enc.agg(
+        F.count("*").alias("n"),
+        F.countDistinct("chunk_id", "column").alias("n_distinct"),
+        F.countDistinct("chunk_id").alias("chunks"),
+        F.count(col("cluster_lo", "long")).alias("stamped"),
+        F.collect_set(F.when(bloomed, F.col("column"))).alias("bloomed"),
+    ).first()
+    return {
+        "duplicated": r["n"] != r["n_distinct"],
+        "chunks": r["chunks"],
+        "stamped": r["stamped"] > 0,
+        "bloom_columns": sorted(r["bloomed"]),
+    }
+
+
 def sink_bloom_columns(enc: DataFrame) -> list[str]:
-    """Column names carrying a Bloom filter in this sink's stats — blooms
-    name their column (one stats row per chunk-column), so rewrite jobs
-    (delete_from_sink, recluster_sink) re-derive ``bloom_by`` from the sink
-    itself instead of asking the caller (unlike cluster stamps, which do
-    NOT record their source column and therefore must be passed)."""
-    return sorted(
-        r["column"]
-        for r in enc.filter(
-            F.get_json_object("stats", "$.bloom.m").isNotNull()
-        )
-        .select("column")
-        .distinct()
-        .collect()
-    )
+    """Column names carrying a Bloom filter in this sink's stats (see
+    :func:`_sink_probe`)."""
+    return _sink_probe(enc)["bloom_columns"]
 
 
 def bloom_candidate_chunks(
@@ -488,6 +518,7 @@ def decode_chunks_where_key_in(
     composition — e.g. a just-encoded table queried without a sink)."""
     from ..operators.encode import decode_chunks, subset_schema
 
+    ids = list(ids)
     on_disk = isinstance(enc_or_dir, str)
     enc = read_encoded(spark, enc_or_dir) if on_disk else enc_or_dir
     st = enc.filter(F.col("column") == key_column).select("chunk_id", "stats")
@@ -506,19 +537,10 @@ def decode_chunks_where_key_in(
         )
     else:
         data = enc
-    cand = [r["chunk_id"] for r in keep.limit(_ISIN_PUSHDOWN_MAX + 1).collect()]
-    if len(cand) <= _ISIN_PUSHDOWN_MAX:
-        pruned = data.filter(F.col("chunk_id").isin(cand))
-    else:
-        # the limit().collect() above already ran the JSON-parsing bloom
-        # probe over the key-column manifest once; joining the LAZY keep
-        # would run it a second time (the >=2-consumers rule — the same
-        # reason delete_from_sink checkpoints its candidate set).
-        # r8 ADVICE item 2.
-        pruned = data.join(keep.localCheckpoint(), "chunk_id")
+    pruned, _ = _chunk_id_filter(data, keep)
     out_schema = subset_schema(dec_set, schema) if dec_set else schema
     dec = decode_chunks(pruned, out_schema, global_dicts)
-    dec = dec.filter(_key_probe_col(dec, key_column).isin(list(ids)))
+    dec = dec.filter(_key_probe_col(dec, key_column).isin(ids))
     if columns and key_column not in columns:
         dec = dec.drop(key_column)
     return dec
@@ -553,15 +575,71 @@ def sink_has_duplicates(spark: SparkSession, out_dir: str) -> bool:
     duplicated sink must be decoded with the grouped path (decode_chunks
     dedupes inside the group); the colocated path would emit each duplicated
     chunk once per copy. Payload-pruned scan: this costs a manifest read."""
-    row = (
-        read_manifest(spark, out_dir)
-        .agg(
-            F.count("*").alias("n"),
-            F.countDistinct("chunk_id", "column").alias("d"),
+    return _sink_probe(read_encoded(spark, out_dir))["duplicated"]
+
+
+def _open_rewrite(
+    spark: SparkSession, src_dir: str, cluster_by: str | None, unprunable: str
+) -> tuple[DataFrame, dict]:
+    """Source side of delete_from_sink / compact_sink: the sink's ONE
+    manifest probe, the stamped-sink guard (re-stamping needs the stamp
+    column's name, which the sink does not record; ``unprunable`` says
+    what would go wrong without it), and the dedupe of a duplicated sink.
+    Only a duplicated sink is materialized: a clean sink's parquet files
+    ARE the materialization — an unconditional payload localCheckpoint
+    copies the corpus before any work (measured as the single biggest
+    takedown cost)."""
+    enc = read_encoded(spark, src_dir)
+    probe = _sink_probe(enc)
+    if probe["stamped"] and cluster_by is None:
+        raise ValueError(
+            f"sink at {src_dir} carries cluster stamps but no cluster_by "
+            f"was given — {unprunable}"
         )
-        .collect()[0]
+    if probe["duplicated"]:
+        enc = enc.dropDuplicates(["chunk_id", "column"]).localCheckpoint()
+    return enc, probe
+
+
+def _rewrite_sink(
+    spark: SparkSession, enc: DataFrame, probe: dict, dst_dir: str,
+    victims: set | None, transform, schema: str | None,
+    cluster_by: str | None, codec: str, global_dicts: dict | None,
+    partition_by_column: bool,
+) -> dict | None:
+    """The rewrite core: carry every non-victim chunk's rows RAW (no
+    decode, no codec CPU), decode the victim chunks (``None``: all of
+    them), apply the op's own row ``transform``, re-encode with the
+    source's blooms and ``cluster_by`` (a rewrite never downgrades the
+    sink's pruning; ``shuffle=False`` keeps the transform's layout), and
+    commit ONCE with errorifexists — the all-or-nothing crash contract (a
+    mid-write kill leaves only ``_temporary``; the source is never
+    touched). Returns the written sink's :func:`_sink_probe`, or None when
+    there were no victims and the sink was copied as is."""
+    from ..operators.encode import decode_chunks, encode_pages
+
+    if victims is not None and not victims:
+        write_encoded(
+            enc, dst_dir, mode="errorifexists",
+            partition_by_column=partition_by_column,
+        )
+        return None
+    doomed, carried = enc, None
+    if victims is not None:
+        doomed, _ = _chunk_id_filter(enc, victims, keep=True)
+        carried, _ = _chunk_id_filter(enc, victims, keep=False)
+    rows = decode_chunks(doomed, schema=schema, global_dicts=global_dicts)
+    out = encode_pages(
+        transform(rows), codec=codec, shuffle=False, cluster_by=cluster_by,
+        global_dicts=global_dicts, bloom_by=probe["bloom_columns"] or None,
     )
-    return row["n"] != row["d"]
+    write_encoded(
+        out if carried is None else carried.unionByName(out),
+        dst_dir, mode="errorifexists", partition_by_column=partition_by_column,
+    )
+    # probed from the WRITTEN sink: counting the encode pre-write would
+    # run it twice
+    return _sink_probe(read_encoded(spark, dst_dir))
 
 
 def recluster_sink(
@@ -590,34 +668,19 @@ def recluster_sink(
     the data — the honest price of reclustering at any scale; at 100 TB
     run it column-complete per time slice, not all-at-once.
 
-    ``shuffle=False`` on the re-encode preserves the range partitioning
-    (the salted host shuffle would scatter it). Bloom filters the source
-    sink carries are re-stamped on the same columns automatically
-    (``sink_bloom_columns``) — OPTIMIZE must never downgrade a sink's
-    pruning capabilities."""
-    from ..operators.encode import decode_chunks, encode_pages
-
+    The re-encode keeps the range partitioning and re-stamps the source
+    sink's Bloom filters (:func:`_rewrite_sink`) — OPTIMIZE must never
+    downgrade a sink's pruning capabilities."""
     src = read_encoded(spark, src_dir)
-    bloom_cols = sink_bloom_columns(src)
-    pages = decode_chunks(src, schema=schema, global_dicts=global_dicts)
     n = n_partitions or spark.sparkContext.defaultParallelism
-    pages = pages.repartitionByRange(n, F.col(cluster_by))
-    enc = encode_pages(
-        pages, codec=codec, shuffle=False, cluster_by=cluster_by,
-        global_dicts=global_dicts, bloom_by=bloom_cols or None,
-    )
-    write_encoded(
-        enc, dst_dir, mode="errorifexists",
-        partition_by_column=partition_by_column,
+    written = _rewrite_sink(
+        spark, src, _sink_probe(src), dst_dir, None,
+        lambda pages: pages.repartitionByRange(n, F.col(cluster_by)), schema,
+        cluster_by, codec, global_dicts, partition_by_column,
     )
     # a rewrite whose cluster column was entirely NULL produces exactly the
     # silent-unprunable sink this engine fails loud on — check the result
-    if (
-        not read_encoded(spark, dst_dir)
-        .filter(F.col("cluster_lo").isNotNull())
-        .limit(1)
-        .collect()
-    ):
+    if not written["stamped"]:
         raise ValueError(
             f"recluster produced no non-NULL cluster stamps at {dst_dir} — "
             f"column {cluster_by!r} is all-null (or the source sink was "
@@ -686,10 +749,8 @@ def delete_from_sink(
     destination as RAW parquet rows — no decode, no codec CPU, pure IO in
     the same cost class as any compaction pass; batch takedowns to
     amortize it, exactly as Iceberg's rewrite-files treats accumulated
-    deletes. The union of carried rows and re-encoded chunks commits in
-    ONE parquet job — the sink's standard all-or-nothing crash contract
-    (a mid-write kill leaves only ``_temporary``; ``src_dir`` is never
-    touched).
+    deletes. Carried and re-encoded rows commit in ONE all-or-nothing
+    parquet job (:func:`_rewrite_sink`).
 
     ``ids`` is a Python iterable of key values (broadcast as a literal
     IN-set) or a single-column DataFrame (broadcast semi/anti join) for
@@ -713,7 +774,8 @@ def delete_from_sink(
     Returns ``{"chunks_total", "chunks_affected", "chunks_new",
     "rows_deleted", "chunks_key_scanned"}`` — re-encoding regroups the
     surviving rows, so affected chunks and their replacements are not 1:1
-    (a fully-doomed chunk simply has no successor rows)."""
+    (a fully-doomed chunk simply has no successor rows). ``rows_deleted``
+    comes from the key scan's per-chunk hit counts."""
     import pyarrow as pa
     from pyspark.sql.types import StructType
 
@@ -721,30 +783,16 @@ def delete_from_sink(
     from ..operators.encode import (
         _expected_arrow_fields,
         _type_align,
-        decode_chunks,
-        encode_pages,
         subset_schema,
     )
 
-    enc = read_encoded(spark, src_dir)
-    if sink_has_duplicates(spark, src_dir):
-        # rare (resume over drifted input): dedupe once, materialize once.
-        # The common clean sink skips BOTH — its parquet files on disk ARE
-        # the materialization, and an unconditional payload localCheckpoint
-        # here measured as the single biggest cost of the whole takedown
-        # (it copies the corpus once before any work starts); each consumer
-        # below re-scans the column-pruned parquet instead.
-        enc = enc.dropDuplicates(["chunk_id", "column"]).localCheckpoint()
-
-    stamped = bool(
-        enc.filter(F.col("cluster_lo").isNotNull()).limit(1).collect()
+    if not isinstance(ids, DataFrame):
+        ids = list(ids)
+    enc, probe = _open_rewrite(
+        spark, src_dir, cluster_by,
+        "rewriting chunks without re-stamping would make them silently "
+        "unprunable; pass the sink's cluster column",
     )
-    if stamped and cluster_by is None:
-        raise ValueError(
-            f"sink at {src_dir} carries cluster stamps but no cluster_by "
-            "was given — rewriting chunks without re-stamping would make "
-            "them silently unprunable; pass the sink's cluster column"
-        )
 
     # --- 1. key-column-only decode, chunk_id kept: (chunk_id, __key) ---
     key_ddl = subset_schema([key_column], schema)
@@ -774,31 +822,17 @@ def delete_from_sink(
         )
 
     key_rows = enc.filter(F.col("column") == key_column)
-    bloom_cols = sink_bloom_columns(enc)
-    n_total = enc.select("chunk_id").distinct().count()
-    n_key_scanned = n_total
-    if key_column in bloom_cols and not isinstance(ids, DataFrame):
+    n_key_scanned = probe["chunks"]
+    if key_column in probe["bloom_columns"] and not isinstance(ids, DataFrame):
         # bloom-pruned key scan: only candidate chunks pay the decode.
         # (DataFrame ids stay unpruned — the DF form exists for id lists
         # too big to hash driver-side; correctness is identical.)
-        # The candidate set is collected ONCE: it is chunk-id-scale (blast
-        # radius + fp), and leaving it lazy would re-run the JSON-parsing
-        # bloom probe over the whole key-column manifest for every
-        # consumer downstream (the >=2-consumers rule, metadata edition).
-        cand = bloom_candidate_chunks(
-            key_rows.select("chunk_id", "stats"), key_column, ids, spark
+        key_rows, n_key_scanned = _chunk_id_filter(
+            key_rows,
+            bloom_candidate_chunks(
+                key_rows.select("chunk_id", "stats"), key_column, ids, spark
+            ),
         )
-        cand_ids = [
-            r["chunk_id"]
-            for r in cand.limit(_ISIN_PUSHDOWN_MAX + 1).collect()
-        ]
-        if len(cand_ids) <= _ISIN_PUSHDOWN_MAX:
-            key_rows = key_rows.filter(F.col("chunk_id").isin(cand_ids))
-            n_key_scanned = len(cand_ids)
-        else:
-            cand = cand.localCheckpoint()
-            key_rows = key_rows.join(cand, "chunk_id")
-            n_key_scanned = cand.count()
     keys = (
         key_rows
         .groupBy("chunk_id")
@@ -808,60 +842,45 @@ def delete_from_sink(
         id_col = ids.columns[0]
         ids_df = F.broadcast(ids.select(F.col(id_col).alias("__key")).distinct())
         hit = keys.join(ids_df, "__key", "leftsemi")
-    else:
-        ids = list(ids)
-        # timestamp/date keys: list ids are epoch ints (the bloom/zone-map
-        # domain) — compare in that domain, a raw isin() would throw
-        hit = keys.filter(_key_probe_col(keys, "__key").isin(ids))
-    affected = {r["chunk_id"] for r in hit.select("chunk_id").distinct().collect()}
 
-    # --- 2. carry untouched chunk rows raw; decode + purge the victims ---
-    carried = _chunk_id_filter(enc, affected, keep=False)
-    stats = {"chunks_total": n_total, "chunks_affected": len(affected),
-             "chunks_new": 0, "rows_deleted": 0,
-             "chunks_key_scanned": n_key_scanned}
-    if affected:
-        victims = _chunk_id_filter(enc, affected, keep=True)
-        rows = decode_chunks(victims, schema=schema, global_dicts=global_dicts)
-        rows = rows.localCheckpoint()  # 2 consumers: counts + re-encode
-        n_before = rows.count()
-        if isinstance(ids, DataFrame):
-            keep = rows.join(
+        def purge(rows: DataFrame) -> DataFrame:
+            return rows.join(
                 ids_df.select(F.col("__key").alias(key_column)),
                 key_column,
                 "leftanti",
             )
-        else:
-            # NULL-key rows must be KEPT explicitly: under three-valued
-            # logic `~isin(ids)` evaluates to NULL for a NULL key and the
-            # filter would silently DELETE every NULL-key row sharing a
-            # chunk with a doomed row — data loss beyond the named ids,
-            # and a semantics fork from the DataFrame-ids branch (whose
-            # leftanti join keeps NULL keys). r8 ADVICE item 1.
-            kcol = _key_probe_col(rows, key_column)
-            keep = rows.filter(kcol.isNull() | ~kcol.isin(ids))
-        keep = keep.localCheckpoint()  # 2 consumers: count + encode
-        n_after = keep.count()
-        stats["rows_deleted"] = n_before - n_after
-        reenc = encode_pages(
-            keep, codec=codec, shuffle=False, cluster_by=cluster_by,
-            global_dicts=global_dicts, bloom_by=bloom_cols or None,
-        )
-        out = carried.unionByName(reenc)
     else:
-        out = carried
-    write_encoded(
-        out, dst_dir, mode="errorifexists",
-        partition_by_column=partition_by_column,
+        # timestamp/date keys: list ids are epoch ints (the bloom/zone-map
+        # domain) — compare in that domain, a raw isin() would throw
+        hit = keys.filter(_key_probe_col(keys, "__key").isin(ids))
+
+        def purge(rows: DataFrame) -> DataFrame:
+            # drop a row only where `isin` is TRUE — exactly the rows `hit`
+            # counts. Under three-valued logic `~isin(ids)` is NULL for a
+            # NULL key (or a NULL among the ids), and filtering on it would
+            # silently DELETE every such row sharing a chunk with a doomed
+            # row — data loss beyond the named ids, and a semantics fork
+            # from the DataFrame-ids branch (whose leftanti join keeps NULL
+            # keys). r8 ADVICE item 1.
+            hit_row = _key_probe_col(rows, key_column).isin(ids)
+            return rows.filter(~F.coalesce(hit_row, F.lit(False)))
+    # per-chunk hit counts: the affected set AND rows_deleted in one collect
+    # (each chunk's key column decodes once — the sink is deduped above —
+    # and `purge` drops exactly the rows `hit` counts)
+    hits = {
+        r["chunk_id"]: r["count"]
+        for r in hit.groupBy("chunk_id").count().collect()
+    }
+
+    # --- 2. carry untouched chunk rows raw; decode + purge the victims ---
+    written = _rewrite_sink(
+        spark, enc, probe, dst_dir, set(hits), purge, schema, cluster_by,
+        codec, global_dicts, partition_by_column,
     )
-    if affected:
-        # counted from the WRITTEN sink — counting reenc pre-write would
-        # run the encode job twice (the >=2-consumers rule)
-        stats["chunks_new"] = (
-            read_encoded(spark, dst_dir).select("chunk_id").distinct().count()
-            - (n_total - len(affected))
-        )
-    return stats
+    n_new = written["chunks"] - probe["chunks"] + len(hits) if written else 0
+    return {"chunks_total": probe["chunks"], "chunks_affected": len(hits),
+            "chunks_new": n_new, "rows_deleted": sum(hits.values()),
+            "chunks_key_scanned": n_key_scanned}
 
 
 def compact_sink(
@@ -884,11 +903,12 @@ def compact_sink(
 
     Surgical like :func:`delete_from_sink`, and cheaper still: victim
     selection reads ONLY manifest metadata (``n_rows`` is a column of the
-    chunk row — no payload is touched to decide), fragments alone pay
-    decode + re-encode (regrouped to the session's Arrow batch size, i.e.
-    the engine's standard chunk row count), and every full-size chunk's
-    rows are carried RAW to ``dst_dir``. One all-or-nothing parquet
-    commit, ``src_dir`` never touched.
+    chunk row — no payload is touched to decide, and the fragments' row
+    total is summed from it), fragments alone pay decode + re-encode
+    (regrouped to the session's Arrow batch size, i.e. the engine's
+    standard chunk row count), and every full-size chunk's rows are
+    carried RAW to ``dst_dir``. One all-or-nothing parquet commit,
+    ``src_dir`` never touched.
 
     A lone fragment is carried, not rewritten — re-encoding a single
     chunk by itself merges nothing and would only churn its chunk id.
@@ -901,67 +921,36 @@ def compact_sink(
 
     Returns ``{"chunks_total", "chunks_fragment", "chunks_new",
     "rows_compacted"}``."""
-    from ..operators.encode import decode_chunks, encode_pages
-
-    enc = read_encoded(spark, src_dir)
-    if sink_has_duplicates(spark, src_dir):
-        # same conditional-materialization rationale as delete_from_sink
-        enc = enc.dropDuplicates(["chunk_id", "column"]).localCheckpoint()
-
-    stamped = bool(
-        enc.filter(F.col("cluster_lo").isNotNull()).limit(1).collect()
+    enc, probe = _open_rewrite(
+        spark, src_dir, cluster_by,
+        "compacting without re-stamping would make the merged chunks "
+        "silently unprunable; pass the cluster column",
     )
-    if stamped and cluster_by is None:
-        raise ValueError(
-            f"sink at {src_dir} carries cluster stamps but no cluster_by "
-            "was given — compacting without re-stamping would make the "
-            "merged chunks silently unprunable; pass the cluster column"
-        )
-    bloom_cols = sink_bloom_columns(enc)
-
     frag = {
-        r["chunk_id"]
+        r["chunk_id"]: r["n_rows"]
         for r in enc.filter(F.col("n_rows") < min_rows)
-        .select("chunk_id")
+        .select("chunk_id", "n_rows")
         .distinct()
         .collect()
     }
-    n_total = enc.select("chunk_id").distinct().count()
-    stats = {"chunks_total": n_total, "chunks_fragment": len(frag),
-             "chunks_new": 0, "rows_compacted": 0}
-    if len(frag) <= 1:
-        write_encoded(
-            enc, dst_dir, mode="errorifexists",
-            partition_by_column=partition_by_column,
-        )
-        return stats
-
-    victims = _chunk_id_filter(enc, frag, keep=True)
-    carried = _chunk_id_filter(enc, frag, keep=False)
-    rows = decode_chunks(victims, schema=schema, global_dicts=global_dicts)
-    rows = rows.localCheckpoint()  # 2 consumers: count + re-encode
-    n_rows = rows.count()
-    stats["rows_compacted"] = n_rows
+    victims = frag if len(frag) > 1 else {}
+    n_rows = sum(victims.values())
     # regroup to the engine's standard chunk size: the session's Arrow
     # batch row count IS the chunk row count (session.py pins it)
     target = int(
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     )
     n_out = max(1, -(-n_rows // target))
-    if cluster_by is not None:
-        rows = rows.repartitionByRange(n_out, F.col(cluster_by))
-    else:
-        rows = rows.repartition(n_out)
-    reenc = encode_pages(
-        rows, codec=codec, shuffle=False, cluster_by=cluster_by,
-        global_dicts=global_dicts, bloom_by=bloom_cols or None,
+
+    def regroup(rows: DataFrame) -> DataFrame:
+        if cluster_by is not None:
+            return rows.repartitionByRange(n_out, F.col(cluster_by))
+        return rows.repartition(n_out)
+
+    written = _rewrite_sink(
+        spark, enc, probe, dst_dir, set(victims), regroup, schema, cluster_by,
+        codec, global_dicts, partition_by_column,
     )
-    write_encoded(
-        carried.unionByName(reenc), dst_dir, mode="errorifexists",
-        partition_by_column=partition_by_column,
-    )
-    stats["chunks_new"] = (
-        read_encoded(spark, dst_dir).select("chunk_id").distinct().count()
-        - (n_total - len(frag))
-    )
-    return stats
+    n_new = written["chunks"] - probe["chunks"] + len(victims) if written else 0
+    return {"chunks_total": probe["chunks"], "chunks_fragment": len(frag),
+            "chunks_new": n_new, "rows_compacted": n_rows}

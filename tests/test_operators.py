@@ -581,12 +581,11 @@ def test_train_ivf_centroids_sampled_and_deterministic(spark):
     assert cells <= set(range(similarity.N_CELLS)) and len(cells) > 1
 
 
-def test_duplicate_clusters_label_propagation(spark):
-    """Connected components over planted pair graphs: a diameter-4 chain
-    (multi-round propagation), an isolated pair, and a triangle all resolve
-    to their component-min representative with correct sizes; an
-    unconverged run raises instead of returning split clusters."""
-    from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters
+def test_duplicate_clusters_star_planted_graph(spark):
+    """Connected components over planted pair graphs: a diameter-4 chain,
+    an isolated pair, and a triangle all resolve to their component-min
+    representative with correct sizes."""
+    from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters_star
 
     # chain 10-11-12-13-14 (diameter 4), pair 20-21, triangle 30-31-32
     pairs = spark.createDataFrame(
@@ -595,7 +594,7 @@ def test_duplicate_clusters_label_propagation(spark):
          (30, 31), (31, 32), (30, 32)],
         "doc_a long, doc_b long",
     )
-    out = {r["doc_id"]: r for r in duplicate_clusters(pairs).collect()}
+    out = {r["doc_id"]: r for r in duplicate_clusters_star(pairs).collect()}
     assert {d: r["cluster_rep"] for d, r in out.items()} == {
         10: 10, 11: 10, 12: 10, 13: 10, 14: 10,
         20: 20, 21: 20,
@@ -603,8 +602,6 @@ def test_duplicate_clusters_label_propagation(spark):
     }
     assert all(out[d]["cluster_size"] == 5 for d in (10, 11, 12, 13, 14))
     assert out[20]["cluster_size"] == 2 and out[30]["cluster_size"] == 3
-    with pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_clusters(pairs, max_iter=2)  # diameter-4 chain needs more
 
 
 def test_containment_pairs_planted_excerpt(spark, tmp_path):

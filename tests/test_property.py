@@ -267,17 +267,14 @@ def test_zone_map_oversized_string_yields_no_stats():
 
 
 def test_duplicate_clusters_matches_union_find(spark):
-    """Property: on random graphs, BOTH connected-components algorithms
-    (min-label propagation AND large-star/small-star contraction) agree
-    with a plain driver-side union-find (component min as representative,
-    component size). Small example count — each case runs real Spark
-    jobs — but seeds vary shape: sparse chains, dense blobs, self-loops."""
+    """Property: on random graphs, large-star/small-star connected
+    components agree with a plain driver-side union-find (component min as
+    representative, component size). Small example count — each case runs
+    real Spark jobs — but seeds vary shape: sparse chains, dense blobs,
+    self-loops."""
     import random
 
-    from hadoop_etl_udfs_spark.operators.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_star,
-    )
+    from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters_star
 
     for seed in (0, 1, 2, 3):
         rng = random.Random(seed)
@@ -305,34 +302,24 @@ def test_duplicate_clusters_matches_union_find(spark):
             sizes[want_rep[x]] = sizes.get(want_rep[x], 0) + 1
 
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        for algo in (duplicate_clusters, duplicate_clusters_star):
-            got = {r["doc_id"]: r for r in algo(pairs).collect()}
-            assert set(got) == touched, (algo.__name__, seed)
-            for x in touched:
-                assert got[x]["cluster_rep"] == want_rep[x], (algo.__name__, seed, x)
-                assert got[x]["cluster_size"] == sizes[want_rep[x]], (
-                    algo.__name__, seed, x,
-                )
+        got = {r["doc_id"]: r for r in duplicate_clusters_star(pairs).collect()}
+        assert set(got) == touched, seed
+        for x in touched:
+            assert got[x]["cluster_rep"] == want_rep[x], (seed, x)
+            assert got[x]["cluster_size"] == sizes[want_rep[x]], (seed, x)
 
 
 def test_star_contraction_converges_on_adversarial_chain(spark):
     """The case star contraction exists for: a 200-node path graph has
-    diameter 199 — min-label propagation would need ~200 rounds (it raises
-    at its max_iter), while large-star/small-star alternation collapses it
-    in O(log n) rounds and still labels every node with the chain minimum."""
-    import pytest as _pytest
-
-    from hadoop_etl_udfs_spark.operators.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_star,
-    )
+    diameter 199 — min-label propagation would need ~200 rounds, while
+    large-star/small-star alternation collapses it in O(log n) rounds and
+    still labels every node with the chain minimum."""
+    from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters_star
 
     n = 200
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_clusters(chain, max_iter=8)
     got = duplicate_clusters_star(chain, max_iter=25).collect()
     assert len(got) == n
     assert all(r["cluster_rep"] == 0 and r["cluster_size"] == n for r in got)
