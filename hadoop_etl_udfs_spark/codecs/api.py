@@ -7,10 +7,15 @@ Tuple.java:83-161). Here the whole chunk moves through numpy/Arrow kernels.
 Null semantics: the reference leaks Hive's ``\\N`` as literal strings
 (reference README.md:82) and hex-encodes binary (HdfsSerDeImportService.java:330-331);
 we keep real nulls via an Arrow-compatible LSB validity bitmap and real bytes.
+
+"The bytes of a column" has ONE definition here, :func:`canonical_column`:
+the chunk id, the CRC, ``data_bytes`` and every codec read that form, so a
+column is null-masked and converted once per chunk.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import zlib
 from dataclasses import dataclass
@@ -110,9 +115,8 @@ def _decimal_words(dense: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     HdfsSerDeExportServiceTest.java:277-391); Arrow gives us little-endian
     two's-complement int128 — two FoR+bit-pack streams, and the high word of
     real-world decimals is constant sign extension (packs to ~0 bits)."""
-    arr = dense.combine_chunks() if isinstance(dense, pa.ChunkedArray) else dense
-    buf = np.frombuffer(arr.buffers()[1], dtype=np.int64)
-    words = buf[arr.offset * 2 : (arr.offset + len(arr)) * 2]
+    buf = np.frombuffer(dense.buffers()[1], dtype=np.int64)
+    words = buf[dense.offset * 2 : (dense.offset + len(dense)) * 2]
     return np.ascontiguousarray(words[0::2]), np.ascontiguousarray(words[1::2])
 
 
@@ -149,6 +153,93 @@ def _from_int64(values: np.ndarray, typ: pa.DataType) -> pa.Array:
 
 
 # ---------------------------------------------------------------------------
+# the canonical column form
+
+
+@dataclass
+class CanonicalColumn:
+    """A column's LOGICAL values, independent of Arrow layout (slicing
+    offsets, large vs regular offsets, chunking): the validity mask plus
+    the kind's little-endian value streams over the non-null rows —
+
+    - varbytes: lengths (int64), then bytes;
+    - flist: lengths (int64), then the flattened float values;
+    - dec128: low words, then high words (int64);
+    - fixed-width: the int64 values.
+
+    Chunk ids and CRCs both read this form, and resume against existing
+    sinks depends on both: changing it is a declared, versioned format
+    change."""
+
+    arr: pa.Array  # chunks combined, large_list normalized to list
+    kind: str
+    valid: np.ndarray | None  # bool mask; None when the column has no nulls
+    streams: tuple[np.ndarray, ...]
+
+    def null_bitmap(self) -> bytes:
+        """LSB-first validity bitmap (the payload's "null" section), or
+        empty when the column has no nulls."""
+        if self.valid is None:
+            return b""
+        return np.packbits(self.valid, bitorder="little").tobytes()
+
+    def crc32(self) -> int:
+        """The chunk CRC: the value streams, then the null bitmap."""
+        crc = 0
+        for s in self.streams:
+            crc = zlib.crc32(s, crc)
+        return zlib.crc32(self.null_bitmap(), crc)
+
+    def data_bytes(self) -> int:
+        """Exact LOGICAL value bytes — see :func:`encode_array`."""
+        if self.kind in ("varbytes", "flist"):
+            return int(self.streams[1].nbytes)
+        return (16 if self.kind == "dec128" else 8) * len(self.arr)
+
+
+def canonical_column(arr: pa.Array) -> CanonicalColumn:
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if pa.types.is_large_list(arr.type):
+        arr = arr.cast(pa.list_(arr.type.value_type))
+    kind = _kind(arr.type)
+    valid = np.asarray(arr.is_valid()) if arr.null_count else None
+    dense = arr.drop_null() if valid is not None else arr
+    if kind == "varbytes":
+        streams = arrow_to_varbytes(dense)
+    elif kind == "flist":
+        streams = _flist_parts(dense)
+    elif kind == "dec128":
+        streams = _decimal_words(dense)
+    else:
+        streams = (_to_int64(dense),)
+    streams = tuple(
+        s.astype(s.dtype.newbyteorder("<"), copy=False) for s in streams
+    )
+    return CanonicalColumn(arr, kind, valid, streams)
+
+
+def chunk_id(names: list[str], columns: list[CanonicalColumn]) -> int:
+    """Content-addressed chunk id: 8-byte blake2b of ALL columns' values.
+
+    Hashing every column (not just the key column) makes the id a true
+    content address: two chunk-row sets with the same id ARE value-identical,
+    which is what the readers' duplicate-drop relies on. Input that drifted
+    between runs (same urls, changed text) therefore gets NEW ids and
+    re-encodes instead of silently aliasing the stale copy. Per column: the
+    name, the MSB-first validity bitmap when it has nulls, then the value
+    streams."""
+    h = hashlib.blake2b(digest_size=8)
+    for name, col in zip(names, columns):
+        h.update(name.encode("utf-8"))
+        if col.valid is not None:
+            h.update(np.packbits(col.valid))
+        for s in col.streams:
+            h.update(s)
+    return int.from_bytes(h.digest(), "big", signed=True)
+
+
+# ---------------------------------------------------------------------------
 
 _BYTES_CODECS = {
     "raw": (raw.encode_bytes, raw.decode_bytes),
@@ -176,37 +267,24 @@ class Encoded:
     crc32: int
 
 
-def _validity(arr: pa.Array) -> tuple[np.ndarray | None, bytes]:
-    if arr.null_count == 0:
-        return None, b""
-    valid = np.asarray(arr.is_valid())
-    return valid, np.packbits(valid, bitorder="little").tobytes()
-
-
-def _input_footprint(arr: pa.Array) -> int:
-    """Logical uncompressed size: Arrow buffer bytes of the chunk."""
-    total = 0
-    for buf in arr.buffers():
-        if buf is not None:
-            total += buf.size
-    return total
-
-
 def encode_array(
-    arr: pa.Array,
+    arr: pa.Array | CanonicalColumn,
     codec: str = "auto",
     global_dict=None,
     cache_key: str | None = None,
 ) -> Encoded:
-    """Encode one column-chunk. Besides the physical accounting (``bytes_in``
-    = Arrow buffer footprint, ``bytes_out`` = packed payload size), the result
-    carries ``data_bytes``: the exact LOGICAL size of the chunk's values,
+    """Encode one column-chunk, given as an Arrow array or as the canonical
+    form the encode kernel already built for the chunk id. Besides the
+    physical accounting (``bytes_in`` = Arrow buffer footprint,
+    ``bytes_out`` = packed payload size), the result carries
+    ``data_bytes``: the exact LOGICAL size of the chunk's values,
     computed from the values themselves so it is invariant under Arrow layout
     (slicing offsets, large vs regular string, materialized all-valid
     validity buffers, buffer padding):
 
     - varbytes (string/binary): sum of the non-null values' byte lengths —
       ``lengths.sum()`` over the same array the codec consumes;
+    - float list: itemsize per element of the flattened vectors;
     - fixed-width (int/date/timestamp/bool/float): 8 bytes per row (the
       canonical int64 domain every kernel works in);
     - decimal128: 16 bytes per row.
@@ -214,20 +292,11 @@ def encode_array(
     The reference's only write metric is the exact logical ``rowsExported``
     count (HdfsSerDeExportService.java:90) — same principle: account what
     was written, never infer it back from physical buffer sizes."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if pa.types.is_large_list(arr.type):
-        arr = arr.cast(pa.list_(arr.type.value_type))
-    typ = arr.type
-    kind = _kind(typ)
-    n = len(arr)
-    bytes_in = _input_footprint(arr)
-    valid, null_bm = _validity(arr)
-    dense = arr.drop_null() if valid is not None else arr
+    col = arr if isinstance(arr, CanonicalColumn) else canonical_column(arr)
+    typ, kind, n = col.arr.type, col.kind, len(col.arr)
 
     if kind == "dec128":
-        data_bytes = 16 * n
-        lo, hi = _decimal_words(dense)
+        lo, hi = col.streams
         if codec == "auto":
             codec = "forbp"
         if codec != "forbp" and codec != "raw":
@@ -240,45 +309,32 @@ def encode_array(
         else:
             sections = {"lo": lo.tobytes(), "hi": hi.tobytes()}
             cmeta = {"n": len(lo)}
-        crc = zlib.crc32(
-            hi.astype("<i8").tobytes(), zlib.crc32(lo.astype("<i8").tobytes())
-        )
     elif kind == "flist":
-        lengths, values = _flist_parts(dense)
-        # logical value bytes: the flattened float payload (itemsize per
-        # element) — same values-only principle as the other kinds
-        data_bytes = int(values.nbytes)
         if codec == "auto":
             codec = "bss"
         if codec == "bss":
-            sections, cmeta = bss.encode_flist(lengths, values)
+            sections, cmeta = bss.encode_flist(*col.streams)
         elif codec == "raw":
-            sections, cmeta = bss.encode_flist_raw(lengths, values)
+            sections, cmeta = bss.encode_flist_raw(*col.streams)
         else:
             raise ValueError(f"codec {codec} unsupported for flist chunks")
-        crc = zlib.crc32(
-            values.tobytes(), zlib.crc32(lengths.astype("<i8").tobytes())
-        )
     elif kind == "varbytes":
-        lengths, data = arrow_to_varbytes(dense)
-        data_bytes = int(lengths.sum())
+        lengths, data = col.streams
         if codec == "auto":
             from .selector import choose_bytes_codec
 
             codec = choose_bytes_codec(
                 lengths, data, global_dict=global_dict, cache_key=cache_key
             )
-        enc, dec = _BYTES_CODECS[codec]
+        enc = _BYTES_CODECS[codec][0]
         if codec == "dict" and global_dict is not None:
             sections, cmeta = enc(lengths, data, global_dict=global_dict)
         elif codec == "fsst":
             sections, cmeta = enc(lengths, data, cache_key=cache_key)
         else:
             sections, cmeta = enc(lengths, data)
-        crc = zlib.crc32(data.tobytes(), zlib.crc32(lengths.astype("<i8").tobytes()))
     else:
-        data_bytes = 8 * n
-        values = _to_int64(dense)
+        (values,) = col.streams
         if kind == "float":
             if codec == "auto":
                 from .selector import choose_float_codec
@@ -291,9 +347,8 @@ def encode_array(
 
             codec = choose_int_codec(values)
         sections, cmeta = _INT_CODECS[codec][0](values)
-        crc = zlib.crc32(values.astype("<i8").tobytes())
-    crc = zlib.crc32(null_bm, crc)
 
+    null_bm = col.null_bitmap()
     if null_bm:
         sections = {**sections, "null": null_bm}
     payload = pack_sections(sections)
@@ -303,10 +358,10 @@ def encode_array(
         payload=payload,
         meta=json.dumps(meta, separators=(",", ":")),
         n_rows=n,
-        bytes_in=bytes_in,
+        bytes_in=sum(b.size for b in col.arr.buffers() if b is not None),
         bytes_out=len(payload),
-        data_bytes=data_bytes,
-        crc32=crc,
+        data_bytes=col.data_bytes(),
+        crc32=col.crc32(),
     )
 
 
@@ -341,9 +396,8 @@ def decode_array(payload: bytes, meta: str, global_dict=None) -> pa.Array:
         vi = np.flatnonzero(valid)
         full[vi * 2] = lo
         full[vi * 2 + 1] = hi
-        validity_buf = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
         return pa.Array.from_buffers(
-            typ, n, [validity_buf, pa.py_buffer(full.tobytes())]
+            typ, n, [pa.py_buffer(null_bm), pa.py_buffer(full.tobytes())]
         )
 
     if kind == "flist":
@@ -359,11 +413,8 @@ def decode_array(payload: bytes, meta: str, global_dict=None) -> pa.Array:
         full_lengths[valid] = lengths
         offsets = np.zeros(n + 1, dtype=np.int32)
         np.cumsum(full_lengths, out=offsets[1:])
-        validity_buf = pa.py_buffer(
-            np.packbits(valid, bitorder="little").tobytes()
-        )
         return pa.Array.from_buffers(
-            typ, n, [validity_buf, pa.py_buffer(offsets.tobytes())],
+            typ, n, [pa.py_buffer(null_bm), pa.py_buffer(offsets.tobytes())],
             children=[child],
         )
 
@@ -379,9 +430,8 @@ def decode_array(payload: bytes, meta: str, global_dict=None) -> pa.Array:
         full_lengths = np.zeros(n, dtype=np.int64)
         full_lengths[valid] = lengths
         dense = varbytes_to_arrow(full_lengths, data, typ)
-        validity_buf = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
         bufs = dense.buffers()
-        return pa.Array.from_buffers(typ, n, [validity_buf, bufs[1], bufs[2]])
+        return pa.Array.from_buffers(typ, n, [pa.py_buffer(null_bm), *bufs[1:]])
 
     values = _INT_CODECS[codec][1](sections, m["m"])
     if valid is None:
@@ -398,21 +448,4 @@ def decode_array(payload: bytes, meta: str, global_dict=None) -> pa.Array:
 
 def verify_crc(arr: pa.Array, expected_crc: int) -> bool:
     """Recompute the canonical CRC of a decoded chunk and compare."""
-    valid, null_bm = _validity(arr)
-    dense = arr.drop_null() if valid is not None else arr
-    if is_varbytes(arr.type):
-        lengths, data = arrow_to_varbytes(dense)
-        crc = zlib.crc32(data.tobytes(), zlib.crc32(lengths.astype("<i8").tobytes()))
-    elif pa.types.is_decimal(arr.type):
-        lo, hi = _decimal_words(dense)
-        crc = zlib.crc32(
-            hi.astype("<i8").tobytes(), zlib.crc32(lo.astype("<i8").tobytes())
-        )
-    elif _kind(arr.type) == "flist":
-        lengths, values = _flist_parts(dense)
-        crc = zlib.crc32(
-            values.tobytes(), zlib.crc32(lengths.astype("<i8").tobytes())
-        )
-    else:
-        crc = zlib.crc32(_to_int64(dense).astype("<i8").tobytes())
-    return zlib.crc32(null_bm, crc) == expected_crc
+    return canonical_column(arr).crc32() == expected_crc

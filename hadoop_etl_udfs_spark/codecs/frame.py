@@ -2,17 +2,13 @@
 
 Replaces the reference's implicit parquet page framing
 (parquet/src/main/java/com/exasol/hadoop/parquet/ExaParquetWriterImpl.java:39-44
-— block/page sizes chosen by parquet-mr). Two layouts (little-endian):
+— block/page sizes chosen by parquet-mr). One layout, SGC2 (little-endian):
 
-    SGC1 (legacy, read-only):
-        MAGIC "SGC1" | u16 n_sections | per section:
-            u8 name_len | name utf-8 | u64 payload_len | payload
-    SGC2 (current — per-section block compression):
-        MAGIC "SGC2" | u16 n_sections | per section:
-            u8 name_len | name utf-8 | u8 enc | u64 raw_len | u64 stored_len
-            | stored bytes
+    MAGIC "SGC2" | u16 n_sections | per section:
+        u8 name_len | name utf-8 | u8 enc | u64 raw_len | u64 stored_len
+        | stored bytes
 
-``enc`` is 0 (stored raw), 1 (zstd) or 2 (zlib). Each section is block-
+``enc`` is 0 (stored raw) or 1 (zstd, level 2). Each section is block-
 compressed independently and only when it actually shrinks — already-dense
 streams (bit-packed residuals, FSST tokens) stay raw, while plain byte
 sections (raw codec data, dictionary values) get a C-speed entropy stage.
@@ -23,62 +19,37 @@ per section instead of per page.
 
 from __future__ import annotations
 
-import os
 import struct
-import zlib
 
-MAGIC = b"SGC1"
-MAGIC2 = b"SGC2"
+import pyarrow as pa
+
+MAGIC = b"SGC2"
 
 # level 2 measured equal-ratio to level 3 on the synthetic web text (2.882
 # vs 2.880 through the full encode path) at ~33% less CPU; level 1 is 2x
-# faster still but costs ~12% ratio (2.53) — tune via the env knob
-BLOCK_LEVEL = int(os.environ.get("SPARK_GRAFT_ZSTD_LEVEL", "2"))
+# faster still but costs ~12% ratio (2.53)
+BLOCK_LEVEL = 2
 _MIN_COMPRESS = 128  # sections smaller than this are never worth a header
 
-_ENC_RAW, _ENC_ZSTD, _ENC_ZLIB = 0, 1, 2
+_ENC_RAW, _ENC_ZSTD = 0, 1
+
+# pyarrow's bundled zstd (C speed), built at import: a pyarrow without zstd
+# can neither write nor read SGC2 sections, so it fails here, loud
+_ZSTD = pa.Codec("zstd", compression_level=BLOCK_LEVEL)
 
 
 class CorruptChunkError(ValueError):
-    """Chunk payload failed structural validation (bad magic / truncation)."""
-
-
-class MissingCodecError(CorruptChunkError):
-    """The chunk is structurally sound but was written with a block codec
-    this pyarrow build lacks (capability gap, NOT corruption). SGC2 sinks
-    written with zstd sections require a zstd-capable pyarrow on every
-    reader — a heterogeneous cluster mixing builds will hit this. Subclasses
-    CorruptChunkError so existing handlers still catch it, but the type and
-    message distinguish "install the codec" from "the bytes are damaged"."""
-
-
-def _zstd_codec():
-    """pyarrow's bundled zstd (C speed); None if this build lacks it."""
-    try:
-        import pyarrow as pa
-
-        if pa.Codec.is_available("zstd"):
-            return pa.Codec("zstd", compression_level=BLOCK_LEVEL)
-    except Exception:
-        pass
-    return None
-
-
-_ZSTD = _zstd_codec()
+    """Chunk payload failed structural validation (bad magic, truncation,
+    unknown section encoding)."""
 
 
 def block_compress(raw: bytes) -> tuple[int, bytes]:
     """(enc_id, stored) — compressed only if it shrinks."""
     if len(raw) < _MIN_COMPRESS:
         return _ENC_RAW, raw
-    if _ZSTD is not None:
-        comp = _ZSTD.compress(raw, asbytes=True)
-        enc = _ENC_ZSTD
-    else:
-        comp = zlib.compress(raw, 6)
-        enc = _ENC_ZLIB
+    comp = _ZSTD.compress(raw, asbytes=True)
     if len(comp) < len(raw) * 0.98:
-        return enc, comp
+        return _ENC_ZSTD, comp
     return _ENC_RAW, raw
 
 
@@ -86,15 +57,7 @@ def block_decompress(enc: int, stored: bytes, raw_len: int) -> bytes:
     if enc == _ENC_RAW:
         return stored
     if enc == _ENC_ZSTD:
-        if _ZSTD is None:
-            raise MissingCodecError(
-                "chunk section is zstd-compressed but this pyarrow build "
-                "has no zstd codec — install a zstd-capable pyarrow on the "
-                "reading side (the chunk itself is not corrupt)"
-            )
         return _ZSTD.decompress(stored, decompressed_size=raw_len, asbytes=True)
-    if enc == _ENC_ZLIB:
-        return zlib.decompress(stored)
     raise CorruptChunkError(f"unknown section encoding id {enc}")
 
 
@@ -109,7 +72,7 @@ def block_trial_ratio(data, max_bytes: int = 1 << 16) -> float:
 
 
 def pack_sections(sections: dict[str, bytes]) -> bytes:
-    parts = [MAGIC2, struct.pack("<H", len(sections))]
+    parts = [MAGIC, struct.pack("<H", len(sections))]
     for name, payload in sections.items():
         nb = name.encode("utf-8")
         if len(nb) > 255:
@@ -123,15 +86,8 @@ def pack_sections(sections: dict[str, bytes]) -> bytes:
 
 
 def unpack_sections(buf: bytes) -> dict[str, bytes]:
-    magic = buf[:4]
-    if magic == MAGIC2:
-        return _unpack_v2(buf)
-    if magic == MAGIC:
-        return _unpack_v1(buf)
-    raise CorruptChunkError("bad chunk frame magic")
-
-
-def _unpack_v2(buf: bytes) -> dict[str, bytes]:
+    if buf[:4] != MAGIC:
+        raise CorruptChunkError("bad chunk frame magic")
     try:
         (n,) = struct.unpack_from("<H", buf, 4)
         pos = 6
@@ -150,30 +106,6 @@ def _unpack_v2(buf: bytes) -> dict[str, bytes]:
                 )
             out[name] = block_decompress(enc, bytes(buf[pos : pos + stored_len]), raw_len)
             pos += stored_len
-        return out
-    except struct.error as e:
-        raise CorruptChunkError(f"chunk frame truncated: {e}") from e
-
-
-def _unpack_v1(buf: bytes) -> dict[str, bytes]:
-    try:
-        (n,) = struct.unpack_from("<H", buf, 4)
-        pos = 6
-        out: dict[str, bytes] = {}
-        for _ in range(n):
-            (name_len,) = struct.unpack_from("<B", buf, pos)
-            pos += 1
-            name = buf[pos : pos + name_len].decode("utf-8")
-            pos += name_len
-            (plen,) = struct.unpack_from("<Q", buf, pos)
-            pos += 8
-            if pos + plen > len(buf):
-                raise CorruptChunkError(
-                    f"section {name!r} truncated: needs {plen} bytes, "
-                    f"{len(buf) - pos} remain"
-                )
-            out[name] = bytes(buf[pos : pos + plen])
-            pos += plen
         return out
     except struct.error as e:
         raise CorruptChunkError(f"chunk frame truncated: {e}") from e

@@ -26,15 +26,13 @@ columnar plan:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..codecs.api import decode_array, encode_array
+from ..codecs.api import canonical_column, chunk_id, decode_array, encode_array
 from ..worker import drop_zip_finders
 
 ENCODED_SCHEMA = (
@@ -136,52 +134,6 @@ class IncompleteChunkError(ValueError):
     """A chunk's column rows did not reunite inside one partition — the sink
     was read with file splitting (wrong read settings for the colocated
     decode path). Recoverable: fall back to :func:`decode_chunks`."""
-
-
-def _hash_column(h, arr: pa.Array) -> None:
-    """Feed one column's LOGICAL values (not raw buffers — sliced/offset
-    arrays that are equal must hash equal) into ``h``."""
-    from ..codecs.api import _decimal_words, _kind, _to_int64
-    from ..codecs.varbytes import arrow_to_varbytes
-
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    if arr.null_count:
-        h.update(np.packbits(np.asarray(arr.is_valid())).tobytes())
-        dense = arr.drop_null()
-    else:
-        dense = arr
-    kind = _kind(arr.type)
-    if kind == "varbytes":
-        lengths, data = arrow_to_varbytes(dense)
-        h.update(lengths.astype("<i8").tobytes())
-        h.update(data.tobytes())
-    elif kind == "flist":
-        from ..codecs.api import _flist_parts
-
-        lengths, values = _flist_parts(dense)
-        h.update(lengths.astype("<i8").tobytes())
-        h.update(values.tobytes())
-    elif kind == "dec128":
-        lo, hi = _decimal_words(dense)
-        h.update(lo.astype("<i8").tobytes())
-        h.update(hi.astype("<i8").tobytes())
-    else:
-        h.update(_to_int64(dense).astype("<i8").tobytes())
-
-
-def _chunk_id(batch: pa.RecordBatch) -> int:
-    """Content-addressed chunk id: 8-byte blake2b of ALL columns' values.
-
-    Hashing every column (not just the key column) makes the id a true
-    content address: two chunk-row sets with the same id ARE value-identical,
-    which is what the readers' duplicate-drop relies on. Input that drifted
-    between runs (same urls, changed text) therefore gets NEW ids and
-    re-encodes instead of silently aliasing the stale copy."""
-    h = hashlib.blake2b(digest_size=8)
-    for i, name in enumerate(batch.schema.names):
-        h.update(name.encode("utf-8"))
-        _hash_column(h, batch.column(i))
-    return int.from_bytes(h.digest(), "big", signed=True)
 
 
 def salted_partitioning(
@@ -341,7 +293,9 @@ def encode_pages(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            cid = _chunk_id(batch)
+            names = batch.schema.names
+            cols = [canonical_column(c) for c in batch.columns]
+            cid = chunk_id(names, cols)
             if cid in done:
                 continue
             cl = None
@@ -350,41 +304,31 @@ def encode_pages(
                 if ci >= 0:
                     cl = _cluster_range(batch.column(ci))
             cl_lo, cl_hi = cl if cl is not None else (None, None)
-            rows = {k: [] for k in (
-                "chunk_id", "column", "col_idx", "n_rows", "codec",
-                "bytes_in", "bytes_out", "data_bytes", "crc32", "meta",
-                "stats", "cluster_lo", "cluster_hi", "payload",
-            )}
-            for i, name in enumerate(batch.schema.names):
+            rows = []
+            for i, (name, col) in enumerate(zip(names, cols)):
                 gd = gds.get(name)
                 try:
                     enc = encode_array(
-                        batch.column(i), codec=codec, global_dict=gd, cache_key=name
+                        col, codec=codec, global_dict=gd, cache_key=name
                     )
                 except KeyError:
                     # value missing from the global dictionary (e.g. resumed
                     # job over drifted input): fall back to chunk-local codecs
-                    enc = encode_array(batch.column(i), codec=codec)
-                rows["chunk_id"].append(cid)
-                rows["column"].append(name)
-                rows["col_idx"].append(i)
-                rows["n_rows"].append(batch.num_rows)
-                rows["codec"].append(enc.codec)
-                rows["bytes_in"].append(enc.bytes_in)
-                rows["bytes_out"].append(enc.bytes_out)
-                rows["data_bytes"].append(enc.data_bytes)
-                rows["crc32"].append(enc.crc32)
-                rows["meta"].append(enc.meta)
+                    enc = encode_array(col, codec=codec)
                 st = _col_stats(batch.column(i))
                 if name in bloom_set:
                     from ..plans.bloom import bloom_build, merge_bloom_into_stats
 
                     st = merge_bloom_into_stats(st, bloom_build(batch.column(i)))
-                rows["stats"].append(st)
-                rows["cluster_lo"].append(cl_lo)
-                rows["cluster_hi"].append(cl_hi)
-                rows["payload"].append(enc.payload)
-            yield pa.RecordBatch.from_pydict(rows, schema=_ENCODED_ARROW)
+                rows.append((
+                    cid, name, i, batch.num_rows, enc.codec, enc.bytes_in,
+                    enc.bytes_out, enc.data_bytes, enc.crc32, enc.meta, st,
+                    cl_lo, cl_hi, enc.payload,
+                ))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v, f.type) for v, f in zip(zip(*rows), _ENCODED_ARROW)],
+                schema=_ENCODED_ARROW,
+            )
 
     return df.mapInArrow(encode, ENCODED_SCHEMA)
 
@@ -437,6 +381,48 @@ def _type_align(arr: pa.Array, want: pa.DataType | None) -> pa.Array:
     return arr
 
 
+def _assemble_chunk(
+    cid: int, n_rows: int, parts, exp_fields, gds: dict
+) -> list[pa.Array]:
+    """One chunk's columns in the requested schema — the assembly both
+    decode kernels share. ``parts`` yields the chunk's (column, meta,
+    payload scalar) rows. Requested columns the chunk lacks come back
+    all-NULL, and decoded ones are cast to the expected Arrow types (see
+    :func:`_expected_arrow_fields`)."""
+    want = dict(exp_fields)
+    got: dict[str, pa.Array] = {}
+    sink_cols = []
+    for name, meta, payload in parts:
+        sink_cols.append(name)
+        if name in got or name not in want:
+            # duplicated sink (resume over drifted input appended the
+            # chunk twice — copies are content-identical by the chunk-id
+            # contract: decode the first, drop the rest), or a sink
+            # column the output schema doesn't request (pay no decode)
+            continue
+        got[name] = _type_align(
+            decode_array(payload.as_py(), meta, global_dict=gds.get(name)),
+            want[name],
+        )
+    if sink_cols and not got:
+        # zero overlap between the requested schema and this chunk's
+        # columns: most likely a misspelled schema — an all-NULL result
+        # would be the silent-wrong-answer failure mode. (On a
+        # mixed-version sink, requesting ONLY post-evolution columns
+        # also lands here for pre-evolution chunks: include an anchor
+        # column that exists in every chunk, e.g. the key.) Partial
+        # overlap is treated as evolution and NULL-filled — a misspelled
+        # name ALONGSIDE correct ones is indistinguishable from an
+        # evolved column by construction.
+        raise ValueError(
+            f"none of the requested output columns {sorted(want)} exist in "
+            f"chunk {cid} (sink columns: {sorted(set(sink_cols))}) — "
+            "misspelled schema, or a pre-evolution chunk asked for only "
+            "post-evolution columns (include an anchor column)"
+        )
+    return [got[n] if n in got else pa.nulls(n_rows, ty) for n, ty in exp_fields]
+
+
 def decode_chunks(
     enc: DataFrame, schema: str | None = None, global_dicts: dict | None = None
 ) -> DataFrame:
@@ -454,47 +440,23 @@ def decode_chunks(
     out_schema = schema or PAGES_SCHEMA
     gd_bc = enc.sparkSession.sparkContext.broadcast(global_dicts or {})
     exp_fields = _expected_arrow_fields(out_schema)
-    exp_names = {n for n, _ in exp_fields}
+    exp_names = [n for n, _ in exp_fields]
 
     def decode(table: pa.Table) -> pa.Table:
         drop_zip_finders()
-        gds = gd_bc.value
         t = table.sort_by("col_idx")
-        got: dict[str, pa.Array] = {}
-        n_rows = t.column("n_rows")[0].as_py() if t.num_rows else 0
-        for row in range(t.num_rows):
-            name = t.column("column")[row].as_py()
-            if name in got or name not in exp_names:
-                # duplicated sink (resume over drifted input appended the
-                # chunk twice — copies are content-identical by the chunk-id
-                # contract: decode the first, drop the rest), or a sink
-                # column the output schema doesn't request (pay no decode)
-                continue
-            payload = t.column("payload")[row].as_py()
-            meta = t.column("meta")[row].as_py()
-            got[name] = decode_array(payload, meta, global_dict=gds.get(name))
-        if t.num_rows and not got:
-            # zero overlap between the requested schema and this chunk's
-            # columns: most likely a misspelled schema — an all-NULL result
-            # would be the silent-wrong-answer failure mode. (On a
-            # mixed-version sink, requesting ONLY post-evolution columns
-            # also lands here for pre-evolution chunks: include an anchor
-            # column that exists in every chunk, e.g. the key.) Partial
-            # overlap is treated as evolution and NULL-filled — a misspelled
-            # name ALONGSIDE correct ones is indistinguishable from an
-            # evolved column by construction.
-            raise ValueError(
-                "none of the requested output columns "
-                f"{sorted(n for n, _ in exp_fields)} exist in this chunk "
-                f"(sink columns: {sorted(set(t.column('column').to_pylist()))})"
-                " — misspelled schema, or a pre-evolution chunk asked for "
-                "only post-evolution columns (include an anchor column)"
-            )
-        return pa.table(
-            {
-                n: _type_align(got[n], ty) if n in got else pa.nulls(n_rows, ty)
-                for n, ty in exp_fields
-            }
+        cid, n_rows = (
+            (t.column("chunk_id")[0].as_py(), t.column("n_rows")[0].as_py())
+            if t.num_rows else (None, 0)
+        )
+        parts = zip(
+            t.column("column").to_pylist(),
+            t.column("meta").to_pylist(),
+            t.column("payload"),
+        )
+        return pa.Table.from_arrays(
+            _assemble_chunk(cid, n_rows, parts, exp_fields, gd_bc.value),
+            names=exp_names,
         )
 
     return enc.groupBy("chunk_id").applyInArrow(decode, out_schema)
@@ -537,7 +499,7 @@ def decode_chunks_colocated(
     out_schema = schema or PAGES_SCHEMA
     gd_bc = enc.sparkSession.sparkContext.broadcast(global_dicts or {})
     exp_fields = _expected_arrow_fields(out_schema)
-    exp_types = dict(exp_fields)
+    exp_names = [n for n, _ in exp_fields]
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_zip_finders()
@@ -573,7 +535,7 @@ def decode_chunks_colocated(
                         idx_col[row].as_py(),
                         name_col[row].as_py(),
                         meta_col[row].as_py(),
-                        payload_col[row].as_py(),
+                        payload_col[row],
                         nrows_col[row].as_py(),
                     )
                 )
@@ -589,30 +551,13 @@ def decode_chunks_colocated(
                             "n_columns smaller than the sink's arity) — "
                             "use decode_chunks()"
                         )
-                    got = {
-                        nm: _type_align(
-                            decode_array(p, m, global_dict=gds.get(nm)),
-                            exp_types[nm],
-                        )
-                        for (_, nm, m, p, _) in group
-                        if nm in exp_types
-                    }
-                    if not got:
-                        # zero schema overlap = misspelled schema (see
-                        # decode_chunks) — never emit an all-NULL chunk
-                        raise ValueError(
-                            "none of the requested output columns "
-                            f"{sorted(exp_types)} exist in chunk {cid} "
-                            f"(sink columns: "
-                            f"{sorted(nm for (_, nm, *_) in group)})"
-                        )
-                    chunk_rows = group[0][4]
                     yield pa.RecordBatch.from_arrays(
-                        [
-                            got[n] if n in got else pa.nulls(chunk_rows, ty)
-                            for n, ty in exp_fields
-                        ],
-                        names=[n for n, _ in exp_fields],
+                        _assemble_chunk(
+                            cid, group[0][4],
+                            ((nm, m, p) for (_, nm, m, p, _) in group),
+                            exp_fields, gds,
+                        ),
+                        names=exp_names,
                     )
                     del pending[cid]
                     seen.add(cid)

@@ -440,27 +440,28 @@ def bloom_candidate_chunks(
     filters (plans/bloom.py). ``st`` is the key column's (chunk_id, stats)
     projection. Chunk rows without a bloom are kept conservatively —
     pruning is safe, not clever (same contract as the zone maps). Raises
-    if NO chunk row carries a bloom: a silent full scan from a
-    point-lookup API is the unprunable-sink bug this engine fails loud on.
+    if the key column has no chunk rows (misspelled), or if NO chunk row
+    carries a bloom: a silent full scan from a point-lookup API is the
+    unprunable-sink bug this engine fails loud on. One probe job answers
+    both and reads the hash domain: bloomed rows sort first. (A global
+    aggregate would be two jobs under AQE.)
     """
-    import json as _json
-
     from .bloom import hash_query_ids, stats_hit_udf
 
-    probe = (
-        st.filter(F.get_json_object("stats", "$.bloom.m").isNotNull())
-        .select("stats")
-        .first()
-    )
-    if probe is None:
+    dom = F.get_json_object("stats", "$.bloom.dom").alias("dom")
+    probe = st.select(dom).orderBy(F.col("dom").isNull()).limit(1).collect()
+    if not probe:
+        raise ValueError(
+            f"column {key_column!r} has no chunk rows in this sink — "
+            "misspelled key columns must fail loud, not decode nothing"
+        )
+    if probe[0]["dom"] is None:
         raise ValueError(
             f"no Bloom filters on column {key_column!r} in this sink — "
             "encode with encode_pages(bloom_by=[...]) or use decode_chunks "
             "+ a row filter (full scan) explicitly"
         )
-    dom = _json.loads(probe["stats"])["bloom"]["dom"]
-    hashes = hash_query_ids(ids, dom)
-    hit = stats_hit_udf(spark, hashes)
+    hit = stats_hit_udf(spark, hash_query_ids(ids, probe[0]["dom"]))
     no_bloom = F.get_json_object("stats", "$.bloom.m").isNull()
     return st.filter(no_bloom | hit(F.col("stats"))).select("chunk_id")
 
@@ -522,11 +523,6 @@ def decode_chunks_where_key_in(
     on_disk = isinstance(enc_or_dir, str)
     enc = read_encoded(spark, enc_or_dir) if on_disk else enc_or_dir
     st = enc.filter(F.col("column") == key_column).select("chunk_id", "stats")
-    if st.first() is None:
-        raise ValueError(
-            f"column {key_column!r} has no chunk rows in this sink — "
-            "misspelled key columns must fail loud, not decode nothing"
-        )
     keep = bloom_candidate_chunks(st, key_column, ids, spark)
     dec_set = sorted(set(columns) | {key_column}) if columns else None
     if dec_set:

@@ -211,21 +211,6 @@ def test_decimal_narrow_range_compresses():
 
 # ------------------------------------------------------------ frame formats
 
-def test_frame_v1_payloads_still_readable():
-    """SGC1 (round-1 sinks, no block compression) must stay decodable."""
-    import struct
-
-    from hadoop_etl_udfs_spark.codecs.frame import MAGIC, unpack_sections
-
-    sections = {"a": b"hello world", "bp": b"\x01\x02\x03"}
-    parts = [MAGIC, struct.pack("<H", len(sections))]
-    for name, payload in sections.items():
-        nb = name.encode()
-        parts += [struct.pack("<B", len(nb)), nb,
-                  struct.pack("<Q", len(payload)), payload]
-    assert unpack_sections(b"".join(parts)) == sections
-
-
 def test_frame_v2_roundtrip_and_compression():
     from hadoop_etl_udfs_spark.codecs.frame import pack_sections, unpack_sections
 
@@ -253,6 +238,10 @@ def test_frame_v2_truncation_is_loud():
         unpack_sections(packed[: len(packed) - 5])
     with pytest.raises(CorruptChunkError):
         unpack_sections(b"XXXX" + packed[4:])
+    # enc id 2 (the retired zlib fallback) is an unknown encoding now
+    name_end = 6 + 1 + len("a")
+    with pytest.raises(CorruptChunkError, match="unknown section encoding"):
+        unpack_sections(packed[:name_end] + b"\x02" + packed[name_end + 1 :])
 
 
 def test_flist_byte_stream_split_roundtrip():
