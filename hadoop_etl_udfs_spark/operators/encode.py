@@ -31,19 +31,15 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codecs.api import canonical_column, chunk_id, decode_array, encode_array
 from ..worker import drop_zip_finders
 
-ENCODED_SCHEMA = (
-    "chunk_id long, column string, col_idx int, n_rows long, codec string, "
-    "bytes_in long, bytes_out long, data_bytes long, crc32 long, "
-    "meta string, stats string, "
-    "cluster_lo long, cluster_hi long, payload binary"
-)
-
-# arrow schema must match ENCODED_SCHEMA exactly — Spark's ArrowColumnVector
-# accessors fail on a type mismatch (e.g. inferred int64 for an int column)
+# The chunk sink's schema, written once. The encode kernel builds its
+# batches against this Arrow form; ENCODED_SCHEMA, its Spark form, is
+# derived in pure Python (no SparkContext, so workers can import it) and is
+# the declared schema every sink read uses (plans.lineage.read_encoded).
 _ENCODED_ARROW = pa.schema(
     [
         ("chunk_id", pa.int64()),
@@ -65,6 +61,7 @@ _ENCODED_ARROW = pa.schema(
         ("payload", pa.binary()),
     ]
 )
+ENCODED_SCHEMA = from_arrow_schema(_ENCODED_ARROW)
 
 _STATS_MAX_STR = 256  # skip string stats beyond this (a zone map, not data)
 
@@ -569,13 +566,6 @@ def decode_chunks_colocated(
             )
 
     return enc.mapInArrow(decode, out_schema)
-
-
-def lineage_rows(enc: DataFrame) -> DataFrame:
-    """Per column-chunk lineage/metrics view (drops payloads)."""
-    return enc.select(
-        "chunk_id", "column", "n_rows", "codec", "bytes_in", "bytes_out", "crc32"
-    )
 
 
 def codec_metrics(enc: DataFrame) -> DataFrame:

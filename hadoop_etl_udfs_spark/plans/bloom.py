@@ -12,8 +12,8 @@ wasted chunk decode; false negatives are impossible — the same
 correct-by-construction asymmetry as the zone maps.
 
 The filter rides INSIDE the existing per-chunk-column ``stats`` JSON
-(key ``"bloom"``), so the sink schema (ENCODED_SCHEMA/_ENCODED_ARROW) is
-unchanged: old sinks read fine (no bloom -> conservative keep), bloomed
+(key ``"bloom"``), so the sink schema (operators.encode.ENCODED_SCHEMA)
+is unchanged: old sinks read fine (no bloom -> conservative keep), bloomed
 sinks read fine on old readers (stats stays a zone-map JSON with one
 extra key; ``$.min``/``$.max`` paths are untouched).
 

@@ -13,12 +13,10 @@ and completed chunks skip exactly. Resuming with a *different* input produces
 different chunk boundaries: nothing is lost, but overlapping rows re-encode
 into new chunks (the sink then holds both; dedupe by chunk_id when reading).
 
-Layout under ``out_dir``:
-    chunks/   encoded column-chunk rows (parquet, compression=none — the
-              payloads are already entropy-packed; recompressing wastes CPU)
-    _auto-discovered manifest = the chunks table itself (payload pruned):
-              Parquet column pruning means reading lineage never touches
-              payload bytes.
+Layout: ``out_dir/chunks/`` holds the encoded column-chunk rows (parquet,
+compression=none — payloads are already entropy-packed). The manifest is
+that table read without its payload column, so reading lineage never
+touches payload bytes (parquet column pruning).
 """
 
 from __future__ import annotations
@@ -58,7 +56,16 @@ def write_encoded(
 
 
 def read_encoded(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(chunks_path(out_dir))
+    """The one batch reader of a chunk sink. It reads with the declared
+    sink schema (operators.encode.ENCODED_SCHEMA), so it runs no inference
+    job, and columns an older sink lacks (stats, data_bytes, cluster
+    stamps) read as NULL. A missing sink raises here (PATH_NOT_FOUND).
+    A ``column`` filter on the result prunes directories on a
+    column-partitioned sink (PartitionFilters; ``column`` comes last
+    there) and row groups on a flat one."""
+    from ..operators.encode import ENCODED_SCHEMA
+
+    return spark.read.schema(ENCODED_SCHEMA).parquet(chunks_path(out_dir))
 
 
 def read_encoded_colocated(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -71,17 +78,7 @@ def read_encoded_colocated(spark: SparkSession, out_dir: str) -> DataFrame:
     execution time — so this raises it for the session and leaves it raised.
     decode_chunks_colocated still fails loudly if a chunk arrives torn."""
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 << 30))
-    return spark.read.parquet(chunks_path(out_dir))
-
-
-def read_encoded_columns(
-    spark: SparkSession, out_dir: str, columns: list[str]
-) -> DataFrame:
-    """Chunk rows for a column subset. On a column-partitioned sink the
-    `column IN (...)` filter becomes directory pruning (PartitionFilters in
-    the scan — asserted in tests); on a flat sink it still prunes parquet
-    row groups via min/max stats."""
-    return read_encoded(spark, out_dir).filter(F.col("column").isin(columns))
+    return read_encoded(spark, out_dir)
 
 
 def decode_columns(
@@ -96,7 +93,7 @@ def decode_columns(
     Grouped path — a column-partitioned sink has no per-chunk colocation."""
     from ..operators.encode import decode_chunks, subset_schema
 
-    enc = read_encoded_columns(spark, out_dir, columns)
+    enc = read_encoded(spark, out_dir).filter(F.col("column").isin(columns))
     return decode_chunks(
         enc,
         schema=subset_schema(columns, full_schema),
@@ -178,8 +175,8 @@ def decode_chunks_where(
     columns — a bounds type that disagrees with the column's stats type
     raises instead of comparing lexicographically. Chunks with no stats
     (nulls only, oversized strings, binary) are always kept — pruning is
-    safe, not clever. Sinks written before the stats column existed need
-    ``mergeSchema`` or a re-encode.
+    safe, not clever — so are the chunks of a sink written before the
+    stats column existed.
 
     ``columns`` combines the zone map with the sink's projection pushdown:
     only the requested columns' chunk rows are scanned and decoded (whole
@@ -222,7 +219,7 @@ def decode_chunks_where(
         mn, mx = mn.cast("long"), mx.cast("long")
     disjoint = (mx < F.lit(lo)) | (mn > F.lit(hi))
     keep = st.filter(F.col("stats").isNull() | ~disjoint).select("chunk_id")
-    data = read_encoded_columns(spark, out_dir, columns) if columns else enc
+    data = enc.filter(F.col("column").isin(columns)) if columns else enc
     pruned, _ = _chunk_id_filter(data, keep)
     out_schema = subset_schema(columns, schema) if columns else schema
     return decode_chunks(pruned, out_schema, global_dicts)
@@ -267,9 +264,10 @@ def decode_chunks_where_clustered(
     - chunk-atomic by construction (all rows of a chunk share the pair).
 
     Chunks with NULL cluster stats (non-numeric domain, all-null column,
-    or rows from a pre-cluster sink read with mergeSchema) are always kept.
+    or rows from a sink written before stamps existed) are always kept.
     ``lo``/``hi`` are in the cluster column's int64 domain (epoch-µs for
-    timestamps). Sinks encoded WITHOUT cluster_by raise loudly.
+    timestamps). Sinks with no stamp at all (encoded WITHOUT cluster_by,
+    or before stamps existed) raise loudly.
 
     ``ranges`` (round 8) takes a LIST of [lo, hi] pairs instead — ONE scan
     with an OR-of-ranges predicate, so a chunk overlapping several ranges
@@ -280,19 +278,13 @@ def decode_chunks_where_clustered(
     keeps only the probed ones."""
     from ..operators.encode import decode_chunks, subset_schema
 
-    data = (
-        read_encoded_columns(spark, out_dir, columns) if columns
-        else read_encoded(spark, out_dir)
-    )
-    if "cluster_lo" not in data.columns:
-        raise ValueError(
-            f"sink {out_dir} carries no cluster stats — encode with "
-            "encode_pages(cluster_by=...) or use decode_chunks_where()"
-        )
-    # round-3 sinks always HAVE the columns; a sink written without
-    # cluster_by has them all-NULL, and the keep-filter would silently
-    # decode everything. Probe one column-pruned row (limit 1
-    # short-circuits the scan) so that case fails loud instead.
+    data = read_encoded(spark, out_dir)
+    if columns:
+        data = data.filter(F.col("column").isin(columns))
+    # a sink written without cluster_by (or before stamps existed) reads
+    # all-NULL stamps, and the keep-filter would silently decode
+    # everything. Probe one column-pruned row (limit 1 short-circuits the
+    # scan) so that case fails loud instead.
     if not data.filter(F.col("cluster_lo").isNotNull()).limit(1).collect():
         raise ValueError(
             f"sink {out_dir} has no non-NULL cluster stamps (encoded "
@@ -405,17 +397,15 @@ def _sink_probe(enc: DataFrame) -> dict:
       re-derive ``bloom_by`` from the sink (cluster stamps do NOT record
       their source column, so ``cluster_by`` must be passed).
 
-    Sinks written before the stats or cluster columns existed read as
-    unbloomed and unstamped."""
-    def col(name, ddl):
-        return F.col(name) if name in enc.columns else F.lit(None).cast(ddl)
-
-    bloomed = F.get_json_object(col("stats", "string"), "$.bloom.m").isNotNull()
+    Sinks written before the stats or cluster columns existed read them as
+    NULL (:func:`read_encoded`), so they probe as unbloomed and
+    unstamped."""
+    bloomed = F.get_json_object("stats", "$.bloom.m").isNotNull()
     r = enc.agg(
         F.count("*").alias("n"),
         F.countDistinct("chunk_id", "column").alias("n_distinct"),
         F.countDistinct("chunk_id").alias("chunks"),
-        F.count(col("cluster_lo", "long")).alias("stamped"),
+        F.count("cluster_lo").alias("stamped"),
         F.collect_set(F.when(bloomed, F.col("column"))).alias("bloomed"),
     ).first()
     return {
@@ -504,10 +494,8 @@ def decode_chunks_where_key_in(
     blooms prune point sets (per-chunk [min, max] of a high-cardinality
     key spans nearly the whole domain, so a zone map never prunes an
     equality probe). Composes with the same projection pushdown
-    (``columns``; the key column itself need not be in the output subset —
-    the probe reads only manifest rows, and the exact row filter decodes
-    the key column only when requested... so when ``columns`` excludes the
-    key it IS added to the decode set and dropped after the filter).
+    (``columns``; a key column left out of it is decoded for the exact row
+    filter, then dropped).
 
     ``ids`` must match the sink's recorded hash domain (strings for string
     keys, epoch ints for timestamp/date) — a mismatch raises rather than
@@ -520,19 +508,14 @@ def decode_chunks_where_key_in(
     from ..operators.encode import decode_chunks, subset_schema
 
     ids = list(ids)
-    on_disk = isinstance(enc_or_dir, str)
-    enc = read_encoded(spark, enc_or_dir) if on_disk else enc_or_dir
+    enc = (
+        read_encoded(spark, enc_or_dir) if isinstance(enc_or_dir, str)
+        else enc_or_dir
+    )
     st = enc.filter(F.col("column") == key_column).select("chunk_id", "stats")
     keep = bloom_candidate_chunks(st, key_column, ids, spark)
     dec_set = sorted(set(columns) | {key_column}) if columns else None
-    if dec_set:
-        data = (
-            read_encoded_columns(spark, enc_or_dir, dec_set)
-            if on_disk
-            else enc.filter(F.col("column").isin(dec_set))
-        )
-    else:
-        data = enc
+    data = enc.filter(F.col("column").isin(dec_set)) if dec_set else enc
     pruned, _ = _chunk_id_filter(data, keep)
     out_schema = subset_schema(dec_set, schema) if dec_set else schema
     dec = decode_chunks(pruned, out_schema, global_dicts)
@@ -666,7 +649,12 @@ def recluster_sink(
 
     The re-encode keeps the range partitioning and re-stamps the source
     sink's Bloom filters (:func:`_rewrite_sink`) — OPTIMIZE must never
-    downgrade a sink's pruning capabilities."""
+    downgrade a sink's pruning capabilities.
+
+    The written chunk ids are NOT reproducible across runs: Spark's range
+    partitioner seeds its bound sample with the RDD id, so identical runs
+    draw different bounds, cut the rows into different chunks and write
+    different chunk-id sets. The decoded rows are the same."""
     src = read_encoded(spark, src_dir)
     n = n_partitions or spark.sparkContext.defaultParallelism
     written = _rewrite_sink(
@@ -689,18 +677,18 @@ def encode_resumable(
     out_dir: str,
     codec: str = "auto",
     salt_buckets: int = 8,
-    n_columns: int = 5,
 ) -> dict:
     """Run (or resume) the encode job; returns lineage stats.
 
     Restart path: completed chunk ids are collected from the manifest
     (driver-side, ids only — a few bytes per chunk) and broadcast; the encode
-    kernel recomputes each chunk's content hash and skips completed ones.
+    kernel recomputes each chunk's content hash and skips completed ones. A
+    chunk is complete when it has a row for every column of ``pages``.
     """
     from ..operators.encode import encode_pages
 
     spark = pages.sparkSession
-    done = completed_chunk_ids(spark, out_dir, n_columns)
+    done = completed_chunk_ids(spark, out_dir, len(pages.columns))
     enc = encode_pages(
         pages, codec=codec, salt_buckets=salt_buckets, skip_chunk_ids=done
     )
@@ -914,6 +902,8 @@ def compact_sink(
     chunks stay range-narrow); bloomed sinks re-stamp blooms
     automatically (``sink_bloom_columns``). Rewrite invariant shared with
     delete_from_sink: a rewrite may never downgrade the sink's pruning.
+    The merged chunks' ids are NOT reproducible across runs when the range
+    regroup has more than one partition (see :func:`recluster_sink`).
 
     Returns ``{"chunks_total", "chunks_fragment", "chunks_new",
     "rows_compacted"}``."""

@@ -44,7 +44,9 @@ def start_encode_stream(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = lineage.completed_chunk_ids(spark, out_dir, n_columns=5)
+        done = lineage.completed_chunk_ids(
+            spark, out_dir, n_columns=len(batch_df.columns)
+        )
         enc = encode_pages(
             batch_df, codec=codec, salt_buckets=salt_buckets,
             skip_chunk_ids=done, cluster_by=cluster_by, bloom_by=bloom_by,
@@ -102,17 +104,10 @@ def start_curated_encode_stream(
         .parquet(input_dir)
     )
 
-    # derived, not hard-coded: a DOCUMENTS_SCHEMA edit must tighten the
-    # torn-write resume check automatically (r7 review). Parsed via the DDL
-    # parser, NOT a comma split — a comma-bearing type added later
-    # (decimal(10,2), struct<...>) would silently inflate the count and
-    # make completed_chunk_ids use a wrong arity (r7 advice)
-    from pyspark.sql.types import StructType
-
-    n_columns = len(StructType.fromDDL(DOCUMENTS_SCHEMA).fields)
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = lineage.completed_chunk_ids(spark, out_dir, n_columns=n_columns)
+        done = lineage.completed_chunk_ids(
+            spark, out_dir, n_columns=len(batch_df.columns)
+        )
         gated = stratified_sample_df(batch_df)
         if repetition_gate:
             flagged = (

@@ -121,7 +121,9 @@ def main() -> None:
     )
     from hadoop_etl_udfs_spark.operators.encode import encode_pages
     from hadoop_etl_udfs_spark.plans.lineage import (
+        cluster_ranges_keep_predicate,
         decode_chunks_where_clustered,
+        read_encoded,
         read_manifest,
         write_encoded,
     )
@@ -217,13 +219,11 @@ def main() -> None:
             + want.select(*cols).exceptAll(got.select(*cols)).count()
         )
         total_chunks = int(agg["chunks"])
+        # counted with the decode's own keep predicate, so the reported
+        # chunks_kept is what the pruned read above kept
         kept = (
-            m.join(
-                enc.sparkSession.read.parquet(args.output + "/chunks")
-                .select("chunk_id", "cluster_lo", "cluster_hi").distinct(),
-                "chunk_id",
-            )
-            .filter((F.col("cluster_lo") <= mid) & (F.col("cluster_hi") >= mid))
+            read_encoded(spark, args.output)
+            .filter(cluster_ranges_keep_predicate([(mid, mid)]))
             .select("chunk_id").distinct().count()
         )
         check = {

@@ -181,6 +181,57 @@ def test_duplicated_sink_detection_and_grouped_dedupe(spark, pages):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_resume_takes_arity_from_input(spark, tmp_path):
+    """A chunk is complete when it has a row for every column of the job's
+    OWN input: resuming a 4-column job skips every chunk, appends nothing."""
+    out = str(tmp_path / "four")
+    four = synthesize_pages(spark, 600, seed=31).drop("html")
+    first = lineage.encode_resumable(four, out, salt_buckets=1)
+    again = lineage.encode_resumable(four, out, salt_buckets=1)
+    assert 0 < first["chunks_total"] == again["chunks_total"]
+    assert again["chunks_skipped"] == again["chunks_total"]
+    assert not lineage.sink_has_duplicates(spark, out)
+
+
+def test_sink_reader_declares_schema(spark, tmp_path):
+    """read_encoded reads with the declared sink schema: no Spark job (no
+    inference), the schema's column order (``column`` last on a
+    column-partitioned sink), and a warm 4-chunk bloom lookup runs <= 5."""
+    from hadoop_etl_udfs_spark.operators.encode import ENCODED_SCHEMA
+
+    sc, out, part = spark.sparkContext, str(tmp_path / "s"), str(tmp_path / "p")
+
+    def jobs(fn) -> int:
+        sc.setJobGroup("counted", "counted")
+        try:
+            fn()
+            return len(sc.statusTracker().getJobIdsForGroup("counted"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    pages = synthesize_pages(spark, 4000, seed=7).localCheckpoint()
+    lineage.write_encoded(encode_pages(
+        pages.repartitionByRange(4, "warc_ts"), shuffle=False,
+        cluster_by="warc_ts", bloom_by=["url"],
+    ), out)
+    assert jobs(lambda: lineage.read_encoded(spark, out)) == 0
+    assert jobs(lambda: lineage.read_encoded_colocated(spark, out)) == 0
+    names = ENCODED_SCHEMA.fieldNames()
+    assert lineage.read_encoded(spark, out).columns == names
+    lineage.write_encoded(
+        lineage.read_encoded(spark, out), part, partition_by_column=True
+    )
+    assert lineage.read_encoded(spark, part).columns == (
+        [n for n in names if n != "column"] + ["column"]
+    )
+    url = pages.first()["url"]
+    lookup = lambda: lineage.decode_chunks_where_key_in(
+        spark, out, "url", [url]
+    ).collect()
+    assert [r["url"] for r in lookup()] == [url]  # cold
+    assert jobs(lookup) <= 5
+
+
 def test_partial_duplicate_chunk_not_marked_complete(spark, pages):
     """ADVICE round 1: duplicate manifest rows must not let a chunk with a
     missing column count as complete (countDistinct, not count(*))."""
@@ -235,7 +286,9 @@ def test_column_pruned_decode_on_partitioned_sink(spark, pages):
         assert fp(sub) == fp(pages.select("url", "lang"))
         # the scan must prune at the partition level: only the two requested
         # column= directories appear in the scan's partition filters
-        enc = lineage.read_encoded_columns(spark, out, ["url", "lang"])
+        enc = lineage.read_encoded(spark, out).filter(
+            F.col("column").isin(["url", "lang"])
+        )
         plan = enc._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "column" in plan
         # physically: files from other column dirs are never listed as data
@@ -327,8 +380,7 @@ def test_drifted_input_reencodes_instead_of_false_skip(spark):
         assert len(done) == 1
         # same urls, drifted text: the chunk id differs, so the v2 chunk is
         # NOT in the skip set and re-encodes under a NEW id
-        lineage.encode_resumable(mk(rows_v2).coalesce(1), out,
-                                 salt_buckets=1, n_columns=5)
+        lineage.encode_resumable(mk(rows_v2).coalesce(1), out, salt_buckets=1)
         ids_after = lineage.completed_chunk_ids(spark, out, n_columns=5)
         assert len(ids_after) >= 2, "drifted chunk must get a new id"
         assert done < ids_after  # the v1 id is still there, v2 added
@@ -337,13 +389,17 @@ def test_drifted_input_reencodes_instead_of_false_skip(spark):
 
 
 def test_decode_tolerates_stats_free_sink(spark, pages):
-    """Sinks written before the stats column existed (round 1) decode
-    unchanged — no decode path touches stats."""
+    """Sinks written before the stats, data_bytes and cluster-stamp columns
+    existed (round 1) read those columns as NULL through the declared sink
+    schema: both decode paths stay bit-identical, resume and the manifest
+    probes work, and a range-pruned read fails loud for want of stamps."""
     out = tempfile.mkdtemp(prefix="oldsink_")
     try:
         from hadoop_etl_udfs_spark.operators.encode import decode_chunks_colocated
 
-        old_style = encode_pages(pages).drop("stats")
+        old_style = encode_pages(pages).drop(
+            "stats", "data_bytes", "cluster_lo", "cluster_hi"
+        )
         old_style.write.mode("overwrite").option("compression", "none").parquet(
             lineage.chunks_path(out)
         )
@@ -353,8 +409,15 @@ def test_decode_tolerates_stats_free_sink(spark, pages):
         assert fp(decode_chunks(lineage.read_encoded(spark, out))) == fp(pages)
         enc = lineage.read_encoded_colocated(spark, out)
         assert fp(decode_chunks_colocated(enc)) == fp(pages)
-        # resume bookkeeping works without stats too
+        assert enc.filter(F.coalesce(
+            "stats", "data_bytes", "cluster_lo", "cluster_hi"
+        ).isNotNull()).count() == 0
+        # resume bookkeeping and the manifest probes work without them too
         assert len(lineage.completed_chunk_ids(spark, out, n_columns=5)) > 0
+        assert lineage.sink_bloom_columns(enc) == []
+        assert not lineage.sink_has_duplicates(spark, out)
+        with pytest.raises(ValueError, match="no non-NULL cluster stamps"):
+            lineage.decode_chunks_where_clustered(spark, out, 0, 1)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -197,7 +197,7 @@ def test_clustered_zone_map_pushes_range_to_scan(spark, tmp_path):
     legacy.write.mode("overwrite").option("compression", "none").parquet(
         str(tmp_path / "legacy" / "chunks")
     )
-    with _pytest.raises(ValueError, match="no cluster stats"):
+    with _pytest.raises(ValueError, match="no non-NULL cluster stamps"):
         lineage.decode_chunks_where_clustered(
             spark, str(tmp_path / "legacy"), 0, 1
         )
