@@ -333,16 +333,19 @@ def encode_pages(
 def subset_schema(columns, full_schema: str | None = None) -> str:
     """DDL for a column subset, kept in the FULL schema's field order —
     decode emits columns sorted by col_idx, so the output schema must be the
-    original order filtered, regardless of the order ``columns`` came in."""
+    original order filtered, regardless of the order ``columns`` came in.
+    Parsed, never split on commas: ``decimal(10,2)`` and ``struct<x:int,
+    y:int>`` carry commas of their own."""
+    from pyspark.sql.types import StructType
+
     from ..sources.pages import PAGES_SCHEMA
 
-    fields = [f.strip() for f in (full_schema or PAGES_SCHEMA).split(",")]
+    fields = StructType.fromDDL(full_schema or PAGES_SCHEMA).fields
     want = set(columns)
-    ordered = [f for f in fields if f.split()[0] in want]
-    missing = want - {f.split()[0] for f in ordered}
+    missing = want - {f.name for f in fields}
     if missing:
         raise ValueError(f"columns not in schema: {sorted(missing)}")
-    return ", ".join(ordered)
+    return StructType([f for f in fields if f.name in want]).toDDL()
 
 
 def _expected_arrow_fields(ddl_or_struct) -> list[tuple[str, pa.DataType]]:

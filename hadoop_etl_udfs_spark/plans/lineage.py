@@ -120,33 +120,26 @@ def _chunk_id_filter(
     IN-literal-or-join decision is made, for every pruned read and rewrite.
 
     ``chunk_ids`` is a driver-side iterable or a lazy ``chunk_id``
-    DataFrame (a zone-map or bloom keep set), which is collected once,
-    bounded. Up to ``_ISIN_PUSHDOWN_MAX`` ids the filter is an IN literal:
-    pushed to the parquet scan, no join stage. Past it a giant IN
-    expression would choke the planner (a mass takedown, a sink of
-    hundreds of thousands of fragments), so it becomes a broadcast
-    semi/anti join on the id table; a lazy keep set is checkpointed once
-    then, so its JSON-parsing probe never re-runs per consumer (nor
-    re-scans a manifest its caller has released). chunk_id is never NULL,
+    DataFrame (a zone-map or bloom keep set), which is collected once, as
+    Arrow (8 bytes per id, one job). Up to ``_ISIN_PUSHDOWN_MAX`` ids the
+    filter is an IN literal: pushed to the parquet scan, no join stage.
+    Past it a giant IN expression would choke the planner (a mass
+    takedown, a sink of hundreds of thousands of fragments), so it becomes
+    a broadcast semi/anti join on the collected ids — the keep set's
+    JSON-parsing probe never re-runs per consumer. chunk_id is never NULL,
     so the anti join and ``~isin`` agree."""
-    lazy = isinstance(chunk_ids, DataFrame)
-    ids = (
-        [r["chunk_id"] for r in chunk_ids.limit(_ISIN_PUSHDOWN_MAX + 1).collect()]
-        if lazy else list(chunk_ids)
-    )
-    if len(ids) <= _ISIN_PUSHDOWN_MAX:
-        pred = F.col("chunk_id").isin(ids)
-        return enc.filter(pred if keep else ~pred), len(ids)
-    if lazy:
-        id_df = chunk_ids.select("chunk_id").localCheckpoint()
-        n = id_df.count()
+    import pyarrow as pa
+
+    if isinstance(chunk_ids, DataFrame):
+        ids = chunk_ids.select("chunk_id").toArrow()
     else:
-        id_df = enc.sparkSession.createDataFrame(
-            [(int(i),) for i in ids], "chunk_id long"
-        )
-        n = len(ids)
+        ids = pa.table({"chunk_id": pa.array(list(chunk_ids), pa.int64())})
+    if ids.num_rows <= _ISIN_PUSHDOWN_MAX:
+        pred = F.col("chunk_id").isin(ids.column(0).to_pylist())
+        return enc.filter(pred if keep else ~pred), ids.num_rows
     how = "leftsemi" if keep else "leftanti"
-    return enc.join(F.broadcast(id_df), "chunk_id", how), n
+    id_df = enc.sparkSession.createDataFrame(ids)
+    return enc.join(F.broadcast(id_df), "chunk_id", how), ids.num_rows
 
 
 def decode_chunks_where(
@@ -672,35 +665,39 @@ def recluster_sink(
         )
 
 
-def encode_resumable(
-    pages: DataFrame,
-    out_dir: str,
-    codec: str = "auto",
-    salt_buckets: int = 8,
-) -> dict:
-    """Run (or resume) the encode job; returns lineage stats.
+def append_encoded(pages: DataFrame, out_dir: str, **encode_kw) -> int:
+    """Encode ``pages`` into the sink at ``out_dir``, skipping every chunk
+    the sink already holds complete — the ONE resumable append; every sink
+    append (batch job, both encode streams, the ingest tick) goes through
+    it. ``encode_kw`` are :func:`operators.encode.encode_pages`' options,
+    forwarded as is. Returns the number of chunks skipped.
 
-    Restart path: completed chunk ids are collected from the manifest
-    (driver-side, ids only — a few bytes per chunk) and broadcast; the encode
-    kernel recomputes each chunk's content hash and skips completed ones. A
-    chunk is complete when it has a row for every column of ``pages``.
-    """
+    At-least-once in, exactly-once out: a replayed or restarted identical
+    append re-derives the same content-addressed chunk ids, finds them in
+    the manifest (driver-side, ids only — a few bytes per chunk) and
+    appends nothing for them; a chunk is complete when it has a row for
+    every column of ``pages``. The append itself commits as one parquet
+    job, so a crash before the commit leaves nothing a reader (or the next
+    skip set) can see. A first run pays only the missing-path check."""
     from ..operators.encode import encode_pages
 
-    spark = pages.sparkSession
-    done = completed_chunk_ids(spark, out_dir, len(pages.columns))
-    enc = encode_pages(
-        pages, codec=codec, salt_buckets=salt_buckets, skip_chunk_ids=done
-    )
+    done = completed_chunk_ids(pages.sparkSession, out_dir, len(pages.columns))
+    enc = encode_pages(pages, skip_chunk_ids=done, **encode_kw)
     write_encoded(enc, out_dir, mode="append")
-    manifest = read_manifest(spark, out_dir)
-    agg = manifest.agg(
+    return len(done)
+
+
+def encode_resumable(pages: DataFrame, out_dir: str, **encode_kw) -> dict:
+    """Run (or resume) the encode job (:func:`append_encoded`); returns the
+    chunks skipped plus the whole sink's manifest totals."""
+    skipped = append_encoded(pages, out_dir, **encode_kw)
+    agg = read_manifest(pages.sparkSession, out_dir).agg(
         F.countDistinct("chunk_id").alias("chunks"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("bytes_out").alias("bytes_out"),
     ).collect()[0]
     return {
-        "chunks_skipped": len(done),
+        "chunks_skipped": skipped,
         "chunks_total": agg["chunks"],
         "bytes_in": agg["bytes_in"],
         "bytes_out": agg["bytes_out"],

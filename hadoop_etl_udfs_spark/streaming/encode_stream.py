@@ -20,10 +20,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.encode import encode_pages
 from ..plans import lineage
 from ..sources.pages import PAGES_SCHEMA
 from ..worker import drop_zip_finders
+
+
+def _start_append_stream(
+    spark: SparkSession,
+    schema: str,
+    input_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    gate,
+    **encode_kw,
+) -> StreamingQuery:
+    """The one encode-stream body: a parquet file stream whose every
+    micro-batch passes ``gate`` and is appended with
+    :func:`lineage.append_encoded` (a replayed batch skips its committed
+    chunks), checkpointed, run with ``availableNow``."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
+
+    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        lineage.append_encoded(gate(batch_df), out_dir, **encode_kw)
+
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def start_encode_stream(
@@ -37,27 +67,10 @@ def start_encode_stream(
     cluster_by: str | None = None,
     bloom_by: list[str] | None = None,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = lineage.completed_chunk_ids(
-            spark, out_dir, n_columns=len(batch_df.columns)
-        )
-        enc = encode_pages(
-            batch_df, codec=codec, salt_buckets=salt_buckets,
-            skip_chunk_ids=done, cluster_by=cluster_by, bloom_by=bloom_by,
-        )
-        lineage.write_encoded(enc, out_dir, mode="append")
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_append_stream(
+        spark, PAGES_SCHEMA, input_dir, out_dir, checkpoint_dir,
+        max_files_per_trigger, lambda batch: batch, codec=codec,
+        salt_buckets=salt_buckets, cluster_by=cluster_by, bloom_by=bloom_by,
     )
 
 
@@ -93,21 +106,10 @@ def start_curated_encode_stream(
     belongs on the ingest path, because dropped docs cost no encode CPU
     and no sink bytes. Docs arrive in DOCUMENTS_SCHEMA; the encode
     shuffles on doc_id (table-agnostic partition_cols path)."""
-    from pyspark.sql import functions as F
-
     from ..operators.curation import stratified_sample_df
     from ..operators.textstats import repetition_signals_df
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = lineage.completed_chunk_ids(
-            spark, out_dir, n_columns=len(batch_df.columns)
-        )
+    def gate(batch_df: DataFrame) -> DataFrame:
         gated = stratified_sample_df(batch_df)
         if repetition_gate:
             flagged = (
@@ -116,17 +118,11 @@ def start_curated_encode_stream(
                 .select("doc_id")
             )
             gated = gated.join(flagged, "doc_id", "left_anti")
-        enc = encode_pages(
-            gated, codec=codec,
-            skip_chunk_ids=done, partition_cols=["doc_id"],
-        )
-        lineage.write_encoded(enc, out_dir, mode="append")
+        return gated
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_append_stream(
+        spark, DOCUMENTS_SCHEMA, input_dir, out_dir, checkpoint_dir,
+        max_files_per_trigger, gate, codec=codec, partition_cols=["doc_id"],
     )
 
 
@@ -199,7 +195,12 @@ def iceberg_ingest_tick(
     """One cycle of the production ingestion daemon: poll the Iceberg
     table for commits newer than the sink's watermark, encode-append
     exactly that snapshot diff, advance the watermark. Returns what the
-    tick did (snapshot ids, rows seen, chunks before/after).
+    tick did: ``from_snapshot`` (the watermark it started from),
+    ``to_snapshot`` (the table's current snapshot), ``rows`` (rows read
+    from the diff; 0 on a noop), ``noop``, and on a non-noop tick
+    ``chunks_skipped`` (chunks the sink already held) plus, after a
+    recovery from an expired watermark snapshot,
+    ``watermark_expired_file_diff``.
 
     Exactly-once WITHOUT a transactional store: ticks are at-least-once
     (a crash between the encode-append and the watermark write makes the
@@ -263,19 +264,14 @@ def iceberg_ingest_tick(
             out["watermark_expired_file_diff"] = True
     else:
         diff = read_iceberg(spark, table_dir)
-    done = lineage.completed_chunk_ids(
-        spark, sink_dir, n_columns=len(diff.columns)
-    )
-    enc = encode_pages(
-        diff, codec=codec, salt_buckets=salt_buckets,
-        skip_chunk_ids=done, cluster_by=cluster_by,
+    out["chunks_skipped"] = lineage.append_encoded(
+        diff, sink_dir, codec=codec, salt_buckets=salt_buckets,
+        cluster_by=cluster_by,
         # non-pages tables (round 6): declare the co-location key so the
         # tick ingests ANY Iceberg table, not just the pages layout
         partition_cols=partition_cols,
     )
-    lineage.write_encoded(enc, sink_dir, mode="append")
     out["rows"] = diff.count()
-    out["chunks_skipped"] = len(done)
     _os.makedirs(sink_dir, exist_ok=True)
     # the watermark records the snapshot AND its live file list: the file
     # set is the expiry-proof recovery cursor (one path per data file —

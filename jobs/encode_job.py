@@ -8,10 +8,12 @@ Usage (local sandbox evidence run; on a cluster swap --master / add executors):
         jobs/encode_job.py \
         --input /path/to/pages_parquet --output /path/to/out \
         [--synthesize N_DOCS] [--codec auto] [--salt-buckets 8] \
-        [--global-dict lang] [--resume]
+        [--global-dict lang]
 
-Prints one JSON line of lineage metrics. Re-running with --resume skips
-chunks already recorded in the output manifest (content-addressed ids).
+Prints one JSON line of lineage metrics. Every run resumes: running the
+same job again skips the chunks already complete in the output manifest
+(content-addressed ids), so a restart after a crash appends only what is
+missing and a re-run after success appends nothing.
 
 Replaces the reference's deployment unit — UDF jars registered in-database
 (doc/deployment-guide.md) — with a --py-files zip.
@@ -46,8 +48,6 @@ def main() -> None:
     )
     p.add_argument("--global-dict", action="append", default=[],
                    help="column(s) to encode with a broadcast global dictionary")
-    p.add_argument("--resume", action="store_true",
-                   help="skip chunks already completed in the output manifest")
     p.add_argument("--cluster-by", default=None,
                    help="numeric-domain column whose per-chunk [min,max] is "
                         "stamped on every chunk row (scan-level zone maps)")
@@ -74,7 +74,6 @@ def main() -> None:
 
     spark = get_job_spark("encode_job")
 
-    from hadoop_etl_udfs_spark.operators.encode import encode_pages
     from hadoop_etl_udfs_spark.plans import globaldict, lineage
 
     if args.synthesize:
@@ -104,19 +103,13 @@ def main() -> None:
             gds[col] = globaldict.build_global_dict(pages, col)
             globaldict.save_global_dict(gds[col], args.output, col)
 
-    done: set[int] = set()
-    if args.resume:
-        done = lineage.completed_chunk_ids(
-            spark, args.output, n_columns=len(pages.columns)
-        )
-
     t0 = time.time()
     salt = args.salt_buckets if args.salt_buckets == "adaptive" else int(args.salt_buckets)
-    enc = encode_pages(
+    rep = lineage.encode_resumable(
         pages,
+        args.output,
         codec=args.codec,
         salt_buckets=salt,
-        skip_chunk_ids=done,
         global_dicts=gds or None,
         cluster_by=args.cluster_by,
         bloom_by=args.bloom_by or None,
@@ -124,27 +117,15 @@ def main() -> None:
             args.partition_cols.split(",") if args.partition_cols else None
         ),
     )
-    lineage.write_encoded(enc, args.output, mode="append")
-    wall = time.time() - t0
-
-    from pyspark.sql import functions as F
-
-    m = lineage.read_manifest(spark, args.output)
-    agg = m.agg(
-        F.countDistinct("chunk_id").alias("chunks"),
-        F.sum("n_rows").alias("col_rows"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
-    ).collect()[0]
     print(
         json.dumps(
             {
-                "wall_s": round(wall, 2),
-                "chunks": agg["chunks"],
-                "chunks_skipped": len(done),
-                "bytes_in": agg["bytes_in"],
-                "bytes_out": agg["bytes_out"],
-                "ratio": round(agg["bytes_in"] / max(1, agg["bytes_out"]), 3),
+                "wall_s": round(time.time() - t0, 2),
+                "chunks": rep["chunks_total"],
+                "chunks_skipped": rep["chunks_skipped"],
+                "bytes_in": rep["bytes_in"],
+                "bytes_out": rep["bytes_out"],
+                "ratio": round(rep["bytes_in"] / max(1, rep["bytes_out"]), 3),
             }
         )
     )

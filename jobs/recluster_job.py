@@ -87,8 +87,7 @@ def main() -> None:
     span = (b["hi"] - b["lo"]) or 1
     plo, phi = b["lo"] + int(span * 0.45), b["lo"] + int(span * 0.55)
     kept = stats.filter(
-        F.col("cluster_lo").isNull()
-        | ~((F.col("cluster_hi") < plo) | (F.col("cluster_lo") > phi))
+        lineage.cluster_ranges_keep_predicate([(plo, phi)])
     ).count()
     print(
         json.dumps(

@@ -10,6 +10,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hadoop_etl_udfs_spark.operators.encode import (
     codec_metrics,
@@ -196,7 +197,7 @@ def test_resume_takes_arity_from_input(spark, tmp_path):
 def test_sink_reader_declares_schema(spark, tmp_path):
     """read_encoded reads with the declared sink schema: no Spark job (no
     inference), the schema's column order (``column`` last on a
-    column-partitioned sink), and a warm 4-chunk bloom lookup runs <= 5."""
+    column-partitioned sink), and a warm 4-chunk bloom lookup runs <= 4."""
     from hadoop_etl_udfs_spark.operators.encode import ENCODED_SCHEMA
 
     sc, out, part = spark.sparkContext, str(tmp_path / "s"), str(tmp_path / "p")
@@ -229,7 +230,63 @@ def test_sink_reader_declares_schema(spark, tmp_path):
         spark, out, "url", [url]
     ).collect()
     assert [r["url"] for r in lookup()] == [url]  # cold
-    assert jobs(lookup) <= 5
+    assert jobs(lookup) <= 4
+
+
+def test_column_subset_decode_of_parenthesized_types(spark, tmp_path):
+    """subset_schema parses the DDL: a decimal(36,5) or struct type's own
+    commas must not cut it, so a column-subset read decodes a decimal
+    column bit-identically (struct columns have no chunk codec; their DDL
+    is checked alone)."""
+    from decimal import Decimal
+
+    from hadoop_etl_udfs_spark.operators.encode import subset_schema
+
+    wide = "a long, s struct<x:int,y:int>, d decimal(10,2), v array<float>"
+    assert StructType.fromDDL(subset_schema(["d", "s"], wide)) == (
+        StructType.fromDDL("s struct<x:int,y:int>, d decimal(10,2)")
+    )
+    ddl = "id long, d decimal(36,5), v string"
+    rows = [
+        (i, None if i % 7 == 0 else Decimal(f"{(-1) ** i * i * 10**25}.{i:05d}"),
+         f"v{i}")
+        for i in range(400)
+    ]
+    df = spark.createDataFrame(rows, ddl)
+    out = str(tmp_path / "dec")
+    lineage.write_encoded(encode_pages(df, partition_cols=["id"]), out)
+    got = lineage.decode_columns(spark, out, ["d"], full_schema=ddl)
+    want = df.select("d")
+    assert got.schema == want.schema
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_every_sink_append_goes_through_append_encoded():
+    """Only plans/lineage.py may collect the skip set or pass it on: every
+    other append calls lineage.append_encoded, so the
+    resume contract is written once."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    owner = root / "hadoop_etl_udfs_spark" / "plans" / "lineage.py"
+    bad = []
+    for top in ("hadoop_etl_udfs_spark", "jobs"):
+        for path in sorted((root / top).rglob("*.py")):
+            if path == owner:
+                continue
+            for node in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if name == "completed_chunk_ids" or any(
+                    k.arg == "skip_chunk_ids" for k in node.keywords
+                ):
+                    bad.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not bad, f"re-inlined resumable append at {bad}"
 
 
 def test_partial_duplicate_chunk_not_marked_complete(spark, pages):

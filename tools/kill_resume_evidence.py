@@ -41,7 +41,7 @@ def _job(out: str, docs: int) -> list[str]:
         "spark-submit", "--master", "local[8]",
         "--py-files", os.path.join(REPO, "dist", "hadoop_etl_udfs_spark.zip"),
         os.path.join(REPO, "jobs", "encode_job.py"),
-        "--synthesize", str(docs), "--output", out, "--resume",
+        "--synthesize", str(docs), "--output", out,
     ]
 
 
