@@ -158,6 +158,110 @@ def salted_partitioning(
     )
 
 
+def check_encodable(
+    schema, cluster_by: str | None, bloom_set: frozenset
+) -> None:
+    """Write-time checks of an encode input's Spark schema, run on the
+    driver before any plan is built: every column has a chunk codec kind
+    (codecs/api.py), and the ``bloom_by``/``cluster_by`` columns exist with
+    an indexable type. Misspelled or unsupported columns fail loud here,
+    not inside a worker once a job runs — silently stamping NULLs would
+    make every later pruned read scan the whole sink with no error."""
+    from ..codecs.api import _kind
+    from ..plans.bloom import bloom_domain
+
+    arrow = dict(_expected_arrow_fields(schema))
+    for name, typ in arrow.items():
+        try:
+            _kind(typ)
+        except ValueError as e:
+            raise ValueError(
+                f"{e} (column {name!r}) — the chunk codecs cannot encode it"
+            ) from None
+    missing = sorted(bloom_set - set(arrow))
+    if missing:
+        raise ValueError(
+            f"bloom_by columns {missing} not in input columns "
+            f"{schema.names} — a misspelled key column must fail loud at "
+            "write time, not produce an unprunable sink"
+        )
+    for name in sorted(bloom_set):
+        if bloom_domain(arrow[name]) is None:
+            raise TypeError(
+                f"bloom_by column {name!r} has type {arrow[name]} — bloom "
+                "filters index exact-match key domains "
+                "(string/int/timestamp/date) only"
+            )
+    if cluster_by is not None:
+        if cluster_by not in arrow:
+            raise ValueError(
+                f"cluster_by column {cluster_by!r} not in input columns "
+                f"{schema.names} — a misspelled cluster column must fail "
+                "loud at write time, not produce an unprunable sink"
+            )
+        cb_type = schema[cluster_by].dataType.typeName()
+        if cb_type not in (
+            "timestamp", "timestamp_ntz", "date", "long", "integer",
+            "short", "byte", "boolean",
+        ):
+            raise TypeError(
+                f"cluster_by column {cluster_by!r} has non-numeric-domain "
+                f"type {cb_type}; cluster stamps need an int64-mappable "
+                "domain (timestamp/date/int/boolean)"
+            )
+
+
+def encode_chunk(
+    batch: pa.RecordBatch,
+    codec: str,
+    global_dicts: dict,
+    cluster_by: str | None,
+    bloom_set: frozenset,
+    skip: frozenset = frozenset(),
+) -> pa.RecordBatch | None:
+    """One chunk's rows -> its encoded column-chunk rows (one per column,
+    in the sink's Arrow form), or None when its content-addressed id is in
+    ``skip``. The one definition of a chunk's id, CRC, zone map, bloom and
+    cluster stamp: encode_pages' kernel and the takedown's purge kernel
+    (plans.lineage.delete_from_sink) both call it."""
+    names = batch.schema.names
+    cols = [canonical_column(c) for c in batch.columns]
+    cid = chunk_id(names, cols)
+    if cid in skip:
+        return None
+    cl = None
+    if cluster_by is not None:
+        ci = batch.schema.get_field_index(cluster_by)
+        if ci >= 0:
+            cl = _cluster_range(batch.column(ci))
+    cl_lo, cl_hi = cl if cl is not None else (None, None)
+    rows = []
+    for i, (name, col) in enumerate(zip(names, cols)):
+        try:
+            enc = encode_array(
+                col, codec=codec, global_dict=global_dicts.get(name),
+                cache_key=name,
+            )
+        except KeyError:
+            # value missing from the global dictionary (e.g. resumed job
+            # over drifted input): fall back to chunk-local codecs
+            enc = encode_array(col, codec=codec)
+        st = _col_stats(batch.column(i))
+        if name in bloom_set:
+            from ..plans.bloom import bloom_build, merge_bloom_into_stats
+
+            st = merge_bloom_into_stats(st, bloom_build(batch.column(i)))
+        rows.append((
+            cid, name, i, batch.num_rows, enc.codec, enc.bytes_in,
+            enc.bytes_out, enc.data_bytes, enc.crc32, enc.meta, st,
+            cl_lo, cl_hi, enc.payload,
+        ))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(v, f.type) for v, f in zip(zip(*rows), _ENCODED_ARROW)],
+        schema=_ENCODED_ARROW,
+    )
+
+
 def encode_pages(
     df: DataFrame,
     codec: str = "auto",
@@ -198,48 +302,14 @@ def encode_pages(
     and takedowns (delete_from_sink) decode only chunks that can contain a
     requested key. Misspelled or non-indexable columns raise here, at
     write time, for the same reason cluster_by does.
-    """
-    from ..plans.bloom import bloom_domain
-    from pyspark.sql.types import StructType as _StructType
 
+    Every one of these checks runs on the driver (:func:`check_encodable`)
+    before the plan is built, and so does the column-type check: a column
+    the chunk codecs cannot encode (a struct, a map) raises ValueError at
+    call time, not inside the write job.
+    """
     bloom_set = frozenset(bloom_by or ())
-    if bloom_set:
-        missing = sorted(bloom_set - set(df.columns))
-        if missing:
-            raise ValueError(
-                f"bloom_by columns {missing} not in input columns "
-                f"{df.columns} — a misspelled key column must fail loud at "
-                "write time, not produce an unprunable sink"
-            )
-        arrow_probe = pa.schema(
-            _expected_arrow_fields(
-                _StructType([df.schema[c] for c in sorted(bloom_set)])
-            )
-        )
-        for f in arrow_probe:
-            if bloom_domain(f.type) is None:
-                raise TypeError(
-                    f"bloom_by column {f.name!r} has type {f.type} — bloom "
-                    "filters index exact-match key domains "
-                    "(string/int/timestamp/date) only"
-                )
-    if cluster_by is not None:
-        if cluster_by not in df.columns:
-            raise ValueError(
-                f"cluster_by column {cluster_by!r} not in input columns "
-                f"{df.columns} — a misspelled cluster column must fail loud "
-                "at write time, not produce an unprunable sink"
-            )
-        cb_type = df.schema[cluster_by].dataType.typeName()
-        if cb_type not in (
-            "timestamp", "timestamp_ntz", "date", "long", "integer",
-            "short", "byte", "boolean",
-        ):
-            raise TypeError(
-                f"cluster_by column {cluster_by!r} has non-numeric-domain "
-                f"type {cb_type}; cluster stamps need an int64-mappable "
-                "domain (timestamp/date/int/boolean)"
-            )
+    check_encodable(df.schema, cluster_by, bloom_set)
     if shuffle:
         if partition_cols:
             # table-agnostic layout (round 6): the default salted
@@ -290,42 +360,9 @@ def encode_pages(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            names = batch.schema.names
-            cols = [canonical_column(c) for c in batch.columns]
-            cid = chunk_id(names, cols)
-            if cid in done:
-                continue
-            cl = None
-            if cluster_by is not None:
-                ci = batch.schema.get_field_index(cluster_by)
-                if ci >= 0:
-                    cl = _cluster_range(batch.column(ci))
-            cl_lo, cl_hi = cl if cl is not None else (None, None)
-            rows = []
-            for i, (name, col) in enumerate(zip(names, cols)):
-                gd = gds.get(name)
-                try:
-                    enc = encode_array(
-                        col, codec=codec, global_dict=gd, cache_key=name
-                    )
-                except KeyError:
-                    # value missing from the global dictionary (e.g. resumed
-                    # job over drifted input): fall back to chunk-local codecs
-                    enc = encode_array(col, codec=codec)
-                st = _col_stats(batch.column(i))
-                if name in bloom_set:
-                    from ..plans.bloom import bloom_build, merge_bloom_into_stats
-
-                    st = merge_bloom_into_stats(st, bloom_build(batch.column(i)))
-                rows.append((
-                    cid, name, i, batch.num_rows, enc.codec, enc.bytes_in,
-                    enc.bytes_out, enc.data_bytes, enc.crc32, enc.meta, st,
-                    cl_lo, cl_hi, enc.payload,
-                ))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(v, f.type) for v, f in zip(zip(*rows), _ENCODED_ARROW)],
-                schema=_ENCODED_ARROW,
-            )
+            out = encode_chunk(batch, codec, gds, cluster_by, bloom_set, done)
+            if out is not None:
+                yield out
 
     return df.mapInArrow(encode, ENCODED_SCHEMA)
 
@@ -423,6 +460,24 @@ def _assemble_chunk(
     return [got[n] if n in got else pa.nulls(n_rows, ty) for n, ty in exp_fields]
 
 
+def decode_chunk_group(
+    table: pa.Table, exp_fields, gds: dict
+) -> list[pa.Array]:
+    """One chunk's sink rows (a ``groupBy("chunk_id")`` group) -> its
+    columns in the requested schema (:func:`_assemble_chunk`)."""
+    t = table.sort_by("col_idx")
+    cid, n_rows = (
+        (t.column("chunk_id")[0].as_py(), t.column("n_rows")[0].as_py())
+        if t.num_rows else (None, 0)
+    )
+    parts = zip(
+        t.column("column").to_pylist(),
+        t.column("meta").to_pylist(),
+        t.column("payload"),
+    )
+    return _assemble_chunk(cid, n_rows, parts, exp_fields, gds)
+
+
 def decode_chunks(
     enc: DataFrame, schema: str | None = None, global_dicts: dict | None = None
 ) -> DataFrame:
@@ -444,18 +499,8 @@ def decode_chunks(
 
     def decode(table: pa.Table) -> pa.Table:
         drop_zip_finders()
-        t = table.sort_by("col_idx")
-        cid, n_rows = (
-            (t.column("chunk_id")[0].as_py(), t.column("n_rows")[0].as_py())
-            if t.num_rows else (None, 0)
-        )
-        parts = zip(
-            t.column("column").to_pylist(),
-            t.column("meta").to_pylist(),
-            t.column("payload"),
-        )
         return pa.Table.from_arrays(
-            _assemble_chunk(cid, n_rows, parts, exp_fields, gd_bc.value),
+            decode_chunk_group(table, exp_fields, gd_bc.value),
             names=exp_names,
         )
 

@@ -388,24 +388,30 @@ def _sink_probe(enc: DataFrame) -> dict:
     - ``bloom_columns``: sorted names of the columns carrying a Bloom
       filter in their stats — blooms name their column, so rewrites
       re-derive ``bloom_by`` from the sink (cluster stamps do NOT record
-      their source column, so ``cluster_by`` must be passed).
+      their source column, so ``cluster_by`` must be passed);
+    - ``bloom_domains``: each bloomed column's hash domain
+      (``$.bloom.dom``, plans/bloom.py), which query ids are hashed in.
 
     Sinks written before the stats or cluster columns existed read them as
     NULL (:func:`read_encoded`), so they probe as unbloomed and
     unstamped."""
-    bloomed = F.get_json_object("stats", "$.bloom.m").isNotNull()
+    dom = F.get_json_object("stats", "$.bloom.dom")
     r = enc.agg(
         F.count("*").alias("n"),
         F.countDistinct("chunk_id", "column").alias("n_distinct"),
         F.countDistinct("chunk_id").alias("chunks"),
         F.count("cluster_lo").alias("stamped"),
-        F.collect_set(F.when(bloomed, F.col("column"))).alias("bloomed"),
+        F.collect_set(
+            F.when(dom.isNotNull(), F.struct(F.col("column"), dom.alias("dom")))
+        ).alias("bloomed"),
     ).first()
+    domains = {b["column"]: b["dom"] for b in r["bloomed"]}
     return {
         "duplicated": r["n"] != r["n_distinct"],
         "chunks": r["chunks"],
         "stamped": r["stamped"] > 0,
-        "bloom_columns": sorted(r["bloomed"]),
+        "bloom_columns": sorted(domains),
+        "bloom_domains": domains,
     }
 
 
@@ -574,44 +580,52 @@ def _open_rewrite(
 
 
 def _rewrite_sink(
-    spark: SparkSession, enc: DataFrame, probe: dict, dst_dir: str,
-    victims: set | None, transform, schema: str | None,
-    cluster_by: str | None, codec: str, global_dicts: dict | None,
+    enc: DataFrame, dst_dir: str, victims: set | None, rewrite,
     partition_by_column: bool,
-) -> dict | None:
-    """The rewrite core: carry every non-victim chunk's rows RAW (no
-    decode, no codec CPU), decode the victim chunks (``None``: all of
-    them), apply the op's own row ``transform``, re-encode with the
-    source's blooms and ``cluster_by`` (a rewrite never downgrades the
-    sink's pruning; ``shuffle=False`` keeps the transform's layout), and
-    commit ONCE with errorifexists — the all-or-nothing crash contract (a
-    mid-write kill leaves only ``_temporary``; the source is never
-    touched). Returns the written sink's :func:`_sink_probe`, or None when
-    there were no victims and the sink was copied as is."""
-    from ..operators.encode import decode_chunks, encode_pages
-
+) -> None:
+    """The rewrite core every sink rewrite shares: carry every non-victim
+    chunk's rows RAW (no decode, no codec CPU), hand the victim chunks'
+    rows (``None``: all of them) to the op's ``rewrite`` — sink rows in,
+    re-encoded sink rows out — and commit ONCE with errorifexists, the
+    all-or-nothing crash contract (a mid-write kill leaves only
+    ``_temporary``; the source is never touched). No victims: the sink is
+    copied as is."""
     if victims is not None and not victims:
         write_encoded(
             enc, dst_dir, mode="errorifexists",
             partition_by_column=partition_by_column,
         )
-        return None
+        return
     doomed, carried = enc, None
     if victims is not None:
         doomed, _ = _chunk_id_filter(enc, victims, keep=True)
         carried, _ = _chunk_id_filter(enc, victims, keep=False)
-    rows = decode_chunks(doomed, schema=schema, global_dicts=global_dicts)
-    out = encode_pages(
-        transform(rows), codec=codec, shuffle=False, cluster_by=cluster_by,
-        global_dicts=global_dicts, bloom_by=probe["bloom_columns"] or None,
-    )
+    out = rewrite(doomed)
     write_encoded(
         out if carried is None else carried.unionByName(out),
         dst_dir, mode="errorifexists", partition_by_column=partition_by_column,
     )
-    # probed from the WRITTEN sink: counting the encode pre-write would
-    # run it twice
-    return _sink_probe(read_encoded(spark, dst_dir))
+
+
+def _regroup_rewrite(
+    bloom_by: list[str], regroup, schema: str | None,
+    cluster_by: str | None, codec: str, global_dicts: dict | None,
+):
+    """The merging rewrite of :func:`compact_sink` and :func:`recluster_sink`:
+    decode the victim chunks, ``regroup`` their rows across chunks, and
+    re-encode with the source's blooms and ``cluster_by`` (a rewrite never
+    downgrades the sink's pruning; ``shuffle=False`` keeps the regroup's
+    layout)."""
+    from ..operators.encode import decode_chunks, encode_pages
+
+    def rewrite(doomed: DataFrame) -> DataFrame:
+        rows = decode_chunks(doomed, schema=schema, global_dicts=global_dicts)
+        return encode_pages(
+            regroup(rows), codec=codec, shuffle=False, cluster_by=cluster_by,
+            global_dicts=global_dicts, bloom_by=bloom_by,
+        )
+
+    return rewrite
 
 
 def recluster_sink(
@@ -641,7 +655,7 @@ def recluster_sink(
     run it column-complete per time slice, not all-at-once.
 
     The re-encode keeps the range partitioning and re-stamps the source
-    sink's Bloom filters (:func:`_rewrite_sink`) — OPTIMIZE must never
+    sink's Bloom filters (:func:`_regroup_rewrite`) — OPTIMIZE must never
     downgrade a sink's pruning capabilities.
 
     The written chunk ids are NOT reproducible across runs: Spark's range
@@ -650,14 +664,18 @@ def recluster_sink(
     different chunk-id sets. The decoded rows are the same."""
     src = read_encoded(spark, src_dir)
     n = n_partitions or spark.sparkContext.defaultParallelism
-    written = _rewrite_sink(
-        spark, src, _sink_probe(src), dst_dir, None,
-        lambda pages: pages.repartitionByRange(n, F.col(cluster_by)), schema,
-        cluster_by, codec, global_dicts, partition_by_column,
+    _rewrite_sink(
+        src, dst_dir, None,
+        _regroup_rewrite(
+            _sink_probe(src)["bloom_columns"],
+            lambda pages: pages.repartitionByRange(n, F.col(cluster_by)),
+            schema, cluster_by, codec, global_dicts,
+        ),
+        partition_by_column,
     )
     # a rewrite whose cluster column was entirely NULL produces exactly the
     # silent-unprunable sink this engine fails loud on — check the result
-    if not written["stamped"]:
+    if not _sink_probe(read_encoded(spark, dst_dir))["stamped"]:
         raise ValueError(
             f"recluster produced no non-NULL cluster stamps at {dst_dir} — "
             f"column {cluster_by!r} is all-null (or the source sink was "
@@ -704,6 +722,56 @@ def encode_resumable(pages: DataFrame, out_dir: str, **encode_kw) -> dict:
     }
 
 
+def _takedown_ids(ids, key_field, want):
+    """A takedown's id set as one NULL-free Arrow array, built once on the
+    driver and broadcast to both takedown kernels. DataFrame ids are
+    collected as Arrow and compare in the key column's own type ``want``.
+    List ids compare in the bloom/zone-map domain (plans/bloom.py):
+    timestamps as epoch-µs, dates as epoch days, every integer width as
+    int64, everything else as itself; an id that does not fit that domain
+    raises rather than silently never matching."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(ids, DataFrame):
+        col = ids.select(ids.columns[0]).toArrow().column(0)
+        return pc.unique(col.combine_chunks().drop_null().cast(want))
+    if key_field.dataType.typeName() == "timestamp_ntz":
+        raise TypeError(
+            "timestamp_ntz key columns have no session-tz-free epoch "
+            "mapping for list ids — pass ids as a DataFrame instead"
+        )
+    dom = want
+    if pa.types.is_integer(want) or pa.types.is_timestamp(want) \
+            or pa.types.is_date(want):
+        dom = pa.int64()
+    try:
+        return pa.array([i for i in ids if i is not None], dom)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError, OverflowError) as e:
+        raise TypeError(
+            f"takedown ids do not fit the {dom} domain of key column "
+            f"{key_field.name!r} ({e}) — they would never match"
+        ) from None
+
+
+def _purge_mask(key, ids):
+    """The takedown's ONE purge predicate: which rows of a chunk's decoded
+    key column are doomed. The key scan counts these rows and the write
+    kernel drops exactly them, so ``rows_deleted`` is what the write
+    removes. ``ids`` come from :func:`_takedown_ids`; a key of another type
+    is brought into the ids' domain (dates through their epoch days). A
+    NULL key is never purged, and the ids hold no NULL, so a NULL among
+    the requested ids matches nothing."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if key.type != ids.type:
+        if pa.types.is_date(key.type):
+            key = key.cast(pa.int32())
+        key = key.cast(ids.type)
+    return pc.is_in(key, value_set=ids, skip_nulls=True)
+
+
 def delete_from_sink(
     spark: SparkSession,
     src_dir: str,
@@ -721,149 +789,162 @@ def delete_from_sink(
     removed — the right-to-be-forgotten / contaminated-document purge a
     training-corpus store must support without re-encoding the corpus.
 
-    Surgical on CPU, sequential on IO. Only chunks that actually CONTAIN
-    a doomed row pay decode + re-encode: the key column alone is decoded
-    first (one column of the sink, with projection/directory pruning on a
-    column-partitioned sink) to map chunk_id -> hit, and the affected
-    chunk-id set is metadata-scale (a takedown names documents, not
-    fractions of the corpus). Every other chunk's rows are carried to the
-    destination as RAW parquet rows — no decode, no codec CPU, pure IO in
-    the same cost class as any compaction pass; batch takedowns to
-    amortize it, exactly as Iceberg's rewrite-files treats accumulated
-    deletes. Carried and re-encoded rows commit in ONE all-or-nothing
-    parquet job (:func:`_rewrite_sink`).
+    Three passes (six Spark jobs on a clean sink with list ids):
 
-    ``ids`` is a Python iterable of key values (broadcast as a literal
-    IN-set) or a single-column DataFrame (broadcast semi/anti join) for
-    takedown lists too big to inline.
+    1. the source's one manifest probe (:func:`_sink_probe`: duplicates,
+       stamps, bloomed columns and their hash domains);
+    2. one shuffle-free key scan over the key column's chunk rows (a
+       chunk's key column is one row). Per chunk it tests the chunk's
+       Bloom filter against the hashed ids (plans/bloom.py), decodes only
+       the admitted payloads, and counts the exact hits
+       (:func:`_purge_mask`) — the affected set and ``rows_deleted`` in
+       one collect of metadata-scale rows;
+    3. one write, committed all-or-nothing (:func:`_rewrite_sink`): every
+       unaffected chunk's rows are carried RAW (no decode, no codec CPU —
+       pure IO in the same cost class as any compaction pass; batch
+       takedowns to amortize it, exactly as Iceberg's rewrite-files
+       treats accumulated deletes), and each affected chunk is decoded,
+       purged and re-encoded in ONE Python call per chunk
+       (operators.encode.encode_chunk), so its rows never cross back into
+       the JVM in between.
+
+    Each affected chunk therefore has at most one successor: its
+    surviving rows, in their order, re-encoded with the sink's blooms
+    (``sink_bloom_columns`` — blooms name their column, so no parameter
+    is needed) and, on a stamped sink, a fresh cluster stamp. A chunk
+    whose every row is doomed has none. The written chunk ids depend only
+    on the source and ``ids``, so the same takedown writes the same sink.
+
+    ``ids`` is a Python iterable of key values or a single-column
+    DataFrame, collected once as Arrow, for takedown lists that do not
+    exist driver-side. List ids compare in the bloom domain (epoch-µs
+    timestamps, epoch-day dates) and prune the key scan when the sink
+    blooms ``key_column``; DataFrame ids compare in the key's own type
+    and scan every chunk's key. A NULL key is never purged.
 
     A sink carrying cluster stamps requires ``cluster_by`` (the stamp
     column's name, which the sink does not record): rewriting its chunks
     without re-stamping would leave NULL-stamped chunks that every range
     prune must conservatively scan — silent unprunable chunks are a bug,
-    not a mode, so this raises instead. Chunks whose every row is doomed
-    are dropped entirely (no empty replacement chunk).
-
-    Bloom filters compose both ways automatically: when the sink carries
-    a bloom on ``key_column`` (and ``ids`` is a literal list), the key
-    scan itself is bloom-pruned — only candidate chunks pay even the
-    one-column decode, so the takedown's read cost tracks the blast
-    radius, not the corpus. And rewritten chunks re-stamp blooms for
-    every column the sink already bloomed (``sink_bloom_columns`` —
-    blooms name their column, so no parameter is needed).
+    not a mode, so this raises instead.
 
     Returns ``{"chunks_total", "chunks_affected", "chunks_new",
-    "rows_deleted", "chunks_key_scanned"}`` — re-encoding regroups the
-    surviving rows, so affected chunks and their replacements are not 1:1
-    (a fully-doomed chunk simply has no successor rows). ``rows_deleted``
-    comes from the key scan's per-chunk hit counts."""
+    "rows_deleted", "chunks_key_scanned"}``: ``chunks_new`` counts the
+    affected chunks with surviving rows, ``chunks_key_scanned`` the
+    chunks whose key payload the scan decoded."""
+    import json
+
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.types import StructType
 
     from ..codecs.api import decode_array
     from ..operators.encode import (
+        _ENCODED_ARROW,
+        ENCODED_SCHEMA,
         _expected_arrow_fields,
         _type_align,
+        check_encodable,
+        decode_chunk_group,
+        encode_chunk,
         subset_schema,
     )
+    from ..sources.pages import PAGES_SCHEMA
+    from .bloom import bloom_contains_any, hash_query_ids
 
-    if not isinstance(ids, DataFrame):
-        ids = list(ids)
     enc, probe = _open_rewrite(
         spark, src_dir, cluster_by,
         "rewriting chunks without re-stamping would make them silently "
         "unprunable; pass the sink's cluster column",
     )
+    subset_schema([key_column], schema)  # a misspelled key raises here
+    out_struct = StructType.fromDDL(schema or PAGES_SCHEMA)
+    bloom_set = frozenset(probe["bloom_columns"])
+    check_encodable(out_struct, cluster_by, bloom_set)
+    exp_fields = _expected_arrow_fields(out_struct)
+    exp_names = [n for n, _ in exp_fields]
+    want = dict(exp_fields)[key_column]
+    id_set = _takedown_ids(ids, out_struct[key_column], want)
+    dom = probe["bloom_domains"].get(key_column)
+    hashes = None
+    if dom is not None and not isinstance(ids, DataFrame):
+        vals = id_set.to_pylist()
+        hashes = hash_query_ids(vals, dom) if vals else np.zeros(0, np.uint64)
+    sc = spark.sparkContext
+    ids_bc = sc.broadcast(id_set)
+    h_bc = sc.broadcast(hashes)
+    gd_bc = sc.broadcast(global_dicts or {})
 
-    # --- 1. key-column-only decode, chunk_id kept: (chunk_id, __key) ---
-    key_ddl = subset_schema([key_column], schema)
-    key_type = StructType.fromDDL(key_ddl).fields[0].dataType.simpleString()
-    want_arrow = _expected_arrow_fields(key_ddl)[0][1]
-    gd_bc = spark.sparkContext.broadcast(global_dicts or {})
-
-    def _kdec(tbl: pa.Table) -> pa.Table:
+    def scan(batches):
         drop_zip_finders()
-        if tbl.num_rows == 0:
-            return pa.table(
-                {"chunk_id": pa.array([], pa.int64()),
-                 "__key": pa.nulls(0, want_arrow)}
+        id_vals, h = ids_bc.value, h_bc.value
+        gd = gd_bc.value.get(key_column)
+        for b in batches:
+            stats = b.column("stats").to_pylist()
+            metas = b.column("meta").to_pylist()
+            payloads = b.column("payload")
+            scanned, hits = [], []
+            for i in range(b.num_rows):
+                bloom = (
+                    json.loads(stats[i]).get("bloom")
+                    if h is not None and stats[i] else None
+                )
+                # chunk rows without a bloom, or hashed in another domain
+                # (a mixed-era sink), are decoded conservatively
+                if bloom is not None and bloom["dom"] == dom \
+                        and not bloom_contains_any(bloom, h):
+                    scanned.append(False)
+                    hits.append(0)
+                    continue
+                key = _type_align(
+                    decode_array(payloads[i].as_py(), metas[i], global_dict=gd),
+                    want,
+                )
+                scanned.append(True)
+                hits.append(_purge_mask(key, id_vals).true_count)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("chunk_id"), b.column("n_rows"),
+                 pa.array(scanned, pa.bool_()), pa.array(hits, pa.int64())],
+                names=["chunk_id", "n_rows", "scanned", "hits"],
             )
-        arr = _type_align(
-            decode_array(
-                tbl.column("payload")[0].as_py(),
-                tbl.column("meta")[0].as_py(),
-                global_dict=gd_bc.value.get(key_column),
-            ),
-            want_arrow,
-        )
-        cid = tbl.column("chunk_id")[0].as_py()
-        return pa.table(
-            {"chunk_id": pa.array([cid] * len(arr), pa.int64()),
-             "__key": arr}
-        )
 
-    key_rows = enc.filter(F.col("column") == key_column)
-    n_key_scanned = probe["chunks"]
-    if key_column in probe["bloom_columns"] and not isinstance(ids, DataFrame):
-        # bloom-pruned key scan: only candidate chunks pay the decode.
-        # (DataFrame ids stay unpruned — the DF form exists for id lists
-        # too big to hash driver-side; correctness is identical.)
-        key_rows, n_key_scanned = _chunk_id_filter(
-            key_rows,
-            bloom_candidate_chunks(
-                key_rows.select("chunk_id", "stats"), key_column, ids, spark
-            ),
-        )
-    keys = (
-        key_rows
-        .groupBy("chunk_id")
-        .applyInArrow(_kdec, f"chunk_id long, __key {key_type}")
+    key_rows = enc.filter(F.col("column") == key_column).select(
+        "chunk_id", "n_rows", "stats", "meta", "payload"
     )
-    if isinstance(ids, DataFrame):
-        id_col = ids.columns[0]
-        ids_df = F.broadcast(ids.select(F.col(id_col).alias("__key")).distinct())
-        hit = keys.join(ids_df, "__key", "leftsemi")
+    rows = key_rows.mapInArrow(
+        scan, "chunk_id long, n_rows long, scanned boolean, hits long"
+    ).toArrow().to_pylist()
+    hit = {r["chunk_id"]: r for r in rows if r["hits"]}
 
-        def purge(rows: DataFrame) -> DataFrame:
-            return rows.join(
-                ids_df.select(F.col("__key").alias(key_column)),
-                key_column,
-                "leftanti",
-            )
-    else:
-        # timestamp/date keys: list ids are epoch ints (the bloom/zone-map
-        # domain) — compare in that domain, a raw isin() would throw
-        hit = keys.filter(_key_probe_col(keys, "__key").isin(ids))
+    def purge(table: pa.Table) -> pa.Table:
+        drop_zip_finders()
+        gds = gd_bc.value
+        chunk = pa.RecordBatch.from_arrays(
+            decode_chunk_group(table, exp_fields, gds), names=exp_names
+        )
+        doomed = _purge_mask(chunk.column(key_column), ids_bc.value)
+        left = chunk.filter(pc.invert(doomed))
+        if left.num_rows == 0:
+            return _ENCODED_ARROW.empty_table()
+        return pa.Table.from_batches(
+            [encode_chunk(left, codec, gds, cluster_by, bloom_set)]
+        )
 
-        def purge(rows: DataFrame) -> DataFrame:
-            # drop a row only where `isin` is TRUE — exactly the rows `hit`
-            # counts. Under three-valued logic `~isin(ids)` is NULL for a
-            # NULL key (or a NULL among the ids), and filtering on it would
-            # silently DELETE every such row sharing a chunk with a doomed
-            # row — data loss beyond the named ids, and a semantics fork
-            # from the DataFrame-ids branch (whose leftanti join keeps NULL
-            # keys). r8 ADVICE item 1.
-            hit_row = _key_probe_col(rows, key_column).isin(ids)
-            return rows.filter(~F.coalesce(hit_row, F.lit(False)))
-    # per-chunk hit counts: the affected set AND rows_deleted in one collect
-    # (each chunk's key column decodes once — the sink is deduped above —
-    # and `purge` drops exactly the rows `hit` counts)
-    hits = {
-        r["chunk_id"]: r["count"]
-        for r in hit.groupBy("chunk_id").count().collect()
+    _rewrite_sink(
+        enc, dst_dir, set(hit),
+        lambda doomed: doomed.groupBy("chunk_id").applyInArrow(
+            purge, ENCODED_SCHEMA
+        ),
+        partition_by_column,
+    )
+    return {
+        "chunks_total": probe["chunks"],
+        "chunks_affected": len(hit),
+        "chunks_new": sum(r["n_rows"] > r["hits"] for r in hit.values()),
+        "rows_deleted": sum(r["hits"] for r in hit.values()),
+        "chunks_key_scanned": sum(r["scanned"] for r in rows),
     }
-
-    # --- 2. carry untouched chunk rows raw; decode + purge the victims ---
-    written = _rewrite_sink(
-        spark, enc, probe, dst_dir, set(hits), purge, schema, cluster_by,
-        codec, global_dicts, partition_by_column,
-    )
-    n_new = written["chunks"] - probe["chunks"] + len(hits) if written else 0
-    return {"chunks_total": probe["chunks"], "chunks_affected": len(hits),
-            "chunks_new": n_new, "rows_deleted": sum(hits.values()),
-            "chunks_key_scanned": n_key_scanned}
-
-
 def compact_sink(
     spark: SparkSession,
     src_dir: str,
@@ -930,10 +1011,19 @@ def compact_sink(
             return rows.repartitionByRange(n_out, F.col(cluster_by))
         return rows.repartition(n_out)
 
-    written = _rewrite_sink(
-        spark, enc, probe, dst_dir, set(victims), regroup, schema, cluster_by,
-        codec, global_dicts, partition_by_column,
+    _rewrite_sink(
+        enc, dst_dir, set(victims),
+        _regroup_rewrite(
+            probe["bloom_columns"], regroup, schema, cluster_by, codec,
+            global_dicts,
+        ),
+        partition_by_column,
     )
-    n_new = written["chunks"] - probe["chunks"] + len(victims) if written else 0
+    # probed from the WRITTEN sink: counting the encode pre-write would
+    # run it twice
+    n_new = (
+        _sink_probe(read_encoded(spark, dst_dir))["chunks"] - probe["chunks"]
+        + len(victims) if victims else 0
+    )
     return {"chunks_total": probe["chunks"], "chunks_fragment": len(frag),
             "chunks_new": n_new, "rows_compacted": n_rows}

@@ -261,6 +261,23 @@ def test_column_subset_decode_of_parenthesized_types(spark, tmp_path):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
+def test_encode_rejects_unsupported_type_on_driver(spark):
+    """A column the chunk codecs cannot encode (a struct) fails when
+    encode_pages is called: a driver-side ValueError before any Spark job
+    runs, not a PythonException from inside the write job."""
+    df = spark.createDataFrame([(1, (1, 2))], "id long, s struct<x:int,y:int>")
+    jsc = spark.sparkContext._jsc.sc()
+
+    def n_jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None).size()
+
+    before = n_jobs()
+    with pytest.raises(ValueError, match="unsupported chunk type.*'s'"):
+        encode_pages(df, partition_cols=["id"])
+    assert n_jobs() == before
+
+
 def test_every_sink_append_goes_through_append_encoded():
     """Only plans/lineage.py may collect the skip set or pass it on: every
     other append calls lineage.append_encoded, so the

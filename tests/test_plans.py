@@ -1116,6 +1116,67 @@ def test_delete_from_sink_surgical_takedown(spark, tmp_path):
     enc_c = lineage.read_encoded(spark, dst_c)
     assert enc_c.filter(F.col("cluster_lo").isNull()).count() == 0
 
+    # successor rule: one victim in each of two chunks -> exactly two
+    # successors, each its source chunk's rows minus the doomed one, in
+    # the source order; the same takedown twice writes the same chunk ids
+    def chunk_rows(sink, cid):
+        return [tuple(r) for r in decode_chunks(
+            lineage.read_encoded(spark, sink).filter(F.col("chunk_id") == cid)
+        ).collect()]
+
+    two = sorted(src_ids)[:2]
+    src_rows = {c: chunk_rows(src, c) for c in two}
+    pair = [src_rows[c][1][0] for c in two]  # url is the first column
+    outs = [str(tmp_path / f"dst_pair{k}") for k in range(2)]
+    stats_p = [
+        lineage.delete_from_sink(spark, src, o, pair, key_column="url")
+        for o in outs
+    ]
+    assert stats_p[0] == stats_p[1]
+    assert stats_p[0]["chunks_affected"] == stats_p[0]["chunks_new"] == 2
+    pair_ids = [
+        {r["chunk_id"] for r in lineage.read_encoded(spark, o)
+         .select("chunk_id").distinct().collect()}
+        for o in outs
+    ]
+    assert pair_ids[0] == pair_ids[1]
+    successors = pair_ids[0] - src_ids
+    assert len(successors) == 2
+    assert sorted(chunk_rows(outs[0], c) for c in successors) == sorted(
+        [r for r in src_rows[c] if r[0] not in pair] for c in two
+    )
+
+
+def test_delete_from_sink_job_count(spark, tmp_path):
+    """A takedown on a clean, bloomed, cluster-stamped sink runs at most six
+    Spark jobs: the source's manifest probe, one key scan, and one write —
+    no bloom probe, no candidate or hit-count collects, no probe of the
+    written sink."""
+    from hadoop_etl_udfs_spark.operators.encode import encode_pages
+    from hadoop_etl_udfs_spark.plans import lineage
+    from hadoop_etl_udfs_spark.sources.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, 800, seed=12).localCheckpoint()
+    src = str(tmp_path / "src")
+    lineage.write_encoded(encode_pages(
+        pages.repartitionByRange(4, "warc_ts"), shuffle=False,
+        cluster_by="warc_ts", bloom_by=["url"],
+    ), src)
+    victims = [r["url"] for r in pages.limit(2).collect()]
+    jsc = spark.sparkContext._jsc.sc()
+
+    def n_jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None).size()
+
+    before = n_jobs()
+    stats = lineage.delete_from_sink(
+        spark, src, str(tmp_path / "dst"), victims, key_column="url",
+        cluster_by="warc_ts",
+    )
+    assert n_jobs() - before <= 6
+    assert stats["rows_deleted"] == 2
+
 
 def test_delete_from_sink_null_keys_and_join_fallback(spark, tmp_path):
     """Round-9 fixes, both on the takedown path:
