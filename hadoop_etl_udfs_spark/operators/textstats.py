@@ -107,13 +107,13 @@ def point_lookup_over_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookup THROUGH THE ENGINE'S OWN COMPRESSED SINK: encode the
     documents table with a Bloom filter on ``doc_id`` (plans/bloom.py),
     then fetch five fixed doc_ids back via the bloom-pruned reader
-    (plans.lineage.decode_chunks_where_key_in) — only chunks whose filter
-    admits a probed key pay any decode.
+    (plans.lineage.decode_chunks_where_key_in) — only chunks holding a
+    probed key pay a full decode.
 
     The decode is bit-identical by construction (CRC-verified codecs), so
     the oracle is the plain ``WHERE doc_id IN (...)`` over the raw table —
-    value agreement proves encode → bloom stamp → bloom probe → pruned
-    decode → exact row filter end-to-end. The pruning itself (not just the
+    value agreement proves encode → bloom stamp → key scan → pruned
+    decode → exact row match end-to-end. The pruning itself (not just the
     values) is asserted in tests/test_bloom.py; this gate entry pins the
     VALUES across engines."""
     from ..plans.lineage import decode_chunks_where_key_in
@@ -123,7 +123,7 @@ def point_lookup_over_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang", "source", "doc_id"
     )
     enc = encode_pages(docs, shuffle=False, bloom_by=["doc_id"])
-    # 2 consumers (bloom probe over stats; pruned decode) — materialize once
+    # 2 consumers (the key scan; the decode of its hit chunks) — materialize once
     enc = enc.localCheckpoint()
     got = decode_chunks_where_key_in(
         spark, enc, "doc_id", POINT_LOOKUP_IDS,

@@ -6,9 +6,9 @@ per-chunk [min, max] spans nearly the whole domain. This module adds the
 classic columnar answer — the same role Parquet/ORC bloom filters play:
 at encode time each chunk stamps a small bitset over the chunk's values
 of a declared key column; a point lookup ("fetch THESE urls", "purge
-THESE doc_ids") probes the bitsets manifest-side and decodes only the
+THESE doc_ids") probes the bitsets and decodes the key of only the
 chunks that can possibly contain a requested key. False positives cost a
-wasted chunk decode; false negatives are impossible — the same
+wasted key decode; false negatives are impossible — the same
 correct-by-construction asymmetry as the zone maps.
 
 The filter rides INSIDE the existing per-chunk-column ``stats`` JSON

@@ -388,9 +388,7 @@ def _sink_probe(enc: DataFrame) -> dict:
     - ``bloom_columns``: sorted names of the columns carrying a Bloom
       filter in their stats — blooms name their column, so rewrites
       re-derive ``bloom_by`` from the sink (cluster stamps do NOT record
-      their source column, so ``cluster_by`` must be passed);
-    - ``bloom_domains``: each bloomed column's hash domain
-      (``$.bloom.dom``, plans/bloom.py), which query ids are hashed in.
+      their source column, so ``cluster_by`` must be passed).
 
     Sinks written before the stats or cluster columns existed read them as
     NULL (:func:`read_encoded`), so they probe as unbloomed and
@@ -401,17 +399,13 @@ def _sink_probe(enc: DataFrame) -> dict:
         F.countDistinct("chunk_id", "column").alias("n_distinct"),
         F.countDistinct("chunk_id").alias("chunks"),
         F.count("cluster_lo").alias("stamped"),
-        F.collect_set(
-            F.when(dom.isNotNull(), F.struct(F.col("column"), dom.alias("dom")))
-        ).alias("bloomed"),
+        F.collect_set(F.when(dom.isNotNull(), F.col("column"))).alias("bloomed"),
     ).first()
-    domains = {b["column"]: b["dom"] for b in r["bloomed"]}
     return {
         "duplicated": r["n"] != r["n_distinct"],
         "chunks": r["chunks"],
         "stamped": r["stamped"] > 0,
-        "bloom_columns": sorted(domains),
-        "bloom_domains": domains,
+        "bloom_columns": sorted(r["bloomed"]),
     }
 
 
@@ -433,7 +427,9 @@ def bloom_candidate_chunks(
     carries a bloom: a silent full scan from a point-lookup API is the
     unprunable-sink bug this engine fails loud on. One probe job answers
     both and reads the hash domain: bloomed rows sort first. (A global
-    aggregate would be two jobs under AQE.)
+    aggregate would be two jobs under AQE.) The point lookup tests blooms
+    inside its key scan (:func:`_key_scan`) instead; this manifest-side
+    form stays for perfbench's traced ``prune.kept_ratio.lookup``.
     """
     from .bloom import hash_query_ids, stats_hit_udf
 
@@ -455,24 +451,115 @@ def bloom_candidate_chunks(
     return st.filter(no_bloom | hit(F.col("stats"))).select("chunk_id")
 
 
-def _key_probe_col(df: DataFrame, key_column: str):
-    """The comparison column for LIST ids over a key column, in the SAME
-    domain the blooms hash (plans/bloom.py): timestamps compare as
-    epoch-µs ints and dates as epoch-day ints (the zone-map convention),
-    everything else as itself. A raw ``isin()`` of epoch ints against a
-    TIMESTAMP/DATE column is an AnalysisException (DATA_DIFF_TYPES), so
-    the exact row filter must translate, not the caller."""
-    t = df.schema[key_column].dataType.typeName()
-    if t == "timestamp":
-        return F.unix_micros(F.col(key_column))
-    if t == "timestamp_ntz":
+def _purge_mask(key, ids):
+    """The keyed ops' ONE row predicate: which rows of a chunk's decoded
+    key column match the ids. The key scan counts them, the lookup keeps
+    and the takedown drops exactly them. ``ids`` come from
+    :func:`_key_scan`; a key of another type is brought into the ids'
+    domain (dates through their epoch days). A NULL key never matches and
+    the ids hold no NULL, so a NULL id matches nothing."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if key.type != ids.type:
+        if pa.types.is_date(key.type):
+            key = key.cast(pa.int32())
+        key = key.cast(ids.type)
+    return pc.is_in(key, value_set=ids, skip_nulls=True)
+
+
+def _key_scan(enc: DataFrame, key_column: str, ids, schema, global_dicts):
+    """The ONE key scan of both keyed ops (:func:`decode_chunks_where_key_in`,
+    :func:`delete_from_sink`): one shuffle-free ``mapInArrow`` job over
+    the key column's chunk rows (a chunk's key column is one row) that
+    tests each chunk's Bloom filter against the hashed ids, decodes only
+    the admitted key payloads and counts the exact hits
+    (:func:`_purge_mask`). Returns the broadcast id set and one
+    ``(chunk_id, n_rows, scanned, bloomed, hits)`` dict per chunk row.
+
+    The id set is built once, NULL-free. DataFrame ids compare in the
+    key's own type and test no bloom. List ids compare in the bloom/zone-
+    map domain (epoch-µs timestamps, epoch-day dates, int64 integers) and
+    are hashed in the domain the writer stamps for the key's type
+    (``bloom_domain``); an id outside it raises rather than silently
+    never matching."""
+    import json
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructType
+
+    from ..codecs.api import decode_array
+    from ..operators.encode import _expected_arrow_fields
+    from ..sources.pages import PAGES_SCHEMA
+    from .bloom import bloom_contains_any, bloom_domain, hash_query_ids
+
+    struct = StructType.fromDDL(schema or PAGES_SCHEMA)
+    if key_column not in struct.fieldNames():
+        raise ValueError(
+            f"key column {key_column!r} is not in the schema — misspelled "
+            "key columns must fail loud, not match no chunk rows"
+        )
+    ((_, want),) = _expected_arrow_fields(StructType([struct[key_column]]))
+    dom, hashes = bloom_domain(want), None
+    if isinstance(ids, DataFrame):
+        col = ids.select(ids.columns[0]).toArrow().column(0)
+        id_set = pc.unique(col.combine_chunks().drop_null().cast(want))
+    elif struct[key_column].dataType.typeName() == "timestamp_ntz":
         raise TypeError(
             "timestamp_ntz key columns have no session-tz-free epoch "
             "mapping for list ids — pass ids as a DataFrame instead"
         )
-    if t == "date":
-        return F.unix_date(F.col(key_column))
-    return F.col(key_column)
+    else:
+        vals = [i for i in ids if i is not None]
+        if dom is not None:
+            hashes = hash_query_ids(vals, dom) if vals else np.zeros(0, np.uint64)
+        id_dom = pa.int64() if dom == "int" else want
+        try:
+            id_set = pa.array(vals, id_dom)
+        except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError, OverflowError) as e:
+            raise TypeError(
+                f"ids do not fit the {id_dom} domain of key column "
+                f"{key_column!r} ({e}) — they would never match"
+            ) from None
+    sc = enc.sparkSession.sparkContext
+    ids_bc, h_bc = sc.broadcast(id_set), sc.broadcast(hashes)
+    gd_bc = sc.broadcast((global_dicts or {}).get(key_column))
+
+    def scan(batches):
+        drop_zip_finders()
+        id_vals, h, gd = ids_bc.value, h_bc.value, gd_bc.value
+        for b in batches:
+            stats = b.column("stats").to_pylist()
+            metas = b.column("meta").to_pylist()
+            payloads = b.column("payload")
+            scanned, bloomed, hits = [], [], []
+            for i in range(b.num_rows):
+                bloom = json.loads(stats[i]).get("bloom") if stats[i] else None
+                bloomed.append(bloom is not None)
+                # chunk rows without a bloom, or hashed in another domain
+                # (a mixed-era sink), are decoded conservatively
+                if h is not None and bloom is not None and bloom["dom"] == dom \
+                        and not bloom_contains_any(bloom, h):
+                    scanned.append(False)
+                    hits.append(0)
+                    continue
+                key = decode_array(payloads[i].as_py(), metas[i], global_dict=gd)
+                scanned.append(True)
+                hits.append(_purge_mask(key, id_vals).true_count)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("chunk_id"), b.column("n_rows"),
+                 pa.array(scanned, pa.bool_()), pa.array(bloomed, pa.bool_()),
+                 pa.array(hits, pa.int64())],
+                names=["chunk_id", "n_rows", "scanned", "bloomed", "hits"],
+            )
+
+    key_rows = enc.filter(F.col("column") == key_column).select(
+        "chunk_id", "n_rows", "stats", "meta", "payload"
+    )
+    out = "chunk_id long, n_rows long, scanned boolean, bloomed boolean, hits long"
+    return ids_bc, key_rows.mapInArrow(scan, out).toArrow().to_pylist()
 
 
 def decode_chunks_where_key_in(
@@ -484,41 +571,66 @@ def decode_chunks_where_key_in(
     global_dicts: dict | None = None,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Bloom-pruned POINT LOOKUP: decode only chunks whose ``key_column``
-    Bloom filter admits at least one of ``ids``, then filter rows to the
-    exact keys — "fetch THESE documents by url/doc_id" touching ~|ids|
-    chunks (+ <1% false positives) of the corpus instead of all of it.
+    """Bloom-pruned POINT LOOKUP: the rows whose ``key_column`` is in
+    ``ids`` — "fetch THESE documents by url/doc_id" decoding ~|ids| chunks
+    of the corpus instead of all of it.
 
     The equality twin of decode_chunks_where: zone maps prune ranges,
     blooms prune point sets (per-chunk [min, max] of a high-cardinality
     key spans nearly the whole domain, so a zone map never prunes an
-    equality probe). Composes with the same projection pushdown
-    (``columns``; a key column left out of it is decoded for the exact row
-    filter, then dropped).
+    equality probe). Three Spark jobs warm: the takedown's key scan
+    (:func:`_key_scan`), then one grouped decode of the chunks with an
+    exact hit (a bloom false positive costs a key decode only) that keeps
+    the rows :func:`_purge_mask` matches. Composes with the same
+    projection pushdown (``columns``; a key column left out of it is
+    decoded for the exact row match, then dropped).
 
-    ``ids`` must match the sink's recorded hash domain (strings for string
-    keys, epoch ints for timestamp/date) — a mismatch raises rather than
-    silently never-matching. Sinks without blooms on ``key_column`` raise;
-    chunk rows without a bloom (mixed-era sinks) decode conservatively.
+    ``ids`` compare as in :func:`_key_scan`: the hash domain comes from
+    the key's type, and a list id outside it raises. A NULL id matches no
+    row, and no ids return no rows. Sinks without blooms on
+    ``key_column`` raise; chunk rows without a bloom (mixed-era sinks)
+    decode conservatively.
 
     ``enc_or_dir``: a sink path (directory pruning applies on
     column-partitioned layouts) or an encoded DataFrame (in-memory
     composition — e.g. a just-encoded table queried without a sink)."""
-    from ..operators.encode import decode_chunks, subset_schema
+    import pyarrow as pa
 
-    ids = list(ids)
+    from ..operators.encode import (
+        _expected_arrow_fields,
+        decode_chunk_group,
+        subset_schema,
+    )
+    from ..sources.pages import PAGES_SCHEMA
+
     enc = (
         read_encoded(spark, enc_or_dir) if isinstance(enc_or_dir, str)
         else enc_or_dir
     )
-    st = enc.filter(F.col("column") == key_column).select("chunk_id", "stats")
-    keep = bloom_candidate_chunks(st, key_column, ids, spark)
+    ids_bc, rows = _key_scan(enc, key_column, ids, schema, global_dicts)
+    if not any(r["bloomed"] for r in rows):
+        raise ValueError(
+            f"no Bloom filters on column {key_column!r} in this sink — "
+            "encode with encode_pages(bloom_by=[...]) or use decode_chunks "
+            "+ a row filter (full scan) explicitly"
+        )
     dec_set = sorted(set(columns) | {key_column}) if columns else None
     data = enc.filter(F.col("column").isin(dec_set)) if dec_set else enc
-    pruned, _ = _chunk_id_filter(data, keep)
-    out_schema = subset_schema(dec_set, schema) if dec_set else schema
-    dec = decode_chunks(pruned, out_schema, global_dicts)
-    dec = dec.filter(_key_probe_col(dec, key_column).isin(ids))
+    hit, _ = _chunk_id_filter(data, {r["chunk_id"] for r in rows if r["hits"]})
+    out_schema = subset_schema(dec_set, schema) if dec_set else schema or PAGES_SCHEMA
+    exp_fields = _expected_arrow_fields(out_schema)
+    exp_names = [n for n, _ in exp_fields]
+    gd_bc = enc.sparkSession.sparkContext.broadcast(global_dicts or {})
+
+    def decode(table: pa.Table) -> pa.Table:
+        drop_zip_finders()
+        chunk = pa.RecordBatch.from_arrays(
+            decode_chunk_group(table, exp_fields, gd_bc.value), names=exp_names
+        )
+        keep = _purge_mask(chunk.column(key_column), ids_bc.value)
+        return pa.Table.from_batches([chunk.filter(keep)])
+
+    dec = hit.groupBy("chunk_id").applyInArrow(decode, out_schema)
     if columns and key_column not in columns:
         dec = dec.drop(key_column)
     return dec
@@ -722,56 +834,6 @@ def encode_resumable(pages: DataFrame, out_dir: str, **encode_kw) -> dict:
     }
 
 
-def _takedown_ids(ids, key_field, want):
-    """A takedown's id set as one NULL-free Arrow array, built once on the
-    driver and broadcast to both takedown kernels. DataFrame ids are
-    collected as Arrow and compare in the key column's own type ``want``.
-    List ids compare in the bloom/zone-map domain (plans/bloom.py):
-    timestamps as epoch-µs, dates as epoch days, every integer width as
-    int64, everything else as itself; an id that does not fit that domain
-    raises rather than silently never matching."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if isinstance(ids, DataFrame):
-        col = ids.select(ids.columns[0]).toArrow().column(0)
-        return pc.unique(col.combine_chunks().drop_null().cast(want))
-    if key_field.dataType.typeName() == "timestamp_ntz":
-        raise TypeError(
-            "timestamp_ntz key columns have no session-tz-free epoch "
-            "mapping for list ids — pass ids as a DataFrame instead"
-        )
-    dom = want
-    if pa.types.is_integer(want) or pa.types.is_timestamp(want) \
-            or pa.types.is_date(want):
-        dom = pa.int64()
-    try:
-        return pa.array([i for i in ids if i is not None], dom)
-    except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError, OverflowError) as e:
-        raise TypeError(
-            f"takedown ids do not fit the {dom} domain of key column "
-            f"{key_field.name!r} ({e}) — they would never match"
-        ) from None
-
-
-def _purge_mask(key, ids):
-    """The takedown's ONE purge predicate: which rows of a chunk's decoded
-    key column are doomed. The key scan counts these rows and the write
-    kernel drops exactly them, so ``rows_deleted`` is what the write
-    removes. ``ids`` come from :func:`_takedown_ids`; a key of another type
-    is brought into the ids' domain (dates through their epoch days). A
-    NULL key is never purged, and the ids hold no NULL, so a NULL among
-    the requested ids matches nothing."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if key.type != ids.type:
-        if pa.types.is_date(key.type):
-            key = key.cast(pa.int32())
-        key = key.cast(ids.type)
-    return pc.is_in(key, value_set=ids, skip_nulls=True)
-
-
 def delete_from_sink(
     spark: SparkSession,
     src_dir: str,
@@ -792,13 +854,11 @@ def delete_from_sink(
     Three passes (six Spark jobs on a clean sink with list ids):
 
     1. the source's one manifest probe (:func:`_sink_probe`: duplicates,
-       stamps, bloomed columns and their hash domains);
-    2. one shuffle-free key scan over the key column's chunk rows (a
-       chunk's key column is one row). Per chunk it tests the chunk's
-       Bloom filter against the hashed ids (plans/bloom.py), decodes only
-       the admitted payloads, and counts the exact hits
-       (:func:`_purge_mask`) — the affected set and ``rows_deleted`` in
-       one collect of metadata-scale rows;
+       stamps, bloomed columns);
+    2. the key scan the point lookup also runs (:func:`_key_scan`: a Bloom
+       test per chunk, a decode of the admitted key payloads, exact hit
+       counts) — the affected set and ``rows_deleted`` in one collect of
+       metadata-scale rows;
     3. one write, committed all-or-nothing (:func:`_rewrite_sink`): every
        unaffected chunk's rows are carried RAW (no decode, no codec CPU —
        pure IO in the same cost class as any compaction pass; batch
@@ -816,11 +876,9 @@ def delete_from_sink(
     on the source and ``ids``, so the same takedown writes the same sink.
 
     ``ids`` is a Python iterable of key values or a single-column
-    DataFrame, collected once as Arrow, for takedown lists that do not
-    exist driver-side. List ids compare in the bloom domain (epoch-µs
-    timestamps, epoch-day dates) and prune the key scan when the sink
-    blooms ``key_column``; DataFrame ids compare in the key's own type
-    and scan every chunk's key. A NULL key is never purged.
+    DataFrame, for takedown lists that do not exist driver-side; both
+    compare as :func:`_key_scan` says, and only list ids prune the scan
+    with the blooms. A NULL key is never purged, and no ids copy the sink.
 
     A sink carrying cluster stamps requires ``cluster_by`` (the stamp
     column's name, which the sink does not record): rewriting its chunks
@@ -832,90 +890,33 @@ def delete_from_sink(
     "rows_deleted", "chunks_key_scanned"}``: ``chunks_new`` counts the
     affected chunks with surviving rows, ``chunks_key_scanned`` the
     chunks whose key payload the scan decoded."""
-    import json
-
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.types import StructType
 
-    from ..codecs.api import decode_array
     from ..operators.encode import (
         _ENCODED_ARROW,
         ENCODED_SCHEMA,
         _expected_arrow_fields,
-        _type_align,
         check_encodable,
         decode_chunk_group,
         encode_chunk,
-        subset_schema,
     )
     from ..sources.pages import PAGES_SCHEMA
-    from .bloom import bloom_contains_any, hash_query_ids
 
     enc, probe = _open_rewrite(
         spark, src_dir, cluster_by,
         "rewriting chunks without re-stamping would make them silently "
         "unprunable; pass the sink's cluster column",
     )
-    subset_schema([key_column], schema)  # a misspelled key raises here
     out_struct = StructType.fromDDL(schema or PAGES_SCHEMA)
     bloom_set = frozenset(probe["bloom_columns"])
     check_encodable(out_struct, cluster_by, bloom_set)
     exp_fields = _expected_arrow_fields(out_struct)
     exp_names = [n for n, _ in exp_fields]
-    want = dict(exp_fields)[key_column]
-    id_set = _takedown_ids(ids, out_struct[key_column], want)
-    dom = probe["bloom_domains"].get(key_column)
-    hashes = None
-    if dom is not None and not isinstance(ids, DataFrame):
-        vals = id_set.to_pylist()
-        hashes = hash_query_ids(vals, dom) if vals else np.zeros(0, np.uint64)
-    sc = spark.sparkContext
-    ids_bc = sc.broadcast(id_set)
-    h_bc = sc.broadcast(hashes)
-    gd_bc = sc.broadcast(global_dicts or {})
-
-    def scan(batches):
-        drop_zip_finders()
-        id_vals, h = ids_bc.value, h_bc.value
-        gd = gd_bc.value.get(key_column)
-        for b in batches:
-            stats = b.column("stats").to_pylist()
-            metas = b.column("meta").to_pylist()
-            payloads = b.column("payload")
-            scanned, hits = [], []
-            for i in range(b.num_rows):
-                bloom = (
-                    json.loads(stats[i]).get("bloom")
-                    if h is not None and stats[i] else None
-                )
-                # chunk rows without a bloom, or hashed in another domain
-                # (a mixed-era sink), are decoded conservatively
-                if bloom is not None and bloom["dom"] == dom \
-                        and not bloom_contains_any(bloom, h):
-                    scanned.append(False)
-                    hits.append(0)
-                    continue
-                key = _type_align(
-                    decode_array(payloads[i].as_py(), metas[i], global_dict=gd),
-                    want,
-                )
-                scanned.append(True)
-                hits.append(_purge_mask(key, id_vals).true_count)
-            yield pa.RecordBatch.from_arrays(
-                [b.column("chunk_id"), b.column("n_rows"),
-                 pa.array(scanned, pa.bool_()), pa.array(hits, pa.int64())],
-                names=["chunk_id", "n_rows", "scanned", "hits"],
-            )
-
-    key_rows = enc.filter(F.col("column") == key_column).select(
-        "chunk_id", "n_rows", "stats", "meta", "payload"
-    )
-    rows = key_rows.mapInArrow(
-        scan, "chunk_id long, n_rows long, scanned boolean, hits long"
-    ).toArrow().to_pylist()
+    ids_bc, rows = _key_scan(enc, key_column, ids, schema, global_dicts)
     hit = {r["chunk_id"]: r for r in rows if r["hits"]}
+    gd_bc = spark.sparkContext.broadcast(global_dicts or {})
 
     def purge(table: pa.Table) -> pa.Table:
         drop_zip_finders()
@@ -931,13 +932,10 @@ def delete_from_sink(
             [encode_chunk(left, codec, gds, cluster_by, bloom_set)]
         )
 
-    _rewrite_sink(
-        enc, dst_dir, set(hit),
-        lambda doomed: doomed.groupBy("chunk_id").applyInArrow(
-            purge, ENCODED_SCHEMA
-        ),
-        partition_by_column,
-    )
+    def rewrite(doomed: DataFrame) -> DataFrame:
+        return doomed.groupBy("chunk_id").applyInArrow(purge, ENCODED_SCHEMA)
+
+    _rewrite_sink(enc, dst_dir, set(hit), rewrite, partition_by_column)
     return {
         "chunks_total": probe["chunks"],
         "chunks_affected": len(hit),
@@ -945,6 +943,8 @@ def delete_from_sink(
         "rows_deleted": sum(r["hits"] for r in hit.values()),
         "chunks_key_scanned": sum(r["scanned"] for r in rows),
     }
+
+
 def compact_sink(
     spark: SparkSession,
     src_dir: str,

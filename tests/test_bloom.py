@@ -124,6 +124,13 @@ def test_point_lookup_prunes_and_is_exact(bloomed_sink):
     want = pages.filter(F.col("url").isin(victims))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+    # a NULL id matches nothing, as in the takedown; no ids match no row
+    with_null = lineage.decode_chunks_where_key_in(
+        spark, src, "url", victims + [None]
+    )
+    assert with_null.exceptAll(got).count() == 0
+    assert got.exceptAll(with_null).count() == 0
+    assert lineage.decode_chunks_where_key_in(spark, src, "url", []).count() == 0
 
     st = enc.filter(F.col("column") == "url").select("chunk_id", "stats")
     cand = lineage.bloom_candidate_chunks(st, "url", victims, spark).count()
@@ -270,6 +277,7 @@ def test_timestamp_key_lookup_and_takedown(spark, tmp_path):
         spark, src, dst, ids, key_column="ts", schema=schema
     )
     assert stats["rows_deleted"] == 2
+    assert got.count() == stats["rows_deleted"]  # the keyed ops agree
     assert stats["chunks_key_scanned"] <= stats["chunks_total"]
     left = decode_chunks(lineage.read_encoded(spark, dst), schema=schema)
     assert left.count() == 398

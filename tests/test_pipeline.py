@@ -197,7 +197,8 @@ def test_resume_takes_arity_from_input(spark, tmp_path):
 def test_sink_reader_declares_schema(spark, tmp_path):
     """read_encoded reads with the declared sink schema: no Spark job (no
     inference), the schema's column order (``column`` last on a
-    column-partitioned sink), and a warm 4-chunk bloom lookup runs <= 4."""
+    column-partitioned sink), and a warm 4-chunk bloom lookup runs <= 3:
+    the key scan and the grouped decode of its hit chunks."""
     from hadoop_etl_udfs_spark.operators.encode import ENCODED_SCHEMA
 
     sc, out, part = spark.sparkContext, str(tmp_path / "s"), str(tmp_path / "p")
@@ -230,7 +231,7 @@ def test_sink_reader_declares_schema(spark, tmp_path):
         spark, out, "url", [url]
     ).collect()
     assert [r["url"] for r in lookup()] == [url]  # cold
-    assert jobs(lookup) <= 4
+    assert jobs(lookup) <= 3
 
 
 def test_column_subset_decode_of_parenthesized_types(spark, tmp_path):
