@@ -52,11 +52,3 @@ def varbytes_to_arrow(
     value_buf = pa.py_buffer(np.ascontiguousarray(data, dtype=np.uint8))
     off_buf = pa.py_buffer(offsets.astype(off_dtype))
     return pa.Array.from_buffers(typ, n, [None, off_buf, value_buf])
-
-
-def varbytes_values(lengths: np.ndarray, data: np.ndarray) -> list[bytes]:
-    """Materialize python bytes values (test/debug only — not the hot path)."""
-    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offs[1:])
-    b = data.tobytes()
-    return [b[offs[i] : offs[i + 1]] for i in range(len(lengths))]

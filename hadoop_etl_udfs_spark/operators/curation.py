@@ -222,7 +222,7 @@ def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                    document they tile [0, n_tokens)
 
     Zero-token documents place nothing (they'd otherwise explode a
-    DESCENDING F.sequence — the _word_ngrams lesson). Global order, the
+    DESCENDING ``F.sequence(0, -1)``). Global order, the
     prefix sum, and the tokenizer are shared with shard packing via
     :func:`_global_token_layout`: one narrow bucket shuffle + an
     O(PACK_BUCKETS) driver stitch; the explode fans each doc to at most

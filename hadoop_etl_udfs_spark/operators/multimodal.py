@@ -1,11 +1,10 @@
 """Multimodal columns: opaque binary payloads with typed metadata.
 
 Images/audio/video are ``binary`` columns; decode / feature-extraction run as
-Arrow-batched kernels over ``mapInPandas``. Real media libs are absent in
-this container, so the decoders are STUBBED (``NotImplementedError`` behind
-``use_real_decoder``) with a deterministic fake (byte histogram + entropy) —
-the Spark-side plumbing (schema, batching, UDF signature, partition shape) is
-real and tested.
+Arrow-batched kernels over ``mapInPandas``. No media library is a
+dependency, so the decode is a deterministic fake (byte histogram + entropy,
+raw byte windows) — the Spark-side plumbing (schema, batching, UDF signature,
+partition shape) is real and tested.
 
 The reference degrades binary to hex strings
 (HdfsSerDeImportService.java:330-331); here binary stays binary end-to-end.
@@ -28,30 +27,7 @@ FEATURE_SCHEMA = (
 )
 
 
-def html_metadata(pages: DataFrame) -> DataFrame:
-    """Typed metadata over the opaque html column — pure built-ins
-    (octet_length, magic-byte probe via substring compare)."""
-    magic = F.when(
-        F.substring(F.col("html").cast("string"), 1, 9) == "<!DOCTYPE", "html"
-    ).otherwise("unknown")
-    return pages.select(
-        "url",
-        F.octet_length("html").alias("n_bytes"),
-        magic.alias("magic"),
-    )
-
-
-def decode_image_stub(payload: bytes) -> None:
-    """Placeholder for a real image decode (PIL/libjpeg not in container)."""
-    raise NotImplementedError(
-        "real media decode requires an image library not present in this "
-        "container; use use_real_decoder=False for the deterministic fake"
-    )
-
-
-def extract_features(
-    pages: DataFrame, use_real_decoder: bool = False, feature_dim: int = 16
-) -> DataFrame:
+def extract_features(pages: DataFrame, feature_dim: int = 16) -> DataFrame:
     """Binary -> feature vector via an Arrow-batched mapInPandas kernel.
 
     The fake featurizer (byte histogram folded to ``feature_dim`` + entropy)
@@ -69,9 +45,6 @@ def extract_features(
                 continue
             # null payloads become empty blobs (n_bytes 0, entropy 0)
             payloads = [p if p is not None else b"" for p in pdf["html"]]
-            if use_real_decoder:
-                for p in payloads:
-                    decode_image_stub(p)
             lens = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
             blob = np.frombuffer(b"".join(payloads), dtype=np.uint8)
             # one histogram pass for the whole batch: bincount keyed on
@@ -111,7 +84,6 @@ def frame_sample(
     key_col: str = "url",
     n_frames: int = 4,
     frame_bytes: int = 64,
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """Frame-sampling plumbing for video-ish binary columns: n evenly spaced
     fixed-width byte windows per blob, one output row per (key, frame_no).
@@ -119,10 +91,10 @@ def frame_sample(
     Offset math (shared with the DuckDB oracle): blobs of length
     L <= frame_bytes yield ONE frame at offset 0; otherwise frame i sits at
     ``(i * (L - frame_bytes)) // (n_frames - 1)`` — first frame at the head,
-    last flush with the tail. A real container/codec frame grabber is
-    stubbed (no media libs in this container); the fake "frame" is the raw
-    byte window, which preserves the exact batch shape (rows × frames),
-    the offset arithmetic, and the output schema a real one would have.
+    last flush with the tail. No container/codec frame grabber is a
+    dependency, so the fake "frame" is the raw byte window, which preserves
+    the exact batch shape (rows × frames), the offset arithmetic, and the
+    output schema a real one would have.
 
     Offsets/lengths and the window gather are ONE cumsum-scatter per Arrow
     batch (same pattern as ``resize_grayscale``) — no per-blob arithmetic;
@@ -143,9 +115,6 @@ def frame_sample(
             if n == 0:
                 continue
             payloads = [p if p is not None else b"" for p in pdf[media_col]]
-            if use_real_decoder:
-                for p in payloads:
-                    decode_image_stub(p)
             lens = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
             blob = np.frombuffer(b"".join(payloads), dtype=np.uint8)
             blob_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
@@ -193,7 +162,6 @@ def resize_grayscale(
     key_col: str = "url",
     src: tuple[int, int] = (32, 32),
     dst: tuple[int, int] = (8, 8),
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """Resize plumbing: views each blob's first src_h*src_w bytes as a
     grayscale bitmap (zero-padded when shorter) and block-mean downsamples
@@ -217,9 +185,6 @@ def resize_grayscale(
             payloads = [
                 p if p is not None else b"" for p in pdf[media_col]
             ]
-            if use_real_decoder:
-                for p in payloads:
-                    decode_image_stub(p)
             lens = np.fromiter(
                 (len(p) for p in payloads), dtype=np.int64, count=n
             )
@@ -249,7 +214,7 @@ def resize_grayscale(
 
 def multimodal_features_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: deterministic pages -> binary feature extract
-    (rows-only check; the media decode itself is stubbed)."""
+    (rows-only check; the media decode itself is the deterministic fake)."""
     from ..sources.pages import synthesize_pages
 
     pages = synthesize_pages(spark, n_docs=500, seed=42)

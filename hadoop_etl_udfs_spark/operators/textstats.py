@@ -498,19 +498,6 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals_df(_docs(spark, sf_dir)).orderBy("doc_id")
 
 
-def _word_ngrams(words, n: int):
-    """Array of space-joined word n-grams of ``words`` (empty when the doc
-    has fewer than n words — guarded because F.sequence(0, negative) would
-    generate a DESCENDING range, not an empty one)."""
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<string>)"))
-
-
 def repetition_signals_df(docs: DataFrame) -> DataFrame:
     """:func:`repetition_signals`'s composable form over an arbitrary
     (doc_id, text) DataFrame.

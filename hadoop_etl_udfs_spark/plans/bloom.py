@@ -55,10 +55,6 @@ BLOOM_K = 6
 _MIN_BITS = 256  # floor so tiny chunks still get a real filter
 BLOOM_VERSION = 1
 
-# domains a bloom can index: exact-match keys with a stable hashable
-# representation on both sides (writer chunk values / reader query ids)
-_STR_DOMAINS = ("string", "large_string")
-
 
 def bloom_domain(arrow_type: pa.DataType) -> str | None:
     """"str" / "int" / None — the hash-input representation for a column

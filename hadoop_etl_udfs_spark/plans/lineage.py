@@ -81,26 +81,6 @@ def read_encoded_colocated(spark: SparkSession, out_dir: str) -> DataFrame:
     return read_encoded(spark, out_dir)
 
 
-def decode_columns(
-    spark: SparkSession,
-    out_dir: str,
-    columns: list[str],
-    full_schema: str | None = None,
-    global_dicts: dict | None = None,
-) -> DataFrame:
-    """Column-pruned decode: only the requested columns' chunk rows are
-    scanned (directory pruning on a column-partitioned sink) and decoded.
-    Grouped path — a column-partitioned sink has no per-chunk colocation."""
-    from ..operators.encode import decode_chunks, subset_schema
-
-    enc = read_encoded(spark, out_dir).filter(F.col("column").isin(columns))
-    return decode_chunks(
-        enc,
-        schema=subset_schema(columns, full_schema),
-        global_dicts=global_dicts,
-    )
-
-
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """Lineage view: payload column pruned at the parquet scan (check
     ReadSchema in .explain — payload must be absent)."""

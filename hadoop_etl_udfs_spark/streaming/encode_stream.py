@@ -9,9 +9,6 @@ processed once; if a micro-batch is replayed after a crash, the encode
 kernel re-derives the same content-addressed chunk ids and the skip-set
 drops already-committed chunks — the sink stays duplicate-free without a
 transactional store.
-
-Also provides a windowed streaming metrics rollup (bytes/ratio per minute of
-processing time) as the engine's observability stream.
 """
 
 from __future__ import annotations
@@ -22,7 +19,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans import lineage
 from ..sources.pages import PAGES_SCHEMA
-from ..worker import drop_zip_finders
 
 
 def _start_append_stream(
@@ -285,144 +281,3 @@ def iceberg_ingest_tick(
         wm_path, _json.dumps({"snapshot_id": current, "files": files_cur})
     )
     return {**out, "noop": False}
-
-
-def streaming_lineage_metrics(
-    spark: SparkSession, out_dir: str
-) -> DataFrame:
-    """Batch view over the continuously-appended manifest: per-column codec
-    mix and compression ratio (what a dashboard would poll) — the same
-    rollup as operators.encode.codec_metrics, over the sink manifest."""
-    from ..operators.encode import codec_metrics
-
-    return codec_metrics(lineage.read_manifest(spark, out_dir))
-
-
-def windowed_event_metrics(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Watermarked windowed aggregation over an event stream (the Structured
-    Streaming pattern the reference lacks entirely — SURVEY.md §2.7): late
-    rows beyond the watermark drop, windows finalize exactly once."""
-    from pyspark.sql import functions as F
-
-    # watermarks require TIMESTAMP (tz) event time; parquet may carry NTZ
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-SESSION_SCHEMA = "user_id long, session_start timestamp, n_events int, total_value double"
-_STATE_SCHEMA = "start long, n int, total double, last long"
-
-
-def sessionize_events(
-    events_stream: DataFrame, gap_seconds: int = 300, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Custom stateful streaming operator: per-user sessionization via
-    ``applyInPandasWithState`` (gap-based sessions — emitted when the
-    event-time watermark passes the session gap). The per-group state is a
-    4-tuple; the kernel is pandas-vectorized within each micro-batch group.
-
-    The reference has no stateful processing of any kind (SURVEY.md §2.7);
-    this is the engine's custom-stateful-operator pattern.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_us = gap_seconds * 1_000_000
-
-    def _emit(user_id, sessions):
-        return pd.DataFrame(
-            {
-                "user_id": [user_id] * len(sessions),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in sessions],
-                "n_events": [n for _, n, _ in sessions],
-                "total_value": [round(t, 4) for _, _, t in sessions],
-            }
-        )
-
-    def update(key, pdfs, state):
-        drop_zip_finders()
-        import numpy as np
-
-        user_id = key[0]
-        if state.hasTimedOut:
-            start, n, total, _last = state.get
-            state.remove()
-            yield _emit(user_id, [(start, n, total)])
-            return
-        parts = list(pdfs)
-        pdf = pd.concat(parts).sort_values("ts") if parts else None
-        cur = tuple(state.get) if state.exists else None  # (start, n, total, last)
-        closed: list[tuple[int, int, float]] = []
-        if pdf is not None and len(pdf):
-            ts_us = (pdf["ts"].astype("int64") // 1000).to_numpy()
-            vals = pdf["value"].to_numpy()
-            # split the sorted batch wherever the gap exceeds the threshold
-            seg_starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(ts_us) > gap_us) + 1)
-            )
-            seg_ends = np.concatenate((seg_starts[1:], [len(ts_us)]))
-            for a, b in zip(seg_starts, seg_ends):
-                s0, s1 = int(ts_us[a]), int(ts_us[b - 1])
-                n_seg, t_seg = int(b - a), float(vals[a:b].sum())
-                if cur is not None and s0 - cur[3] <= gap_us:
-                    cur = (cur[0], cur[1] + n_seg, cur[2] + t_seg, s1)
-                else:
-                    if cur is not None:
-                        closed.append((cur[0], cur[1], cur[2]))
-                    cur = (s0, n_seg, t_seg, s1)
-        if cur is not None:
-            state.update(cur)
-            state.setTimeoutTimestamp(cur[3] // 1000 + gap_seconds * 1000)
-        yield _emit(user_id, closed)
-
-    ev = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def streaming_dedup(
-    docs_stream: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming exact dedup by content fingerprint: the training-pipeline
-    version of operators.dedup.exact_dedup for a document FEED.
-
-    ``dropDuplicatesWithinWatermark`` keeps fingerprint state only for the
-    watermark horizon — duplicates arriving within it drop, state is evicted
-    after, so memory is bounded by (arrival rate x watermark), not corpus
-    size. Cross-horizon dedupe belongs to the batch operator over the
-    accumulated sink."""
-    from ..functions.text import fingerprint
-
-    d = docs_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        d.withColumn("fp", fingerprint(F.col("text")))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["fp"])
-    )

@@ -204,20 +204,9 @@ def test_multimodal_features_deterministic(spark):
     assert rows == again
 
 
-def test_multimodal_real_decoder_is_stubbed(spark):
-    from hadoop_etl_udfs_spark.sources.pages import synthesize_pages
-
-    pages = synthesize_pages(spark, 10, seed=1)
-    with pytest.raises(Exception) as exc_info:
-        multimodal.extract_features(pages, use_real_decoder=True).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
-
-
 def test_frame_sample_offsets_and_padding(spark):
     """Frame sampling: evenly spaced windows, last flush with the tail,
-    short blobs collapse to one whole-blob frame, real decode stubbed."""
+    short blobs collapse to one whole-blob frame."""
     rows = [("a", bytes(range(200))), ("b", b"xy"), ("c", None)]
     df = spark.createDataFrame(rows, "url string, html binary")
     out = multimodal.frame_sample(df, n_frames=4, frame_bytes=64).collect()
@@ -232,8 +221,6 @@ def test_frame_sample_offsets_and_padding(spark):
     assert b["frame_off"] == 0 and bytes(b["frame"]) == b"xy" and b["frame_len"] == 2
     (c,) = by_key["c"]  # null payload -> one empty frame, not a crash
     assert c["frame_len"] == 0
-    with pytest.raises(Exception):
-        multimodal.frame_sample(df, use_real_decoder=True).collect()
     # n_frames=1 on a long blob: single head frame, no division by zero
     one = multimodal.frame_sample(df, n_frames=1, frame_bytes=64).collect()
     assert len(one) == 3

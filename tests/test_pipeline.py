@@ -16,6 +16,7 @@ from hadoop_etl_udfs_spark.operators.encode import (
     codec_metrics,
     decode_chunks,
     encode_pages,
+    subset_schema,
     verify_roundtrip,
 )
 from hadoop_etl_udfs_spark.plans import globaldict, lineage
@@ -241,8 +242,6 @@ def test_column_subset_decode_of_parenthesized_types(spark, tmp_path):
     is checked alone)."""
     from decimal import Decimal
 
-    from hadoop_etl_udfs_spark.operators.encode import subset_schema
-
     wide = "a long, s struct<x:int,y:int>, d decimal(10,2), v array<float>"
     assert StructType.fromDDL(subset_schema(["d", "s"], wide)) == (
         StructType.fromDDL("s struct<x:int,y:int>, d decimal(10,2)")
@@ -256,7 +255,8 @@ def test_column_subset_decode_of_parenthesized_types(spark, tmp_path):
     df = spark.createDataFrame(rows, ddl)
     out = str(tmp_path / "dec")
     lineage.write_encoded(encode_pages(df, partition_cols=["id"]), out)
-    got = lineage.decode_columns(spark, out, ["d"], full_schema=ddl)
+    enc = lineage.read_encoded(spark, out).filter(F.col("column").isin(["d"]))
+    got = decode_chunks(enc, schema=subset_schema(["d"], ddl))
     want = df.select("d")
     assert got.schema == want.schema
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
@@ -353,7 +353,10 @@ def test_column_pruned_decode_on_partitioned_sink(spark, pages):
     out = tempfile.mkdtemp(prefix="colpart_")
     try:
         lineage.write_encoded(encode_pages(pages), out, partition_by_column=True)
-        sub = lineage.decode_columns(spark, out, ["url", "lang"])
+        enc = lineage.read_encoded(spark, out).filter(
+            F.col("column").isin(["url", "lang"])
+        )
+        sub = decode_chunks(enc, schema=subset_schema(["url", "lang"]))
         assert sub.columns == ["url", "lang"]
         fp = lambda df: df.select(
             F.bit_xor(F.xxhash64(*df.columns)).alias("h")
@@ -361,9 +364,6 @@ def test_column_pruned_decode_on_partitioned_sink(spark, pages):
         assert fp(sub) == fp(pages.select("url", "lang"))
         # the scan must prune at the partition level: only the two requested
         # column= directories appear in the scan's partition filters
-        enc = lineage.read_encoded(spark, out).filter(
-            F.col("column").isin(["url", "lang"])
-        )
         plan = enc._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "column" in plan
         # physically: files from other column dirs are never listed as data

@@ -7,13 +7,10 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from hadoop_etl_udfs_spark.operators.encode import verify_roundtrip
+from hadoop_etl_udfs_spark.operators.encode import codec_metrics, verify_roundtrip
 from hadoop_etl_udfs_spark.plans import lineage
 from hadoop_etl_udfs_spark.sources.pages import synthesize_pages
-from hadoop_etl_udfs_spark.streaming.encode_stream import (
-    start_encode_stream,
-    streaming_lineage_metrics,
-)
+from hadoop_etl_udfs_spark.streaming.encode_stream import start_encode_stream
 
 
 import pytest
@@ -64,7 +61,7 @@ def test_streaming_incremental_encode(spark, cluster_by):
         all_pages = wave1.union(wave2)
         result = verify_roundtrip(all_pages, enc)
         assert result["ok"], result
-        metrics = streaming_lineage_metrics(spark, out_dir)
+        metrics = codec_metrics(lineage.read_manifest(spark, out_dir))
         assert metrics.count() >= 5
         # blooms stamp on the streaming path exactly like batch: every
         # chunk of every wave carries one, and a point lookup over the
@@ -268,151 +265,6 @@ def test_decode_stream_refuses_column_partitioned_sink(spark, tmp_path):
         start_decode_stream(
             spark, sink, str(tmp_path / "out"), str(tmp_path / "ckpt")
         )
-
-
-def test_windowed_event_metrics_with_watermark(spark, sf_dir):
-    import os as _os
-    from pyspark.sql.types import StructType
-
-    from hadoop_etl_udfs_spark.streaming.encode_stream import windowed_event_metrics
-
-    base = tempfile.mkdtemp(prefix="winstream_")
-    try:
-        # file stream sources want a directory
-        src_dir = _os.path.join(base, "in")
-        _os.makedirs(src_dir)
-        shutil.copy(
-            _os.path.join(sf_dir, "events.parquet"),
-            _os.path.join(src_dir, "events.parquet"),
-        )
-        schema = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        agg = windowed_event_metrics(spark, stream)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("win_metrics")
-            .outputMode("append")
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.sql("SELECT * FROM win_metrics")
-        # append mode emits only watermark-finalized windows; batch equivalent
-        # computed over the same data must agree on those windows
-        from pyspark.sql import functions as F
-
-        batch = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-
-        expect = (
-            batch.groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-        )
-        got = {tuple(r) for r in out.collect()}
-        want = {tuple(r) for r in expect.collect()}
-        assert got <= want  # finalized windows match the batch computation
-        assert len(got) > 0
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_sessionize_events_stateful(spark):
-    """applyInPandasWithState sessionization: user A's session emits once the
-    event-time watermark (driven by later events) passes the session gap."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from hadoop_etl_udfs_spark.streaming.encode_stream import sessionize_events
-
-    base = tempfile.mkdtemp(prefix="sess_")
-    src = _os.path.join(base, "in")
-    _os.makedirs(src)
-    try:
-        def write_wave(name, rows):
-            (
-                spark.createDataFrame(
-                    rows, "event_id long, ts string, user_id long, value double"
-                )
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .coalesce(1)
-                .write.parquet(_os.path.join(src, name))
-            )
-
-        def run_wave(qname):
-            schema = "event_id long, ts timestamp, user_id long, value double"
-            stream = spark.readStream.schema(schema).parquet(src + "/*")
-            q = (
-                sessionize_events(stream, gap_seconds=300, watermark="1 minute")
-                .writeStream.format("parquet")
-                .option("path", _os.path.join(base, "out"))
-                .option("checkpointLocation", _os.path.join(base, "ck"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-
-        # wave 1: user 1 has a 3-event burst
-        write_wave("w1", [
-            (1, "2024-01-01 10:00:00", 1, 1.0),
-            (2, "2024-01-01 10:01:00", 1, 2.0),
-            (3, "2024-01-01 10:02:00", 1, 3.0),
-        ])
-        run_wave("s1")
-        # wave 2: user 2 events an hour later -> watermark passes user 1's
-        # session timeout -> session finalizes
-        write_wave("w2", [(4, "2024-01-01 11:30:00", 2, 9.0)])
-        run_wave("s2")
-        out = spark.read.parquet(_os.path.join(base, "out"))
-        sessions = {r["user_id"]: r for r in out.collect()}
-        assert 1 in sessions, sessions
-        s = sessions[1]
-        assert s["n_events"] == 3 and abs(s["total_value"] - 6.0) < 1e-9
-        assert str(s["session_start"]).startswith("2024-01-01 10:00:00")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_streaming_dedup_drops_in_watermark_duplicates(spark, tmp_path):
-    """Duplicates replayed across micro-batches within the watermark drop;
-    distinct documents all survive."""
-    from datetime import datetime, timedelta
-
-    from hadoop_etl_udfs_spark.streaming.encode_stream import streaming_dedup
-
-    src = str(tmp_path / "docs_in")
-    out = str(tmp_path / "docs_out")
-    ckpt = str(tmp_path / "ckpt")
-    base = datetime(2026, 1, 1)
-    wave1 = [(i, base + timedelta(seconds=i), f"doc text {i % 3}") for i in range(6)]
-    wave2 = [(i + 10, base + timedelta(seconds=30 + i), f"doc text {i % 3}")
-             for i in range(3)]  # same 3 fingerprints again
-    schema = "doc_id long, ts timestamp, text string"
-    spark.createDataFrame(wave1, schema).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    dedup = streaming_dedup(stream, watermark="1 hour")
-    q = (dedup.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "first dedup wave timed out"
-    spark.createDataFrame(wave2, schema).coalesce(1).write.mode("append").parquet(src)
-    q2 = (streaming_dedup(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src),
-            watermark="1 hour")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
-    assert q2.awaitTermination(120), "second dedup wave timed out"
-    got = spark.read.parquet(out)
-    # only the 3 distinct fingerprints survive, from their first occurrence
-    fps = [r["fp"] for r in got.select("fp").collect()]
-    assert sorted(fps) == sorted(set(fps))
-    assert len(set(fps)) == 3
-    assert got.filter(F.col("doc_id") >= 10).count() == 0  # replays dropped
 
 
 def test_ingest_tick_survives_expired_watermark_snapshot(spark, tmp_path):
