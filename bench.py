@@ -252,7 +252,7 @@ def run_dedup_pipeline(pages_path: str, target_docs: int) -> dict:
     walls (round-5 verdict item 4): each stage is materialized with its own
     timer — localCheckpoint() forces the stage AND hands the next stage a
     computed input. Stage boundaries match the cluster-scale cost model:
-    signatures = the one shingle explode+groupBy shuffle; pairs = band
+    signatures = one doc-local minhash kernel, no shuffle; pairs = band
     explode + capped bucket self-join; cc = the O(log n) star
     alternations."""
     from pyspark.sql import functions as F

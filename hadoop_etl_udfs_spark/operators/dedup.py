@@ -1,6 +1,9 @@
 """Deduplication operators for training-data pipelines: exact, MinHash+LSH,
-SimHash, n-gram Jaccard. All single-pass DataFrame compositions (map-side
-combinable aggregates; no per-row Python).
+SimHash, n-gram Jaccard. Single-pass DataFrame compositions of map-side
+combinable aggregates, except the MinHash signature stage: Spark builds
+each doc's list of shingle base hashes and one doc-local numpy kernel
+(``mapInArrow``, one Arrow batch at a time, no per-row Python) takes the
+per-permutation minima.
 
 No reference counterpart (the reference moves data, it never dedups) — these
 are the "beyond the reference" training-data operators the engine needs at
@@ -12,10 +15,15 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.text import fingerprint
+from ..worker import drop_zip_finders
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,20 +43,6 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingles(docs: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, shingle) word k-grams via array ops (no Python)."""
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    sh = F.expr(
-        f"transform(sequence(0, greatest(size({'w'}), {k}) - {k}), "
-        f"i -> concat_ws(' ', slice(w, i + 1, {k})))"
-    )
-    return (
-        docs.select("doc_id", w.alias("w"))
-        .select("doc_id", F.explode(sh).alias("shingle"))
-        .filter(F.col("shingle") != "")
-    )
-
-
 N_PERM = 32
 BAND_ROWS = 4  # 8 bands x 4 rows
 
@@ -60,13 +54,11 @@ _SEP = "\x1f"  # unit separator between hash-input fields
 # measured dedup-pipeline wall. Standard MinHash practice hashes the shingle
 # ONCE and derives the permutations with a 2-universal integer family:
 #     mix_p(h) = (a1_p * hi(h) + a2_p * lo(h) + b_p) mod (2^61 - 1)
-# over the base hash's 32-bit halves — same MinHash guarantees, ~n_perm×
-# less string hashing, and every term stays under 2^62 so Spark 4's ANSI
-# long arithmetic cannot overflow (a1,a2 < 2^29; hi,lo < 2^32). The split
-# into halves is what makes the multiply ANSI-safe: a*h on the raw 64-bit
-# value would overflow and THROW. All operands are non-negative
-# (shiftrightunsigned / masked low bits), so `%` == pmod in both engines.
-# DuckDB reproduces the mix exactly on BIGINT — the oracle generator in
+# over the base hash's unsigned 32-bit halves — same MinHash guarantees,
+# ~n_perm× less string hashing. a1, a2 < 2^29 and hi, lo < 2^32 keep each
+# product under 2^61 and the sum under 2^63, so the mix never overflows a
+# 64-bit integer: not in the signature kernel's uint64 numpy, and not in
+# DuckDB's BIGINT, which reproduces it exactly — the oracle generator in
 # __spark_entry__ imports these SAME constants (CLAUDE.md anti-drift rule).
 _MIX_PRIME = (1 << 61) - 1
 _MIX_SEED = 20240817
@@ -76,8 +68,6 @@ def _mix_params(n_perm: int = N_PERM, seed: int = _MIX_SEED) -> list[tuple[int, 
     """Deterministic (a1, a2, b) per permutation: a1, a2 in [1, 2^29),
     b in [0, 2^61-1). Pure function of the seed — the DuckDB oracle embeds
     the same literals."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     out = []
     for _ in range(n_perm):
@@ -86,15 +76,6 @@ def _mix_params(n_perm: int = N_PERM, seed: int = _MIX_SEED) -> list[tuple[int, 
         b = int(rng.integers(0, _MIX_PRIME))
         out.append((a1, a2, b))
     return out
-
-
-def _mix_expr(h, a1: int, a2: int, b: int):
-    """The Spark column form of mix_p over a non-negative-or-signed 64-bit
-    base hash column ``h`` (hi/lo extraction is unsigned, so the mix input
-    is always non-negative even for raw xxhash64 values)."""
-    hi = F.shiftrightunsigned(h, 32)
-    lo = h.bitwiseAND(F.lit((1 << 32) - 1))
-    return (F.lit(a1) * hi + F.lit(a2) * lo + F.lit(b)) % F.lit(_MIX_PRIME)
 
 
 def _hash64(cols: list, seed: int, method: str = "xxhash64"):
@@ -108,12 +89,30 @@ def _hash64(cols: list, seed: int, method: str = "xxhash64"):
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
+def _words(docs: DataFrame) -> DataFrame:
+    """(doc_id, w) with ``w`` the doc's whitespace-split words. Blank and
+    NULL texts are dropped: they have no shingle (split yields [''], the
+    one shingle the string form's ``<> ''`` filter removes). Binding ``w``
+    in its own select evaluates the split once per doc, not once per use
+    inside the shingle lambdas."""
+    return docs.filter(F.trim(F.col("text")) != "").select(
+        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
+    )
+
+
+# word 3-gram shingle strings of ``w``, built as the DuckDB oracles build
+# them; a doc of fewer than 3 words has one shingle of all its words
+_SHINGLE_SQL = (
+    "transform(sequence(0, greatest(size(w), 3) - 3), "
+    "i -> concat_ws(' ', slice(w, i + 1, 3)))"
+)
+
 # string-free shingle base hashes for the PRODUCTION signature path: one
 # xxhash64 over the k-gram's WORDS directly (tokens never contain the split
 # whitespace, so hashing the 3 fields distinguishes exactly the triples the
 # concat string did). F.get past the array end yields NULL, which xxhash64
 # skips — short docs (< k words) hash their available words, same membership
-# as the string path's partial concat. k=3 pinned like _shingles.
+# as the string path's partial concat. k=3 pinned like _SHINGLE_SQL.
 _BASE_HASH_SQL = (
     "transform(sequence(0, greatest(size(w), 3) - 3), "
     "i -> xxhash64(get(w, i), get(w, i + 1), get(w, i + 2), 0))"
@@ -122,8 +121,9 @@ _BASE_HASH_SQL = (
 
 def _shingle_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, sh) rows where ``sh`` = xxhash64 of the word k-gram — the
-    string-free analog of :func:`_shingles` (same ``_BASE_HASH_SQL``
-    kernel the minhash rewrite measured at 4x the string path).
+    string-free analog of the ``_SHINGLE_SQL`` strings (same
+    ``_BASE_HASH_SQL`` expression the minhash rewrite measured at 4x the
+    string path).
 
     Distinct-shingle semantics carry over 1:1 up to 64-bit hash
     collisions (p ≈ n²·2⁻⁶⁴ per doc pair — negligible at any corpus
@@ -133,62 +133,103 @@ def _shingle_hashes(docs: DataFrame) -> DataFrame:
     hashes equal those over strings. What changes at scale: no shingle
     string is ever built (the profiled 5.3-of-7.3s term) and the join/
     shuffle keys are 8-byte longs instead of ~20-byte strings."""
-    return (
-        docs.filter(F.trim(F.col("text")) != "")
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
-        .select("doc_id", F.explode(F.expr(_BASE_HASH_SQL)).alias("sh"))
+    return _words(docs).select(
+        "doc_id", F.explode(F.expr(_BASE_HASH_SQL)).alias("sh")
     )
+
+
+# hash values the signature kernel mixes at a time: bounds its temporaries
+# (a few 8 MB arrays) whatever the Arrow batch or document size
+_KERNEL_SLICE = 1 << 20
+
+
+def _minhash_minima(
+    h: np.ndarray, starts: np.ndarray, params: list[tuple[int, int, int]]
+) -> np.ndarray:
+    """(len(params), len(starts)) int64 minima of mix_p over each doc's
+    base hashes. ``h`` holds every doc's hashes back to back as uint64;
+    ``starts`` is each doc's first index, strictly increasing from 0 (no
+    empty doc, which ``reduceat`` would read as its successor's first
+    value). ``h`` is mixed one permutation and at most ``_KERNEL_SLICE``
+    values at a time; a doc cut by a slice edge folds its partial minima
+    into the output."""
+    prime = np.uint64(_MIX_PRIME)
+    out = np.full((len(params), starts.size), prime, np.uint64)
+    for lo in range(0, h.size, _KERNEL_SLICE):
+        part = h[lo:lo + _KERNEL_SLICE]
+        d0 = np.searchsorted(starts, lo, "right") - 1
+        d1 = np.searchsorted(starts, lo + part.size, "left")
+        at = np.maximum(starts[d0:d1] - lo, 0)
+        hi32 = part >> np.uint64(32)
+        lo32 = part & np.uint64(0xFFFFFFFF)
+        v, t = np.empty_like(part), np.empty_like(part)
+        for p, (a1, a2, b) in enumerate(params):
+            np.multiply(hi32, np.uint64(a1), out=v)
+            np.multiply(lo32, np.uint64(a2), out=t)
+            v += t
+            v += np.uint64(b)
+            v %= prime
+            np.minimum(out[p, d0:d1], np.minimum.reduceat(v, at),
+                       out=out[p, d0:d1])
+    return out.view(np.int64)
 
 
 def minhash_signatures(
     docs: DataFrame, n_perm: int = N_PERM, method: str = "xxhash64"
 ) -> DataFrame:
-    """One row per doc with n_perm minhash values: single explode + one
-    groupBy with n_perm min() aggregates (map-side combine keeps the shuffle
-    at n_perm longs per doc).
+    """One row per doc with n_perm minhash values ``mh0..mh{n_perm-1}``.
 
-    Round 7, two-level rewrite of the signature stage (was 61% of the
-    measured dedup-pipeline wall):
+    ``doc_id`` must be a key of ``docs``: each input row with a shingle
+    emits its own row (rows sharing an id are not merged). Blank and NULL
+    texts have no shingle and emit no row. No step moves data between
+    partitions:
 
-    1. ONE base hash per shingle + n_perm 2-universal integer mixes
-       (:func:`_mix_params`) instead of n_perm full string hashes.
-    2. For the production method the base hash never BUILDS the shingle
-       string at all: profiling at 205k docs put the stage at 7.3 s of
-       which 5.3 s was the slice+concat_ws string construction (explode +
-       shuffle + 32 min aggregates cost only ~0.9 s), so ``_BASE_HASH_SQL``
-       hashes the k-gram's words in place inside codegen — measured
-       1.8 s for the identical signature output shape, 4x.
+    1. One projection builds each doc's ``array<long>`` of shingle base
+       hashes. ``xxhash64`` (production) uses ``_BASE_HASH_SQL``, which
+       hashes each k-gram's words in place: round 7 measured the shingle
+       string construction at 5.3 of the stage's 7.3 s at 205k docs.
+       ``md5`` hashes the ``_SHINGLE_SQL`` strings, the values the DuckDB
+       oracle of the ``*_checked`` queries builds.
+    2. One ``mapInArrow`` kernel applies the n_perm mixes of
+       :func:`_mix_params` in uint64 numpy and takes each doc's minima
+       (:func:`_minhash_minima`).
 
-    The md5 method keeps the ``*_checked`` oracle contract: it still
-    builds shingle strings exactly as the DuckDB oracle does and derives
-    the same base hash + mixes value-for-value (correctness path — runs
-    on driver-gate tables, never the corpus hot path).
-
-    Scale note: a stopword shingle adds one exploded row per doc it appears
-    in — LINEAR in corpus size, combined map-side before any shuffle (unlike
-    a shingle-equality join, where a hot shingle is quadratic — see
-    ngram_jaccard_pairs' document-frequency cap). MinHash semantics need the
-    full shingle multiset, so no cap is applied here."""
+    The kernel replaced an explode to one row per shingle, a shuffle and a
+    groupBy with n_perm ``min`` aggregates. On a 4-core host the traced
+    signature stage of ``perfbench``'s ``dedup_pipeline`` went 1.13 →
+    0.38 s and its job CPU 4.62 → 3.51 CPU-s (median of 12 interleaved
+    runs)."""
+    params = _mix_params(n_perm)
     if method == "xxhash64":
-        # whitespace-only docs have no shingles in the string path (its ''
-        # filter) — the pre-filter preserves that; NULL text filters out in
-        # both paths
-        sh = (
-            docs.filter(F.trim(F.col("text")) != "")
-            .select(
-                "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
-            )
-            .select("doc_id", F.explode(F.expr(_BASE_HASH_SQL)).alias("_h"))
-        )
+        hashes = F.expr(_BASE_HASH_SQL)
     else:
-        sh = _shingles(docs).withColumn(
-            "_h", _hash64([F.col("shingle")], 0, method)
+        hashes = F.transform(
+            F.expr(_SHINGLE_SQL), lambda s: _hash64([s], 0, method)
         )
-    mins = [
-        F.min(_mix_expr(F.col("_h"), a1, a2, b)).alias(f"mh{p}")
-        for p, (a1, a2, b) in enumerate(_mix_params(n_perm))
-    ]
-    return sh.groupBy("doc_id").agg(*mins)
+    lists = _words(docs).select("doc_id", hashes.alias("h"))
+    schema = StructType(
+        [lists.schema["doc_id"]]
+        + [StructField(f"mh{p}", LongType()) for p in range(n_perm)]
+    )
+
+    def kernel(batches):
+        drop_zip_finders()
+        for batch in batches:
+            arr = batch.column(1)
+            lengths = pc.list_value_length(arr).fill_null(0).to_numpy()
+            keep = np.flatnonzero(lengths)
+            if keep.size == 0:
+                continue
+            h = arr.flatten().to_numpy().view(np.uint64)
+            starts = np.zeros(keep.size, np.int64)
+            np.cumsum(lengths[keep][:-1], out=starts[1:])
+            mins = _minhash_minima(h, starts, params)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(keep)] + [pa.array(m) for m in mins],
+                names=schema.fieldNames(),
+            )
+
+    return lists.mapInArrow(kernel, schema)
 
 
 MAX_BAND_BUCKET = 64  # band buckets bigger than this are skipped entirely
@@ -429,6 +470,19 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _canon_edges(children.union(selfs))
 
 
+def _checkpoint_observed(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """``e.localCheckpoint()`` plus the edge set's signature (edge count,
+    xor of the edge hashes), observed by the checkpoint's own job."""
+    obs = Observation()
+    e = e.observe(
+        obs,
+        F.count("*").alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
+    ).localCheckpoint()
+    sig = obs.get
+    return e, (sig["n"], sig["h"])
+
+
 def duplicate_clusters_star(
     pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b",
     max_iter: int = 25, stats: dict | None = None,
@@ -454,20 +508,17 @@ def duplicate_clusters_star(
     raw = pairs.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint()
-    e = _canon_edges(raw).localCheckpoint()
+    # every edge set's (count, xor of edge hashes) is observed by the job
+    # that checkpoints it: no separate count or aggregate job per step
+    e, (n_edges, _) = _checkpoint_observed(_canon_edges(raw))
     if stats is not None:
-        stats["n_edges"] = e.count()
+        stats["n_edges"] = n_edges
     # node universe from the RAW pairs: a self-paired doc is a singleton
     # cluster of itself (canon drops the self-loop, not the node)
     all_nodes = _sym(raw).select("u").distinct().localCheckpoint()
     prev = None
     for it in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        sig = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).collect()[0]
-        cur = (sig["n"], sig["h"])
+        e, cur = _checkpoint_observed(_small_star(_large_star(e)))
         if cur == prev:
             if stats is not None:
                 stats["alternations"] = it + 1

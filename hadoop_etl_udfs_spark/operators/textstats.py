@@ -1367,7 +1367,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     break on doc_id in both engines.
 
     Scale plan (100 TB): NO corpus shuffle at all. The filtered word
-    array binds once per doc (two-step select, the _shingles pattern);
+    array binds once per doc (two-step select, the dedup._words pattern);
     dl and one tf per query term fold out of it with array HOFs in the
     scan stage — |Q| counting passes over an in-memory array beats an
     explode of every token by orders of magnitude in shuffle bytes. The

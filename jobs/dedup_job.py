@@ -32,7 +32,8 @@ def main() -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--input-format", default="parquet",
                    choices=["parquet", "iceberg"])
-    p.add_argument("--id-col", default="doc_id")
+    p.add_argument("--id-col", default="doc_id",
+                   help="a key of the input: each row is signed as one doc")
     p.add_argument("--text-col", default="text")
     p.add_argument("--max-band-bucket", type=int, default=None,
                    help="band-bucket size cap (default: operator constant)")

@@ -157,9 +157,9 @@ def test_ngram_jaccard_exact_value(spark):
         [(1, t1, "en", "s"), (2, t2, "en", "s")],
         "doc_id long, text string, lang string, source string",
     )
-    sh = dedup._shingles(docs)
-    from pyspark.sql import Window  # noqa: F401
-
+    sh = dedup._words(docs).select(
+        "doc_id", F.explode(F.expr(dedup._SHINGLE_SQL)).alias("shingle")
+    )
     rows = sh.collect()
     s1 = {r["shingle"] for r in rows if r["doc_id"] == 1}
     s2 = {r["shingle"] for r in rows if r["doc_id"] == 2}
@@ -522,6 +522,113 @@ def test_minhash_mix_params_domain():
         assert a1 * ((1 << 32) - 1) + a2 * ((1 << 32) - 1) + b < (1 << 63)
 
 
+def _python_minhash(hashes_by_doc: dict) -> dict:
+    """Per-doc minima of every _mix_params mix, in Python integers."""
+    params = dedup._mix_params()
+    return {
+        d: [
+            min((a1 * ((h & (2**64 - 1)) >> 32) + a2 * (h & (2**32 - 1)) + b)
+                % dedup._MIX_PRIME for h in hs)
+            for a1, a2, b in params
+        ]
+        for d, hs in hashes_by_doc.items()
+    }
+
+
+def test_minhash_kernel_matches_python_mixes(spark):
+    """The doc-local signature kernel against mixes computed in plain
+    Python, for both hash methods. The md5 base hashes are rebuilt with
+    hashlib from Python shingles; the xxhash64 ones come from the same
+    Spark projection the kernel reads. One partition spans several Arrow
+    batches and one partition is empty."""
+    import hashlib
+    import re
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    rows = [
+        (1, "alpha beta gamma delta epsilon zeta eta"),
+        (2, "alpha beta gamma delta epsilon zeta eta"),    # repeated doc
+        (3, "alpha beta gamma delta epsilon zeta theta"),  # near-duplicate
+        (4, "one two"),                                    # < 3 words
+        (5, "   "),                                        # whitespace-only
+        (6, None),                                         # NULL text
+        (7, "the cat sat on the mat and the cat sat"),     # repeated shingles
+        (8, "solo"),
+        (9, "  padded\ttext with  tabs and spaces "),
+    ] + [(10 + i, " ".join(f"w{i * 7 + j}" for j in range(5 + i)))
+         for i in range(6)]
+    schema = StructType([StructField("doc_id", LongType()),
+                         StructField("text", StringType())])
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        sc.parallelize(rows, 1).union(sc.parallelize([], 1)), schema
+    )
+    assert docs.rdd.glom().map(len).collect() == [len(rows), 0]
+
+    def md5_hashes(text):
+        w = re.split(r"\s+", text.strip(" "))
+        sh = [" ".join(w[i:i + 3]) for i in range(max(len(w), 3) - 2)]
+        return [int(hashlib.md5(f"{s}\x1f0".encode()).hexdigest()[:15], 16)
+                for s in sh if s]
+
+    xx = {}
+    for r in dedup._shingle_hashes(docs).collect():
+        xx.setdefault(r["doc_id"], []).append(r["sh"])
+    want = {
+        "xxhash64": _python_minhash(xx),
+        "md5": _python_minhash({
+            d: md5_hashes(t) for d, t in rows if t is not None and t.strip(" ")
+        }),
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        for method in ("xxhash64", "md5"):
+            got = {
+                r["doc_id"]: [r[f"mh{p}"] for p in range(dedup.N_PERM)]
+                for r in dedup.minhash_signatures(docs, method=method).collect()
+            }
+            assert set(got) == set(range(1, 16)) - {5, 6}, method
+            assert got == want[method], method
+            assert got[1] == got[2] and got[1] != got[3]
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_minhash_minima_fold_docs_cut_by_slice_edges(monkeypatch):
+    """The kernel mixes a bounded slice of hash values at a time; docs that
+    straddle a slice edge, or span several slices, get the same minima."""
+    rng = np.random.default_rng(3)
+    lengths = [1, 7, 300, 2, 45, 1, 90]
+    h = rng.integers(-2**63, 2**63 - 1, sum(lengths), dtype=np.int64)
+    starts = np.cumsum([0] + lengths[:-1])
+    whole = dedup._minhash_minima(h.view(np.uint64), starts, dedup._mix_params())
+    monkeypatch.setattr(dedup, "_KERNEL_SLICE", 64)
+    sliced = dedup._minhash_minima(h.view(np.uint64), starts, dedup._mix_params())
+    assert whole.shape == (dedup.N_PERM, len(lengths))
+    assert (whole == sliced).all()
+    want = _python_minhash({
+        d: [int(x) for x in h[s:s + n]]
+        for d, (s, n) in enumerate(zip(starts, lengths))
+    })
+    assert [list(whole[:, d]) for d in range(len(lengths))] == [
+        want[d] for d in range(len(lengths))
+    ]
+
+
+def test_minhash_signatures_plan_is_doc_local(spark):
+    """No shuffle and no explode: the signature stage is one projection
+    feeding one doc-local kernel."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for method in ("xxhash64", "md5"):
+        plan = (dedup.minhash_signatures(docs, method=method)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert "MapInArrow" in plan, plan
+        assert "Exchange" not in plan and "Generate" not in plan, plan
+
+
 def test_minhash_band_bucket_cap(spark, tmp_path):
     """A class of K identical docs shares every band signature -> K^2
     candidate rows without a bound. The band-bucket cap must drop over-cap
@@ -589,6 +696,39 @@ def test_duplicate_clusters_star_planted_graph(spark):
     }
     assert all(out[d]["cluster_size"] == 5 for d in (10, 11, 12, 13, 14))
     assert out[20]["cluster_size"] == 2 and out[30]["cluster_size"] == 3
+
+
+def test_duplicate_clusters_star_job_count(spark):
+    """The convergence signature of each star alternation and the edge
+    count ride on the checkpoint jobs as observed metrics, not as jobs of
+    their own. The planted graph takes 3 alternations (the third confirms
+    the fixpoint)."""
+    from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters_star
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def n_jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None).size()
+
+    # chain 10-11-12-13-14, pair 20-21, triangle 30-31-32, self-pair 40
+    pairs = spark.createDataFrame(
+        [(10, 11), (11, 12), (12, 13), (13, 14), (20, 21),
+         (30, 31), (31, 32), (30, 32), (40, 40)],
+        "doc_a long, doc_b long",
+    ).localCheckpoint()
+    stats: dict = {}
+    before = n_jobs()
+    labels = duplicate_clusters_star(pairs, stats=stats).localCheckpoint()
+    # 40 when the signature and the edge count were jobs of their own
+    assert n_jobs() - before == 32
+    assert stats == {"n_edges": 8, "alternations": 3}
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        (10, 10, 5), (11, 10, 5), (12, 10, 5), (13, 10, 5), (14, 10, 5),
+        (20, 20, 2), (21, 20, 2),
+        (30, 30, 3), (31, 30, 3), (32, 30, 3),
+        (40, 40, 1),
+    ]
 
 
 def test_containment_pairs_planted_excerpt(spark, tmp_path):
