@@ -1,9 +1,12 @@
 """Deduplication operators for training-data pipelines: exact, MinHash+LSH,
-SimHash, n-gram Jaccard. Single-pass DataFrame compositions of map-side
-combinable aggregates, except the MinHash signature stage: Spark builds
-each doc's list of shingle base hashes and one doc-local numpy kernel
-(``mapInArrow``, one Arrow batch at a time, no per-row Python) takes the
-per-permutation minima.
+SimHash, n-gram Jaccard, and connected components over candidate pairs.
+Single-pass DataFrame compositions of map-side combinable aggregates,
+except two stages that run numpy kernels through ``mapInArrow`` (no
+per-row Python). For MinHash signatures, Spark builds each doc's list of
+shingle base hashes and a doc-local kernel takes the per-permutation
+minima, one Arrow batch at a time. In star contraction, each large-star
+or small-star op is one hash exchange and one kernel over a whole
+shuffle partition of edges.
 
 No reference counterpart (the reference moves data, it never dedups) — these
 are the "beyond the reference" training-data operators the engine needs at
@@ -18,9 +21,9 @@ import os
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from ..functions.text import fingerprint
 from ..worker import drop_zip_finders
@@ -316,9 +319,7 @@ def lsh_band_pairs(
     # unordered pair exactly once via an index-offset transform. Same
     # pairs, same n_shared_bands (= co-occurring buckets), one subtree:
     # 1 scan, 4 exchanges, joins eliminated (…_after.txt).
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("band", "sig")
+    w = Window.partitionBy("band", "sig")
     kept = (
         buckets.withColumn("_bn", F.count("*").over(w))
         .filter(
@@ -419,68 +420,62 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash64(spark, sf_dir, method="md5", n_bits=32)
 
 
-def _canon_edges(e: DataFrame) -> DataFrame:
-    """Undirected edge set in canonical (lo, hi) form, no self-loops."""
-    return (
-        e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
 def _sym(e: DataFrame) -> DataFrame:
     return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """Kiveris et al. large-star: every node u links each LARGER neighbor to
-    min(Γ(u) ∪ {u}) — long tails collapse toward small labels.
+_STAR_EDGES = StructType([
+    StructField("u", LongType()), StructField("v", LongType()),
+    StructField("changed", BooleanType()),
+])
 
-    Round 9 (guide §2.4): the per-node minimum rides a WINDOW over the
-    same hashpartitioning(u) instead of a groupBy + self-JOIN back — the
-    aggregate and its consumer share one exchange, removing a join and an
-    exchange per star op. Exact same edge algebra (window parity pinned
-    by test_star_ops_window_form_matches_join_form); measured 6.6 s ->
-    4.3 s for the full contraction at 451k candidate edges (interleaved
-    minima, alternation count unchanged)."""
-    from pyspark.sql import Window as W
 
-    sym = _sym(e)
-    m = F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
-    return _canon_edges(
-        sym.withColumn("m", m)
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+def _grouped_edges(batches, key: int):
+    """One partition's distinct edges as int64 arrays ``k, o`` sorted by
+    (k, o), ``k`` being the endpoint in column ``key``, and the mask of
+    where each ``k`` group starts; None for an empty partition."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return None
+    k, o = (
+        np.concatenate([b.column(c).to_numpy() for b in batches])
+        for c in (key, 1 - key)
+    )
+    order = np.lexsort((o, k))
+    k, o = k[order], o[order]
+    first = np.r_[True, k[1:] != k[:-1]]
+    keep = first | np.r_[True, o[1:] != o[:-1]]
+    return k[keep], o[keep], first[keep]
+
+
+def _star_batch(u, v, changed) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(x) for x in (u, v, changed)], names=_STAR_EDGES.fieldNames()
     )
 
 
-def _small_star(e: DataFrame) -> DataFrame:
-    """Kiveris et al. small-star: every node u rewires its SMALLER
-    neighbors (and itself) to their minimum — stars flatten to the true
-    component minimum. Same one-exchange window form as
-    :func:`_large_star` (round 9)."""
-    from pyspark.sql import Window as W
-
-    le = _sym(e).filter(F.col("v") < F.col("u"))
-    le = le.withColumn("m", F.min("v").over(W.partitionBy("u")))
-    children = le.filter(F.col("v") != F.col("m")).select(
-        F.col("v").alias("u"), F.col("m").alias("v")
-    )
-    selfs = le.select("u", F.col("m").alias("v")).distinct()
-    return _canon_edges(children.union(selfs))
+def _large_star_kernel(batches):
+    """Large-star over one ``u``-partition of the symmetric edges: each
+    node u links every larger neighbour v to m = min(Γ(u) ∪ {u}). Flags
+    the emitted edges whose m is not u."""
+    drop_zip_finders()
+    if (g := _grouped_edges(batches, 0)) is not None:
+        u, v, first = g
+        m = np.minimum(u, v[first][np.cumsum(first) - 1])  # v ascends per u
+        up = v > u
+        yield _star_batch(m[up], v[up], m[up] != u[up])
 
 
-def _checkpoint_observed(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """``e.localCheckpoint()`` plus the edge set's signature (edge count,
-    xor of the edge hashes), observed by the checkpoint's own job."""
-    obs = Observation()
-    e = e.observe(
-        obs,
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).localCheckpoint()
-    sig = obs.get
-    return e, (sig["n"], sig["h"])
+def _small_star_kernel(batches):
+    """Small-star over one ``v``-partition of the ``u < v`` edges: each
+    node v links itself and its smaller neighbours to m, the smallest of
+    them. Flags each node with more than one smaller neighbour."""
+    drop_zip_finders()
+    if (g := _grouped_edges(batches, 1)) is not None:
+        v, u, first = g
+        m = u[first][np.cumsum(first) - 1]
+        last = np.r_[first[1:], True]
+        yield _star_batch(m, np.where(first, v, u), first & ~last)
 
 
 def duplicate_clusters_star(
@@ -491,64 +486,69 @@ def duplicate_clusters_star(
     turns pairwise evidence into dedup DECISIONS: each document's
     ``cluster_rep`` is the smallest doc_id reachable through the pair graph
     (keep the rep, drop the rest), plus the cluster's size, for every
-    document in some pair (singletons need no dedup decision).
+    document in some pair (singletons need no dedup decision). Ids are
+    integers and come out as longs; the rows come in no set order.
 
     Algorithm: alternating large-star/small-star contraction (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC 2014). It
     needs O(log n) ALTERNATIONS regardless of the graph's diameter, where
     min-label propagation needs O(diameter) rounds (a 200-node chain = 200
-    rounds).
-    ``stats``, when passed, receives {"alternations", "n_edges"} — bench.py
-    uses it to report the measured O(log n) round count."""
-    # materialize the pairs projection ONCE at entry: the canon-edge
-    # checkpoint and the node-universe job below would otherwise EACH
-    # re-evaluate the caller's lazy upstream (typically the full
-    # minhash/band-join pipeline) — 3 evaluations total, measured 7x on
-    # the bench's 205k-doc pipeline before the round-6 fix
+    rounds). Each star op is one hash exchange and one ``mapInArrow``
+    kernel: large-star groups the symmetric edges by ``u``, small-star
+    the ``u < v`` edges by ``v``. Each kernel sorts and dedups its own
+    input, holding one shuffle partition's edges as two int64 arrays
+    (under 64 bytes an edge row at peak, with the sort's copies).
+
+    Convergence is exact: an alternation leaves the edge set as it was
+    exactly when large-star maps every edge to itself and no node has two
+    smaller neighbours. The kernels flag both cases, two ``Observation``s
+    sum the flags on the alternation's checkpoint job, and the loop stops
+    on the first alternation with no flag. ``stats``, when passed,
+    receives {"alternations", "n_edges"}: the alternations run and the
+    distinct non-self-loop edges (one first large-star row each)."""
+    # materialize the pairs projection ONCE at entry: the edges and the
+    # self-paired docs would otherwise EACH re-evaluate the caller's lazy
+    # upstream (typically the full minhash/band-join pipeline) — measured
+    # 7x on the bench's 205k-doc pipeline before the round-6 fix
     raw = pairs.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
+        F.least(src, dst).cast("long").alias("u"),
+        F.greatest(src, dst).cast("long").alias("v"),
     ).localCheckpoint()
-    # every edge set's (count, xor of edge hashes) is observed by the job
-    # that checkpoints it: no separate count or aggregate job per step
-    e, (n_edges, _) = _checkpoint_observed(_canon_edges(raw))
-    if stats is not None:
-        stats["n_edges"] = n_edges
-    # node universe from the RAW pairs: a self-paired doc is a singleton
-    # cluster of itself (canon drops the self-loop, not the node)
-    all_nodes = _sym(raw).select("u").distinct().localCheckpoint()
-    prev = None
+    e = raw.filter(F.col("u") != F.col("v"))
     for it in range(max_iter):
-        e, cur = _checkpoint_observed(_small_star(_large_star(e)))
-        if cur == prev:
+        large, small = Observation(), Observation()
+        e = (
+            _sym(e).repartition("u")
+            .mapInArrow(_large_star_kernel, _STAR_EDGES)
+            .observe(large, F.count("*").alias("n"),
+                     F.count_if("changed").alias("changed"))
+            .select("u", "v").repartition("v")
+            .mapInArrow(_small_star_kernel, _STAR_EDGES)
+            .observe(small, F.count_if("changed").alias("changed"))
+            .select("u", "v")
+            .localCheckpoint()
+        )
+        if it == 0 and stats is not None:
+            stats["n_edges"] = large.get["n"]
+        if large.get["changed"] == small.get["changed"] == 0:
             if stats is not None:
                 stats["alternations"] = it + 1
             break
-        prev = cur
     else:
         raise RuntimeError(
             f"duplicate_clusters_star did not converge in {max_iter} "
             "alternations — not expected for any graph of < 2^25 nodes"
         )
-    # fixpoint edges are stars (component_min, child): children label to the
-    # center, centers label to themselves, and every original node is one
-    # of the two
-    labels = (
-        e.select(F.col("v").alias("x"), F.col("u").alias("rep"))
-        .union(
-            all_nodes.join(
-                e.select(F.col("v").alias("u")), "u", "left_anti"
-            ).select(F.col("u").alias("x"), F.col("u").alias("rep"))
-        )
-    )
-    sizes = labels.groupBy("rep").agg(F.count("*").alias("cluster_size"))
+    # fixpoint edges are stars (component_min, leaf): leaves label to the
+    # center, centers and self-paired docs to themselves
     return (
-        labels.join(sizes, "rep")
-        .select(
-            F.col("x").alias("doc_id"),
-            F.col("rep").alias("cluster_rep"),
-            "cluster_size",
-        )
-        .orderBy("doc_id")
+        e.select(F.col("v").alias("doc_id"), F.col("u").alias("rep"))
+        .union(e.select("u", "u"))
+        .union(raw.filter(F.col("u") == F.col("v")))
+        .groupBy("doc_id")
+        .agg(F.min("rep").alias("cluster_rep"))
+        .withColumn("cluster_size",
+                    F.count("*").over(Window.partitionBy("cluster_rep")))
     )
 
 
@@ -590,10 +590,8 @@ def _blocked_shingle_inter(
     # come from the SAME grouped table (explode + per-doc count) instead
     # of a second subtree evaluation. Intersections and set sizes are
     # identical by construction; both oracle-gated consumers stay green.
-    from pyspark.sql import Window as W
-
     kept = (
-        sh.withColumn("_df", F.count("*").over(W.partitionBy("sh")))
+        sh.withColumn("_df", F.count("*").over(Window.partitionBy("sh")))
         .filter(F.col("_df") <= max_shingle_df)
         .drop("_df")
     )

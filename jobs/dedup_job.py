@@ -43,6 +43,7 @@ def main() -> None:
     from hadoop_etl_udfs_spark.session import get_job_spark
 
     spark = get_job_spark("dedup_job")
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from hadoop_etl_udfs_spark.operators.dedup import (
@@ -70,11 +71,13 @@ def main() -> None:
     )
     pairs = minhash_lsh_pairs_df(docs, max_band_bucket=cap)
     labels = duplicate_clusters_star(pairs, stats=stats)
-    labels.write.mode("overwrite").parquet(args.output)
+    # every rep labels itself, so the write counts the clusters on the way
+    reps = Observation()
+    labels.observe(
+        reps, F.count_if(F.col("doc_id") == F.col("cluster_rep")).alias("n")
+    ).write.mode("overwrite").parquet(args.output)
     wall = round(time.time() - t0, 3)
-    n_clusters = labels.agg(
-        F.countDistinct("cluster_rep").alias("n")
-    ).collect()[0]["n"]
+    n_clusters = reps.get["n"]
     print(json.dumps({
         "docs": n_docs,
         "candidate_edges": stats.get("n_edges"),

@@ -102,22 +102,30 @@ def test_simhash_packed_lanes_match_unpacked_reference(spark, method, n_bits):
     assert got == want
 
 
-def test_star_ops_window_form_matches_join_form(spark):
-    """Round 9: _large_star/_small_star compute the per-node minimum via a
-    window over hashpartitioning(u) instead of groupBy + join-back (one
-    exchange and no join per star op). The edge algebra must be EXACTLY
-    Kiveris et al.'s — pin the window form against the former join form
-    on random graphs (chains, stars and cliques all arise at 400 edges
-    over 300 nodes)."""
+def test_star_kernels_match_join_form(spark):
+    """The large-star and small-star kernels must compute EXACTLY Kiveris
+    et al.'s edge algebra, written here as the groupBy + join-back form.
+    Their inputs repeat edges in both orientations (the kernels dedup
+    their own input) and spread over more hash partitions than there are
+    nodes, so some partitions are empty while others span several Arrow
+    batches. Each kernel's change flags must be nonzero exactly when its
+    output edge set differs from its input's."""
     import random
 
     rng = random.Random(7)
+
+    def canon(e):
+        return (
+            e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
 
     def large_star_join(e):
         sym = dedup._sym(e)
         m = sym.groupBy("u").agg(F.min("v").alias("mv"))
         m = m.select("u", F.least("mv", F.col("u")).alias("m"))
-        return dedup._canon_edges(
+        return canon(
             sym.join(m, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -132,22 +140,40 @@ def test_star_ops_window_form_matches_join_form(spark):
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         selfs = m.select("u", F.col("m").alias("v"))
-        return dedup._canon_edges(children.union(selfs))
+        return canon(children.union(selfs))
 
-    for trial in range(2):
-        edges = [
-            (rng.randint(0, 300), rng.randint(0, 300)) for _ in range(400)
-        ]
-        e = dedup._canon_edges(
-            spark.createDataFrame(edges, "u long, v long")
-        ).localCheckpoint()
-        for new, old in (
-            (dedup._large_star, large_star_join),
-            (dedup._small_star, small_star_join),
-        ):
-            a, b = new(e), old(e)
-            assert a.exceptAll(b).count() == 0
-            assert b.exceptAll(a).count() == 0
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        # a dense graph, a sparse one where chains and stars arise, and a
+        # star forest, which neither kernel changes
+        for n, m in ((40, 400), (120, 100), (60, 0)):
+            edges = [(rng.randint(0, n), rng.randint(0, n)) for _ in range(m)]
+            edges = edges or [(0, i) for i in range(1, 50)] + [(55, 60)]
+            edges += [(v, u) for u, v in edges[::3]]
+            e = spark.createDataFrame(edges, "u long, v long").select(
+                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+            ).filter(F.col("u") != F.col("v")).localCheckpoint()
+            before = {tuple(r) for r in canon(e).collect()}
+            for kernel, ref, grouped in (
+                (dedup._large_star_kernel, large_star_join,
+                 dedup._sym(e).repartition(n + 8, "u")),
+                (dedup._small_star_kernel, small_star_join,
+                 e.repartition(n + 8, "v")),
+            ):
+                sizes = grouped.rdd.glom().map(len).collect()
+                # a partition is empty; on the random graphs one spans
+                # several batches
+                assert min(sizes) == 0 and (max(sizes) > 3 or m == 0), kernel
+                out = grouped.mapInArrow(kernel, dedup._STAR_EDGES).localCheckpoint()
+                got = {tuple(r) for r in out.select("u", "v").collect()}
+                want = {tuple(r) for r in ref(canon(e)).collect()}
+                assert got == want, kernel
+                changed = out.filter("changed").count()
+                assert (changed > 0) == (got != before), kernel
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_ngram_jaccard_exact_value(spark):
@@ -699,10 +725,10 @@ def test_duplicate_clusters_star_planted_graph(spark):
 
 
 def test_duplicate_clusters_star_job_count(spark):
-    """The convergence signature of each star alternation and the edge
-    count ride on the checkpoint jobs as observed metrics, not as jobs of
-    their own. The planted graph takes 3 alternations (the third confirms
-    the fixpoint)."""
+    """Each star op is one exchange and one kernel, and the change flags
+    and the edge count ride on each alternation's checkpoint job as
+    observed metrics, not as jobs of their own. The planted graph takes 3
+    alternations (the third changes nothing)."""
     from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters_star
 
     jsc = spark.sparkContext._jsc.sc()
@@ -720,8 +746,9 @@ def test_duplicate_clusters_star_job_count(spark):
     stats: dict = {}
     before = n_jobs()
     labels = duplicate_clusters_star(pairs, stats=stats).localCheckpoint()
-    # 40 when the signature and the edge count were jobs of their own
-    assert n_jobs() - before == 32
+    # 32 with a window and a distinct per star op, 40 when the convergence
+    # signature and the edge count were jobs of their own
+    assert n_jobs() - before == 13
     assert stats == {"n_edges": 8, "alternations": 3}
     assert sorted(tuple(r) for r in labels.collect()) == [
         (10, 10, 5), (11, 10, 5), (12, 10, 5), (13, 10, 5), (14, 10, 5),

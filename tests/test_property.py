@@ -313,14 +313,18 @@ def test_star_contraction_converges_on_adversarial_chain(spark):
     """The case star contraction exists for: a 200-node path graph has
     diameter 199 — min-label propagation would need ~200 rounds, while
     large-star/small-star alternation collapses it in O(log n) rounds and
-    still labels every node with the chain minimum."""
+    still labels every node with the chain minimum. The alternation count
+    is pinned: the loop stops on the first alternation that changes
+    nothing, so it cannot stop early without this count moving."""
     from hadoop_etl_udfs_spark.operators.dedup import duplicate_clusters_star
 
     n = 200
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    got = duplicate_clusters_star(chain, max_iter=25).collect()
+    stats: dict = {}
+    got = duplicate_clusters_star(chain, max_iter=25, stats=stats).collect()
+    assert stats["alternations"] == 9
     assert len(got) == n
     assert all(r["cluster_rep"] == 0 and r["cluster_size"] == n for r in got)
 
