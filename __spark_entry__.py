@@ -516,8 +516,9 @@ def _lsh_bucket_sql(col: str = "embedding") -> str:
 
 
 def _ivf_dist_sql(col: str, c) -> str:
-    """Mirror of similarity._cell_distances_expr for one centroid: the same
-    (x-y)^2 element terms summed left-to-right."""
+    """Squared L2 distance to one centroid: the (x_j - c_j)^2 element terms
+    in double, summed left-to-right over dimensions (the fold of
+    similarity._cell_assign_udf and similarity._probe_cells)."""
     lit = _vec_sql(c)
     return (
         f"list_sum(list_transform(range(1, {len(c) + 1}), "
@@ -536,7 +537,7 @@ def _ivf_probe_union_sql() -> str:
 
 def _ivf_assigned_cte() -> str:
     """CTE assigning every vector its argmin cell (first-min tie-break,
-    matching Spark's array_position(dists, array_min))."""
+    matching np.argmin in similarity._cell_assign_udf)."""
     cents = quantizer_centroids()
     d_cols = ",\n               ".join(
         f"{_ivf_dist_sql('embedding', c)} AS d{i}" for i, c in enumerate(cents)
@@ -1897,7 +1898,7 @@ def oracle_sql() -> dict[str, str]:
         # domain (thresholds imported from the operator module as (num,
         # den) ratios) and only the reported fractions divide — rounded to
         # 6 in both engines. Top-2gram tie-break: (cnt, len, gram) DESC —
-        # the window here, the equivalent struct-max aggregate Spark-side.
+        # the window here, the kernel's packed (cnt, glen) max Spark-side.
         "repetition_signals": f"""
             WITH {_SEG_CTES},
             ps AS (

@@ -517,48 +517,20 @@ def _query_vec(emb: DataFrame, query_vec_id: int) -> np.ndarray:
     return np.array(rows[0]["embedding"], dtype=np.float64)
 
 
-def _cell_distances_expr(col, centroids: np.ndarray):
-    """Array of squared L2 distances to each centroid, as Catalyst
-    expressions (one interpreted ``aggregate(zip_with(...))`` lambda per
-    centroid). Retained ONLY as the parity reference for the vectorized
-    kernel (tests/test_operators.py asserts both agree) — the round-2 judge
-    measured the interpreted higher-order functions at ~100× the cost of a
-    numpy matmul, so the production path is :func:`_cell_assign_udf`."""
-    dists = []
-    for c in centroids:
-        plane = F.array(*[F.lit(float(v)) for v in c])
-        dists.append(
-            F.aggregate(
-                F.zip_with(col, plane, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-    return F.array(*dists)
-
-
-def _with_cell_expr(df: DataFrame, emb_col: str, centroids: np.ndarray) -> DataFrame:
-    """Expression-tree cell assignment (parity reference for tests)."""
-    return df.withColumn(
-        "_dists", _cell_distances_expr(F.col(emb_col), centroids)
-    ).withColumn(
-        "cell",
-        (F.array_position(F.col("_dists"), F.array_min("_dists")) - 1).cast("int"),
-    ).drop("_dists")
-
-
 def _cell_assign_udf(centroids: np.ndarray):
     """Vectorized coarse-quantizer assignment: one Arrow-batched numpy kernel
-    instead of n_cells interpreted ``aggregate(zip_with(...))`` lambdas.
+    (the per-centroid interpreted ``aggregate(zip_with(...))`` lambdas it
+    replaced measured ~100x the cost of a numpy matmul).
 
-    Arithmetic is kept BIT-IDENTICAL to the expression tree (and to the
-    DuckDB oracle's ``list_sum(list_transform(...))``): each element term is
+    Arithmetic is kept BIT-IDENTICAL to its reference, the DuckDB oracle's
+    ``list_sum(list_transform(...))`` (``oracle_sql()["ivf_assignments"]``
+    in ``__spark_entry__.py``): each element term is
     ``(double(x_j) - double(c_j))^2`` and terms accumulate LEFT-TO-RIGHT over
     dimensions — the dimension loop below is that exact fold, vectorized
     across (rows × cells) per step. A ``x @ C.T``-style expansion would
     reorder the floating-point sums and could flip an argmin tie. Ties break
-    to the first minimal cell (np.argmin), matching the oracle's
-    array_position-of-min."""
+    to the first minimal cell (np.argmin), matching the oracle's first
+    ``WHEN d_i = least(...)`` branch."""
     from pyspark.sql.functions import pandas_udf
 
     C = centroids.astype(np.float64)
@@ -570,9 +542,9 @@ def _cell_assign_udf(centroids: np.ndarray):
 
         if len(emb) == 0:
             return pd.Series(np.empty(0, dtype=np.int32))
-        # NULL embeddings: the expression tree yields cell NULL (all-NULL
-        # distance array -> array_position of NULL min is NULL) — match it
-        # instead of crashing np.stack on a None (r7 review)
+        # NULL embeddings: the oracle yields cell NULL (every distance and
+        # their least() are NULL) — match it instead of crashing np.stack
+        # on a None
         mask = ~emb.isna().to_numpy()
         out = np.zeros(len(emb), dtype=np.int32)
         if mask.any():

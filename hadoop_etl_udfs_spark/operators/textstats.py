@@ -451,9 +451,9 @@ REP_DUP_SEG_CHAR = (1, 5)   # chars inside duplicated segments       > 0.20
 REP_TOP_2GRAM = (1, 5)      # chars of the most frequent word-2gram  > 0.20
 REP_DUP_5GRAM = (3, 20)     # chars inside duplicated word-5grams    > 0.15
 _REP_PACK = 2_147_483_648   # 2^31: (cnt, glen) -> cnt*2^31 + glen long pack
-# Java regex \s (the split(trim(text), '\s+') tokenizer) is the ASCII set
-# [ \t\n\x0B\f\r]; re.ASCII pins Python's \s to exactly that set so the
-# doc-local kernel tokenizes identically to the Catalyst expression form.
+# Java regex \s (the split(trim(text), '\s+') tokenizer the other text
+# operators use) is the ASCII set [ \t\n\x0B\f\r]; re.ASCII pins Python's
+# \s to exactly that set so the doc-local kernel tokenizes identically.
 _WS_ASCII = re.compile(r"\s+", re.ASCII)
 
 
@@ -482,17 +482,10 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``array_join(words, ' ')``), and the top-2gram tie-break is
     (count, char-length, gram) descending — deterministic in both engines.
 
-    Scale plan (100 TB): ONE fused explode over the corpus (segments,
-    2-grams, 5-grams tagged from one projection) and ZERO gram-row
-    exchanges — the input repartitions by doc_id BEFORE the explode
-    (shuffling compact doc rows, ~12x fewer bytes than the ~2-entries-
-    per-token gram rows), and since every gram of a doc then lives in
-    its doc's partition, hash(doc_id) satisfies the clustering
-    requirement of BOTH downstream aggregates: Catalyst plans no further
-    Exchange. The top-2gram pick packs (count, char-length) into one
-    BIGINT so the max stays a HASH aggregate — a struct-valued max
-    forces SortAggregate, i.e. a full sort of every distinct gram row.
-    No corpus self-join, no driver collect. Reference anchor: the
+    Scale plan (100 TB): one doc-local ``mapInArrow`` kernel
+    (:func:`repetition_signals_df`) — every count is per document, so the
+    state is O(doc), the corpus is never shuffled and wall is linear in
+    docs. No corpus self-join, no driver collect. Reference anchor: the
     reference stops at import/export (HdfsSerDeImportService.java); this
     extends the engine toward its training-data-pipeline brief."""
     return repetition_signals_df(_docs(spark, sf_dir)).orderBy("doc_id")
@@ -500,49 +493,29 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def repetition_signals_df(docs: DataFrame) -> DataFrame:
     """:func:`repetition_signals`'s composable form over an arbitrary
-    (doc_id, text) DataFrame.
-
-    Round 9: ZERO-SHUFFLE doc-local kernel. The round-8 fused-explode
-    form (kept as :func:`repetition_signals_expr_df` — the parity/oracle
-    reference, the ``lsh_bucket_expr`` convention) was measurably
-    super-linear: 5.31x wall at 4x docs (r8 verdict item 2), because the
-    per-partition (doc_id, kind, gh, glen) count hash-aggregate grows
-    with EVERY distinct gram in the partition (~2 entries/token —
-    measured 35.4 s @200k docs / 119.6 s @800k at 32 partitions;
-    re-partitioning 512-ways recovered only part of it: 15.5 / 86.1 s —
-    the state is still corpus-proportional). But every count this
-    operator needs is PER-DOCUMENT by definition, so the aggregation
-    state never has to outlive one document: a ``mapInArrow`` kernel
-    tokenizes each doc and counts its segments/2-grams/5-grams in a
-    doc-sized dict (guide §4.2 — the decision data is tiny; state is
-    O(doc), wall is linear in docs by construction). Measured 2.2 s
-    @200k / 5.5 s @800k (interleaved minima, same session as the
-    expression-form probe's 24.5 / 128.9 s) — 2.53x at 4x docs, 11x and
-    23x absolute, and the corpus is never shuffled at all (the old form
-    repartitioned every doc row before its explode).
+    (doc_id, text) DataFrame: a zero-shuffle doc-local ``mapInArrow``
+    kernel. Every count the operator needs is per document, so each doc's
+    segments, 2-grams and 5-grams are counted in a doc-sized dict (state
+    O(doc), wall linear in docs).
 
     Exactness contract (the kernel emits INTEGER tallies only; the
-    fraction rounding, flag comparisons and output projection below are
-    the UNCHANGED Spark expressions, so no float semantics moved into
-    Python):
+    fraction rounding, flag comparisons and output projection are Spark
+    expressions, so no float semantics live in Python):
 
     - tokenization mirrors ``split(trim(text), '\\s+')``: strip ASCII
       spaces only (SQL TRIM), split on Java ``\\s`` = ``[ \\t\\n\\x0B
       \\f\\r]`` — ``re.ASCII`` pins Python's ``\\s`` to the same set;
-      the empty doc keeps its single '' word, NULL text drops the row
-      (explode-of-NULL semantics), leading non-space whitespace yields
-      the same leading '' token.
-    - counts key on the literal word TUPLES, within one doc only — the
-      hash-equality approximation of the expression form (counts over
-      xxhash64 of the words) equals tuple counting except on 64-bit
-      collisions, the standing `_shingle_hashes` caveat, so the planted
-      mini-oracle and the string-based DuckDB oracle pin both forms.
-    - the top-2gram pick compares the same packed (cnt, glen) order and
-      returns cnt*glen; ties beyond (cnt, glen) were already proven
-      output-invariant (equal product).
+      the empty doc keeps its single '' word, NULL text emits no row,
+      leading non-space whitespace yields a leading '' token.
+    - counts key on the literal word TUPLES, within one doc only, as the
+      string-based oracle counts gram strings.
+    - the top-2gram pick takes the max of the packed (cnt, glen) order and
+      returns cnt*glen; any deeper tie has an equal product, so the
+      oracle's gram-identity tie-break cannot change the output.
 
-    Parity: ``test_repetition_signals_kernel_matches_expr_form`` asserts
-    kernel == expression form row-for-row on planted + fuzzed corpora."""
+    Reference: the DuckDB oracle ``oracle_sql()["repetition_signals"]``
+    in ``__spark_entry__.py``; ``test_repetition_signals_kernel_matches_oracle``
+    compares the two field by field on planted, edge-case and fuzzed docs."""
     from collections.abc import Iterator as _Iter
 
     import pyarrow as _pa
@@ -636,7 +609,7 @@ def repetition_signals_df(docs: DataFrame) -> DataFrame:
             keep_idx = []
             cols = [[] for _ in range(7)]
             for row, text in enumerate(texts):
-                if text is None:  # explode-of-NULL: the doc emits no rows
+                if text is None:  # NULL text: the doc emits no row
                     continue
                 keep_idx.append(row)
                 for ci, v in enumerate(_analyze(text)):
@@ -652,13 +625,6 @@ def repetition_signals_df(docs: DataFrame) -> DataFrame:
             )
 
     j = docs.select("doc_id", "text").mapInArrow(kernel, out_ddl)
-    return _repetition_output(j)
-
-
-def _repetition_output(j: DataFrame) -> DataFrame:
-    """The UNCHANGED fraction/flag projection over the integer tallies —
-    shared verbatim by the kernel and expression forms so the float
-    rounding and threshold semantics live in exactly one place."""
     flag = (
         (F.col("dup_seg_occ") * REP_DUP_SEG[1] > F.col("n_seg_occ") * REP_DUP_SEG[0])
         | (
@@ -691,170 +657,6 @@ def _repetition_output(j: DataFrame) -> DataFrame:
         flag.alias("repetition_flag"),
     )  # sort-free: repetition_signals() adds the orderBy; curate's filter
     # stage consumes this unsorted (round 9)
-
-
-def repetition_signals_expr_df(docs: DataFrame) -> DataFrame:
-    """The round-8 fused-explode EXPRESSION form — retained as the parity
-    reference for the doc-local kernel (the ``lsh_bucket_expr``
-    convention: tests assert kernel == expression), not a production
-    path: its count hash-aggregate state grows with the corpus, the
-    measured source of the 5.31x-at-4x-docs curve the kernel removes.
-
-    Fused single-scan STRING-FREE kernel: segments, word-2grams, and
-    word-5grams are tagged and exploded from ONE projection of the corpus
-    as (kind, xxhash64-of-the-words-in-place, char length) — no gram
-    string is ever built (the :func:`_shingle_hashes` lesson: string
-    construction, not hashing, was the measured 4x term) — counted by
-    (doc_id, kind, hash) and reduced in ONE conditional doc_id aggregate.
-    Versus the naive three explode+count string passes this is 1 scan +
-    0 joins with ~3x narrower rows.
-
-    Round-8 plan tightening, ZERO gram-row exchanges: the input
-    repartitions on doc_id BEFORE the explode — doc rows are ~12x fewer
-    bytes than the exploded gram entries (measured 150 MB text vs 1.8 GB
-    gram rows at 200k docs), and once a doc's grams are co-partitioned
-    with their doc, hash(doc_id) satisfies ClusteredDistribution for
-    BOTH aggregates (their keys are supersets of doc_id), so Catalyst
-    plans no Exchange after the explode. The top-2gram max packs
-    (cnt, glen) into cnt*2^31+glen — lexicographically identical for
-    the positive operands, but a plain long max keeps the aggregate
-    HASH-based where a struct max demotes to SortAggregate (a full sort
-    of every distinct gram row; both verified on .explain). Values are
-    bit-identical to the struct form (A/B exceptAll = 0 at 200k docs);
-    local wall is within the host's throttle spread (the kernel is
-    memory-bandwidth-bound here), the win is shuffle BYTES and the
-    removed sort — the terms that matter on a real cluster's network.
-
-    Hash-equality counting is the same standing approximation as
-    `_shingle_hashes`: occurrence counts over 64-bit gram hashes equal
-    counts over gram strings up to collisions (p ≈ n²·2⁻⁶⁴ per doc),
-    so the string-based DuckDB oracle stays valid. Gram lengths are
-    arithmetic over word lengths (sum + joining spaces), `d_chars` is
-    sum(word lengths) + (n-1) — identical to length(array_join(...))
-    without materializing the join. The top-2gram pick needs only
-    (cnt, glen): any deeper tie has an EQUAL cnt*glen product, so the
-    gram-identity tie-break the string version carried was output-
-    invariant and is dropped. Every doc emits >=1 segment (the empty
-    doc's single '' segment), so the aggregate covers all docs with no
-    left-join coalesces.
-
-    The word array and its length array are BOUND AS ATTRIBUTES via a
-    two-step projection before any per-gram lambda touches them: an
-    inlined `split()` expression is re-evaluated on EVERY lambda-element
-    access (F.get(words, i) re-splits the text — O(n) per gram, O(n²)
-    per doc; measured as a >8-minute stall at 200k docs), while an
-    attribute reference is a materialized array with O(1) gets.
-    CollapseProject will not inline a non-cheap alias referenced more
-    than once, so the two projections survive optimization — keep the
-    binding if this kernel is reshaped."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    base = docs.repartition(n_part, "doc_id").select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w")
-    ).select(
-        "doc_id",
-        "_w",
-        F.transform("_w", lambda x: F.length(x).cast("long")).alias("_wl"),
-    )
-    words, wl = F.col("_w"), F.col("_wl")
-    n = F.size(words)
-    n_segs = F.ceil(n / SEGMENT_WORDS).cast("int")
-    W = SEGMENT_WORDS
-
-    def _seg_entry(i):
-        gh = F.xxhash64(*[F.get(words, i * W + j) for j in range(W)])
-        n_words = F.least(F.lit(W), n - i * W).cast("long")
-        glen = (
-            F.aggregate(
-                F.slice(wl, i * W + 1, W), F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            )
-            + n_words - 1
-        )
-        return F.struct(F.lit(0).alias("k"), gh.alias("gh"), glen.alias("glen"))
-
-    def _gram_entry(i, kind, width):
-        gh = F.xxhash64(*[F.get(words, i + j) for j in range(width)])
-        glen = sum(
-            (F.get(wl, i + j) for j in range(width)),
-            F.lit(width - 1).cast("long"),
-        )
-        return F.struct(
-            F.lit(kind).alias("k"), gh.alias("gh"), glen.alias("glen")
-        )
-
-    def _gram_entries(kind, width):
-        return F.when(
-            n >= width,
-            F.transform(
-                F.sequence(F.lit(0), n - width),
-                lambda i: _gram_entry(i, kind, width),
-            ),
-        ).otherwise(F.expr("CAST(array() AS array<struct<k:int,gh:bigint,glen:bigint>>)"))
-
-    tagged = F.concat(
-        F.transform(F.sequence(F.lit(0), n_segs - 1), _seg_entry),
-        _gram_entries(1, 2),
-        _gram_entries(2, 5),
-    )
-    ex = base.select(
-        "doc_id",
-        F.greatest(
-            F.aggregate(wl, F.lit(0).cast("long"), lambda a, x: a + x)
-            + n - 1,
-            F.lit(1),
-        )
-        .cast("long")
-        .alias("d_chars"),
-        F.explode(tagged).alias("t"),
-    )
-    counted = ex.groupBy(
-        "doc_id",
-        "d_chars",
-        F.col("t.k").alias("k"),
-        F.col("t.gh").alias("gh"),
-        F.col("t.glen").alias("glen"),
-    ).agg(F.count("*").alias("cnt"))
-    k, cnt = F.col("k"), F.col("cnt")
-    gchars = cnt * F.col("glen")
-    agg = counted.groupBy("doc_id", "d_chars").agg(
-        F.sum(F.when(k == 0, cnt).otherwise(0)).cast("long").alias("n_seg_occ"),
-        F.sum(F.when((k == 0) & (cnt > 1), cnt).otherwise(0))
-        .cast("long")
-        .alias("dup_seg_occ"),
-        F.sum(F.when(k == 0, gchars).otherwise(0))
-        .cast("long")
-        .alias("seg_chars_raw"),
-        F.sum(F.when((k == 0) & (cnt > 1), gchars).otherwise(0))
-        .cast("long")
-        .alias("dup_seg_chars"),
-        # packed (cnt, glen) long max == struct lexicographic max for the
-        # positive operands; keeps this a HashAggregate (struct max =>
-        # SortAggregate = full sort of distinct gram rows). Bounds: glen
-        # < 2^31 (a >1 GB 2-gram string otherwise), cnt*2^31 ANSI-throws
-        # loud past a 2^32-occurrence gram — both beyond any real doc
-        F.max(
-            F.when(k == 1, cnt * F.lit(_REP_PACK) + F.col("glen"))
-        ).alias("t2p"),
-        F.sum(F.when((k == 2) & (cnt > 1), gchars).otherwise(0))
-        .cast("long")
-        .alias("dup5_chars"),
-    )
-    j = agg.select(
-        "doc_id",
-        "d_chars",
-        "n_seg_occ",
-        "dup_seg_occ",
-        F.greatest(F.col("seg_chars_raw"), F.lit(1)).alias("seg_chars"),
-        "dup_seg_chars",
-        # integer DIV, never floor(double/L): packed values pass 2^53
-        # once cnt*glen does; both operands are positive longs here
-        F.coalesce(
-            F.expr(f"t2p DIV {_REP_PACK}") * (F.col("t2p") % F.lit(_REP_PACK)),
-            F.lit(0).cast("long"),
-        ).alias("top2_chars"),
-        "dup5_chars",
-    )
-    return _repetition_output(j)
 
 
 LM_TOP_K = 24                    # vocabulary cap (production: ~100k)

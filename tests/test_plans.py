@@ -498,21 +498,21 @@ def test_boilerplate_removal_on_planted_data(spark, tmp_path):
             assert srow[col_name] == v, (col_name, srow[col_name], v)
 
 
-def test_repetition_signals_kernel_matches_expr_form(spark):
-    """Round 9: repetition_signals runs as a doc-local mapInArrow kernel
-    (zero shuffles, O(doc) state — the fix for the measured 5.31x-at-4x-
-    docs curve). The retained round-8 fused-explode expression form is
-    the parity reference (the lsh_bucket_expr convention): every output
-    row must match, including the tokenizer edge cases — empty doc,
-    spaces-only doc (trim leaves ''), TAB-led doc (trim strips only
-    ASCII spaces, so split yields a leading '' token), single-word doc,
-    exact-window doc — and a fuzzed word-soup corpus."""
+def test_repetition_signals_kernel_matches_oracle(spark, tmp_path):
+    """repetition_signals runs as a doc-local mapInArrow kernel; its
+    reference is the DuckDB ``repetition_signals`` oracle over the same
+    documents.parquet. Every output field must match exactly, including
+    the tokenizer edge cases — empty doc, spaces-only doc (trim leaves
+    ''), TAB-led doc (trim strips only ASCII spaces, so split yields a
+    leading '' token), single-word doc, exact-window doc, NULL text (no
+    row in either engine), a repeated 2-gram and inner double spaces —
+    and a fuzzed word-soup corpus."""
     import random
 
-    from hadoop_etl_udfs_spark.operators.textstats import (
-        repetition_signals_df,
-        repetition_signals_expr_df,
-    )
+    import duckdb
+
+    import __spark_entry__ as entry
+    from hadoop_etl_udfs_spark.operators import textstats
 
     rng = random.Random(99)
     vocab = [f"w{i}" for i in range(40)]
@@ -524,16 +524,29 @@ def test_repetition_signals_kernel_matches_expr_form(spark):
         (5, "lonely"),
         (6, " ".join(["p q"] * 30)),                      # hot 2gram
         (7, " ".join(vocab[:10])),                        # exactly one window
+        (8, None),                                        # NULL text: no row
+        (9, "a b a b"),                                   # 2gram occurs twice
+        (10, " x  y "),                                   # edge + inner spaces
     ] + [
         (100 + i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 60))))
         for i in range(60)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = repetition_signals_df(docs)
-    want = repetition_signals_expr_df(docs)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    assert got.count() == len(rows)
+    docs = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(docs)
+    got = {
+        r["doc_id"]: r.asDict()
+        for r in textstats.repetition_signals(spark, str(tmp_path)).collect()
+    }
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}/*.parquet'")
+    want = con.execute(entry.oracle_sql()["repetition_signals"]).fetchall()
+    cols = [dsc[0] for dsc in con.description]
+    want = {r[cols.index("doc_id")]: dict(zip(cols, r)) for r in want}
+    assert len(got) == len(want) == len(rows) - 1 == 69
+    assert 8 not in got
+    for doc_id, orow in want.items():
+        assert got[doc_id] == orow, (doc_id, got.get(doc_id), orow)
 
 
 def test_repetition_signals_on_planted_data(spark, tmp_path):

@@ -158,8 +158,6 @@ _TEST_ONLY = {
     "bucket_value": "Iceberg bucket[n] transform, pinned by the spec test vectors",
     "day_ordinal": "Iceberg day-transform value for partition_filter",
     "month_ordinal": "Iceberg month-transform value for partition_filter",
-    "_with_cell_expr": "expression twin the IVF cell kernel is checked against",
-    "repetition_signals_expr_df": "expression twin the repetition kernel is checked against",
     "decode_chunks_where": "zone-map range read, until one sink scan planner replaces it",
     "sink_bloom_columns": "public answer to which columns carry blooms",
 }
