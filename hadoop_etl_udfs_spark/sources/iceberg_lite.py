@@ -32,8 +32,8 @@ unpartitioned or IDENTITY-partitioned specs (partition values recorded per
 file in manifests, plan-time partition pruning — the reference's Hive-style
 partition pruning, HdfsService.java:92-110, as a manifest walk), flat
 primitive schemas (the pages/documents shapes),
-parquet data files, optional per-file bounds on ONE stats column
-(long/timestamp), ADDITIVE schema evolution (appends may add columns —
+parquet data files, optional per-file bounds on stats columns
+(long/int/timestamp), ADDITIVE schema evolution (appends may add columns —
 fresh field ids, pre-evolution files read NULL; drops and type changes
 fail loud). Planning is driver-side over manifest files — the same
 division of labor as Iceberg's own client planner; the data path stays
@@ -51,18 +51,13 @@ import glob
 import hashlib
 import json
 import os
-import re
 import struct
 import time
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .avro_lite import read_avro, write_avro
-from ..worker import drop_zip_finders
 
 FORMAT_VERSION = 1
 
@@ -184,8 +179,7 @@ def _parse_partition_values(
     """Partition values of a data file, from the ``_p_<name>=v`` path
     segments Spark's partitionBy wrote (values URL-escaped by Spark;
     ``__HIVE_DEFAULT_PARTITION__`` = NULL), typed per ``part_types``
-    (partition FIELD name -> the field's Iceberg result type — the source
-    column type for identity, int/date ordinals for day/month)."""
+    (partition column -> its Iceberg type)."""
     from urllib.parse import unquote
 
     vals: dict = {}
@@ -196,259 +190,11 @@ def _parse_partition_values(
             v = unquote(v)
             if v == "__HIVE_DEFAULT_PARTITION__":
                 vals[c] = None
-            elif part_types[c] in ("long", "int", "date"):
+            elif part_types[c] in ("long", "int"):
                 vals[c] = int(v)
             else:
                 vals[c] = v
     return vals
-
-
-# partition transforms (Iceberg spec §Partition Transforms, v1 subset):
-# identity; the two time transforms natural for crawl data laid out by
-# capture time — day (days from 1970-01-01, result type date) and month
-# (months from 1970-01, result type int); bucket[N] (spec murmur3_x86_32
-# seed-0 hash mod N — the layout for point-lookup pruning on a high-
-# cardinality key like host); and truncate[W] (prefix/floor binning).
-# The reference parses typed partition values out of Hive paths the same
-# way (HdfsSerDeImportService.java:519-566); here the transform is
-# declared in the table spec and evaluated once at write time.
-_TIME_TRANSFORMS = ("day", "month")
-_TRANSFORM_RESULT_TYPE = {"day": "date", "month": "int"}
-_TRANSFORM_SOURCE_TYPES = {"timestamp", "timestamptz", "date"}
-# bucket hashes the value's spec byte form (long ordinals little-endian,
-# strings UTF-8); truncate bins longs by floor(v/W)*W and strings by
-# W-char prefix
-_BUCKET_SOURCE_TYPES = {"long", "int", "string", "date",
-                        "timestamp", "timestamptz"}
-_TRUNCATE_SOURCE_TYPES = {"long", "int", "string"}
-
-
-def _parse_partition_by(partition_by) -> list[dict]:
-    """``partition_by`` entries -> partition field descriptors.
-
-    A plain column name declares an identity transform; ``day(col)`` /
-    ``month(col)`` the time transforms; ``bucket(N, col)`` /
-    ``truncate(W, col)`` the parameterized transforms (Iceberg SQL
-    argument order). Each descriptor carries the partition FIELD name
-    (Iceberg convention: ``<col>_day``, ``<col>_bucket``, ``<col>_trunc``),
-    the transform's spec serialization (``bucket[N]``), its param, and the
-    source column."""
-    cols = (
-        [partition_by] if isinstance(partition_by, str)
-        else list(partition_by or [])
-    )
-    out = []
-    for c in cols:
-        m = re.fullmatch(r"(\w+)\s*\(\s*(?:(\d+)\s*,\s*)?(\w+)\s*\)", c.strip())
-        if m:
-            tr, param, src = m.group(1).lower(), m.group(2), m.group(3)
-            if tr in _TIME_TRANSFORMS:
-                if param is not None:
-                    raise ValueError(f"{tr}() takes no parameter: {c!r}")
-                out.append({"name": f"{src}_{tr}", "transform": tr,
-                            "param": None, "src": src})
-            elif tr in ("bucket", "truncate"):
-                if param is None or int(param) <= 0:
-                    raise ValueError(
-                        f"{tr}() needs a positive parameter, e.g. "
-                        f"'{tr}(16, {src})': {c!r}"
-                    )
-                suffix = "bucket" if tr == "bucket" else "trunc"
-                out.append({
-                    "name": f"{src}_{suffix}",
-                    "transform": f"{tr}[{int(param)}]",
-                    "param": int(param), "src": src,
-                })
-            else:
-                raise ValueError(
-                    f"unsupported partition transform {tr!r} in {c!r}; "
-                    f"supported: identity (bare column), {_TIME_TRANSFORMS}, "
-                    "bucket(N, col), truncate(W, col)"
-                )
-        else:
-            out.append({"name": c.strip(), "transform": "identity",
-                        "param": None, "src": c.strip()})
-    return out
-
-
-# --- spec bucket hash: murmur3_x86_32, seed 0 (Iceberg spec Appendix B).
-# Vectorized numpy kernels — longs as two uint32 blocks of the 8-byte
-# little-endian form; strings as UTF-8 bytes with masked per-block rounds
-# (a chunk-level loop over the batch's max block count, never per row).
-_MM_C1 = np.uint32(0xCC9E2D51)
-_MM_C2 = np.uint32(0x1B873593)
-
-
-def _mm_rotl(x, r: int):
-    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
-
-
-def _mm_mix(h, k):
-    k = k * _MM_C1
-    k = _mm_rotl(k, 15)
-    k = k * _MM_C2
-    h = h ^ k
-    h = _mm_rotl(h, 13)
-    return h * np.uint32(5) + np.uint32(0xE6546B64)
-
-
-def _mm_fmix(h):
-    h = h ^ (h >> np.uint32(16))
-    h = h * np.uint32(0x85EBCA6B)
-    h = h ^ (h >> np.uint32(13))
-    h = h * np.uint32(0xC2B2AE35)
-    h = h ^ (h >> np.uint32(16))
-    return h
-
-
-def _murmur3_long(v: "np.ndarray") -> "np.ndarray":
-    """murmur3_x86_32(little_endian_8bytes(v), seed=0) -> int32 array.
-    Spec vectors: 34 -> 2017239379, 17486 (date) -> -653330422,
-    1510871468000000 (ts µs) -> -2047944441."""
-    u = np.ascontiguousarray(v, dtype=np.int64).view(np.uint64)
-    h = np.zeros(u.shape, dtype=np.uint32)
-    h = _mm_mix(h, (u & np.uint64(0xFFFFFFFF)).astype(np.uint32))
-    h = _mm_mix(h, (u >> np.uint64(32)).astype(np.uint32))
-    h = h ^ np.uint32(8)
-    return _mm_fmix(h).view(np.int32)
-
-
-def _murmur3_bytes(vals: list) -> "np.ndarray":
-    """murmur3_x86_32(bytes, seed=0) -> int32 array, batch-vectorized.
-    Spec vector: b'iceberg' -> 1210000089.
-
-    Round 7 (r6 advice): works over ONE flat concatenated buffer with
-    per-row offsets instead of a dense (n_rows × max_len) matrix — one
-    outlier-length string no longer inflates the batch to n·max_len bytes,
-    and the per-row Python fill loop is gone (b''.join is C-level). Block
-    j of row i is gathered as 4 little-endian byte loads at offset[i]+4j;
-    the tail block masks off bytes past the row's end (which in the flat
-    layout belong to the NEXT row), matching the zero-padding of the spec.
-    The block loop still runs max(len)//4 times, but each pass touches
-    only rows long enough to have that block."""
-    n = len(vals)
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-    h = np.zeros(n, dtype=np.uint32)
-    if n and int(lens.max()) > 0:
-        # 3 pad bytes so a tail gather never reads past the buffer end
-        flat = np.frombuffer(b"".join(vals) + b"\x00\x00\x00", dtype=np.uint8)
-        off = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=off[1:])
-
-        def _gather_le32(pos: "np.ndarray") -> "np.ndarray":
-            return (
-                flat[pos].astype(np.uint32)
-                | (flat[pos + 1].astype(np.uint32) << np.uint32(8))
-                | (flat[pos + 2].astype(np.uint32) << np.uint32(16))
-                | (flat[pos + 3].astype(np.uint32) << np.uint32(24))
-            )
-
-        full = lens // 4
-        for j in range(int(full.max())):
-            m = full > j
-            k = _gather_le32(off[m] + 4 * j)
-            h[m] = _mm_mix(h[m], k)
-        tail = lens % 4
-        tm = tail > 0
-        if tm.any():
-            tmask = np.array([0, 0xFF, 0xFFFF, 0xFFFFFF], dtype=np.uint32)
-            tk = _gather_le32(off[tm] + 4 * full[tm]) & tmask[tail[tm]]
-            tk = tk * _MM_C1
-            tk = _mm_rotl(tk, 15)
-            tk = tk * _MM_C2
-            h[tm] = h[tm] ^ tk
-    h = h ^ lens.astype(np.uint32)
-    return _mm_fmix(h).view(np.int32)
-
-
-def bucket_value(v, n: int) -> int:
-    """The ``bucket[n]`` transform of a single value — for building
-    ``partition_filter`` values against bucket-partitioned tables. ``v``
-    is an int (long/date-ordinal/timestamp-µs source) or str (UTF-8)."""
-    if isinstance(v, str):
-        hv = int(_murmur3_bytes([v.encode("utf-8")])[0])
-    else:
-        hv = int(_murmur3_long(np.array([int(v)]))[0])
-    return (hv & 0x7FFFFFFF) % n
-
-
-def _bucket_udf(n: int, is_string: bool):
-    """Arrow-batched pandas UDF computing the spec bucket transform at
-    write time. NULL handling lives in the CALLER's when/coalesce wrapper
-    (_transform_expr): a long column containing any NULL arrives in pandas
-    as lossy float64 (values above 2^53 round before hashing — wrong
-    buckets recorded in the manifest, silently pruned reads later), so the
-    UDF only ever sees a coalesced null-free input and may assume exact
-    int64/str values."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def _b(s: pd.Series) -> pd.Series:
-        drop_zip_finders()
-        if is_string:
-            hv = _murmur3_bytes([x.encode("utf-8") for x in s])
-        else:
-            hv = _murmur3_long(s.to_numpy(dtype=np.int64))
-        out = (hv.astype(np.int64) & 0x7FFFFFFF) % n
-        return pd.Series(out, index=s.index, dtype="int32")
-
-    return _b
-
-
-def _transform_expr(tr: str, src: str, param: int | None = None,
-                    src_type: str | None = None):
-    """Spark expression computing a partition transform of ``src``.
-
-    Day/month ordinals follow the spec (days since 1970-01-01 / months
-    since 1970-01); timestamps are interpreted in the session timezone
-    (UTC in every session this repo builds — session.py pins it).
-    bucket[N] hashes the spec byte form via the vectorized murmur3 kernel
-    (long ordinals for int/long/date/timestamp sources, UTF-8 for
-    strings); truncate[W] is pure JVM (`v - pmod(v, W)` floors negatives
-    per spec; W-char prefix for strings)."""
-    if tr == "identity":
-        return F.col(src)
-    if tr == "day":
-        return F.datediff(F.col(src).cast("date"), F.lit("1970-01-01"))
-    if tr == "month":
-        return (F.year(src) - F.lit(1970)) * F.lit(12) + F.month(src) - F.lit(1)
-    if tr.startswith("bucket["):
-        # the when/coalesce wrapper keeps NULLs out of the UDF batch: a
-        # nullable long column would otherwise reach pandas as float64 and
-        # round values above 2^53 before hashing (wrong manifest buckets,
-        # silently pruned reads)
-        if src_type == "string":
-            b = _bucket_udf(param, True)(F.coalesce(F.col(src), F.lit("")))
-            return F.when(F.col(src).isNull(), F.lit(None)).otherwise(b)
-        if src_type in ("timestamp", "timestamptz"):
-            ord_col = F.unix_micros(F.col(src))
-        elif src_type == "date":
-            ord_col = F.datediff(F.col(src), F.lit("1970-01-01")).cast("long")
-        else:
-            ord_col = F.col(src).cast("long")
-        b = _bucket_udf(param, False)(F.coalesce(ord_col, F.lit(0)))
-        return F.when(F.col(src).isNull(), F.lit(None)).otherwise(b)
-    if tr.startswith("truncate["):
-        if src_type == "string":
-            return F.substring(F.col(src), 1, param)
-        return F.col(src) - F.pmod(F.col(src), F.lit(param))
-    raise ValueError(f"unknown transform {tr!r}")
-
-
-def day_ordinal(d: str) -> int:
-    """'YYYY-MM-DD' -> the day transform's stored value (days from epoch) —
-    for building ``partition_filter`` values against day-partitioned
-    tables."""
-    import datetime as _dt
-
-    return (_dt.date.fromisoformat(d) - _dt.date(1970, 1, 1)).days
-
-
-def month_ordinal(m: str) -> int:
-    """'YYYY-MM' -> the month transform's stored value (months from
-    1970-01)."""
-    y, mo = m.split("-")
-    return (int(y) - 1970) * 12 + int(mo) - 1
 
 
 # ------------------------------------------------------------ avro schemas
@@ -474,16 +220,10 @@ def _kv_array(name: str, fid: int) -> dict:
     }
 
 
-# partition-value storage types in the manifest's r102 record; the day
-# transform's result type is date, stored as its int ordinal (Avro's
-# logical date representation)
-_ICEBERG_TO_AVRO = {"string": "string", "long": "long", "int": "int",
-                    "date": "int"}
-# IDENTITY transforms support a narrower set than the manifest can store:
-# a date source would Hive-serialize as 'YYYY-MM-DD' in the path but the
-# manifest stores date partition values as int ordinals — parse would
-# crash AFTER the data write. Date layouts belong to day()/month().
-_IDENTITY_SOURCE_TYPES = {"string", "long", "int"}
+# identity partition source types -> their storage type in the manifest's
+# r102 record. Only these parse back exactly from the Hive path segments
+# Spark's partitionBy writes (a date would come back as 'YYYY-MM-DD').
+_ICEBERG_TO_AVRO = {"string": "string", "long": "long", "int": "int"}
 
 
 def manifest_entry_schema(spec_fields: list[dict] | None = None) -> dict:
@@ -650,6 +390,11 @@ def _schema_for_snapshot(meta: dict, snap: dict) -> dict:
 
 # ------------------------------------------------------------------- write
 
+def _names(cols) -> list[str]:
+    """A column name or a list of names -> a list of names."""
+    return [cols] if isinstance(cols, str) else list(cols or [])
+
+
 def write_iceberg_table(
     df: DataFrame,
     path: str,
@@ -666,31 +411,31 @@ def write_iceberg_table(
     new manifest (prior snapshots stay readable via ``snapshot_id=`` — an
     overwrite never deletes history, exactly like Iceberg).
 
-    ``stats_col`` (long/timestamp column) stores per-file [min, max] bounds
-    in the manifest — computed DISTRIBUTEDLY (one groupBy-input_file_name
-    aggregate over the freshly written files, not a driver loop over
-    footers); readers prune files against them before any scan.
+    ``stats_col`` (one or more long/int/timestamp columns) stores per-file
+    [min, max] bounds in the manifest — computed DISTRIBUTEDLY (one
+    groupBy-input_file_name aggregate over the freshly written files, not a
+    driver loop over footers); readers prune files against them before any
+    scan.
 
-    ``partition_by`` declares the partition spec: a bare column name
-    (string/long/int) is an IDENTITY transform; ``"day(col)"`` /
-    ``"month(col)"`` (timestamp/date source) are the spec's time
-    transforms — the idiomatic Iceberg layout for crawl data keyed by
-    capture time, stored as day/month ordinals (spec §Partition
-    Transforms). Data files land under one directory per partition value,
-    the values are recorded per file in the manifest entries (spec
-    §Manifests r102), and readers prune files against them at plan time
-    (``iceberg_data_files(partition_filter=...)`` — ``day_ordinal`` /
-    ``month_ordinal`` build filter values for transformed fields) — the
-    reference's core read trick (Hive-style partition pruning,
-    HdfsService.java:92-110 + PartitionPathFilter.java:33-82, typed
-    partition-value parse HdfsSerDeImportService.java:519-566) expressed
-    as a manifest walk. The partition SOURCE columns are KEPT in the data
-    files, so the read path is unchanged; the directory layout uses a
-    ``_p_<name>=`` alias to keep them there. Appends must use the table's
-    current spec (names AND transforms); an overwrite may change it (a new
-    spec-id becomes the default, as in Iceberg spec evolution). Identity
-    string partition values must not be '' — Spark's Hive layout conflates
-    '' with NULL, so the write raises before committing (ADVICE r5).
+    ``partition_by`` (a column name or a list of names, each a
+    string/long/int column) declares an IDENTITY partition spec. Data files
+    land under one directory per partition value, the values are recorded
+    per file in the manifest entries (spec §Manifests r102), and readers
+    prune files against them at plan time
+    (``iceberg_data_files(partition_filter=...)``) — the reference's core
+    read trick (Hive-style partition pruning, HdfsService.java:92-110 +
+    PartitionPathFilter.java:33-82, typed partition-value parse
+    HdfsSerDeImportService.java:519-566) expressed as a manifest walk. The
+    partition columns are KEPT in the data files, so the read path is
+    unchanged; the directory layout uses a ``_p_<name>=`` alias to keep
+    them there. Appends must use the table's current spec; an overwrite may
+    change it (a new spec-id becomes the default, as in Iceberg spec
+    evolution). String partition values must not be '' — Spark's Hive
+    layout conflates '' with NULL, so the write raises before committing
+    (ADVICE r5).
+
+    A bad ``stats_col`` or ``partition_by`` raises before any data file is
+    written.
 
     The metadata version and version-hint commit via temp-file +
     ``os.replace`` — a crash mid-commit can never brick reads with a torn
@@ -701,12 +446,31 @@ def write_iceberg_table(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     spark = df.sparkSession
     schema_json = iceberg_schema_for(df.schema)
-    part_fields = _parse_partition_by(partition_by)
-    for pf_ in part_fields:
-        if pf_["src"] not in df.columns:
+    col_types = {f["name"]: f["type"] for f in schema_json["fields"]}
+    part_cols = _names(partition_by)
+    for c in part_cols:
+        if c not in col_types:
             raise ValueError(
-                f"partition_by column {pf_['src']!r} not in DataFrame "
-                f"columns {df.columns}"
+                f"partition_by entry {c!r} is not a DataFrame column "
+                f"{df.columns}; iceberg_lite writes identity partitions "
+                "only (one bare column name per partition field)"
+            )
+        if not isinstance(col_types[c], str) \
+                or col_types[c] not in _ICEBERG_TO_AVRO:
+            raise TypeError(
+                f"partition_by column {c!r} has type {col_types[c]!r}; "
+                f"identity partitions support {sorted(_ICEBERG_TO_AVRO)}"
+            )
+    # per-file bounds are 8-byte longs: epoch-µs for timestamps, the value
+    # itself for long/int columns
+    stats_cols = _names(stats_col)
+    spark_types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    for sc in stats_cols:
+        if spark_types.get(sc) not in ("long", "integer", "timestamp",
+                                       "timestamp_ntz"):
+            raise ValueError(
+                f"stats column {sc!r} must be long/int/timestamp, "
+                f"got {spark_types.get(sc)!r}"
             )
     try:
         prev_meta = read_table_meta(path)
@@ -764,68 +528,17 @@ def write_iceberg_table(
         prev_meta, version, snapshot_id = None, 0, 1
         schemas = [schema_json]
 
-    # partition spec: identity + day/month transforms over schema field
-    # ids. Appends must match the table's current default spec (a silent
-    # mismatch would split the table across layouts); overwrite may
-    # introduce a new spec (fresh spec-id, like Iceberg partition-spec
-    # evolution).
+    # identity partition spec over schema field ids. Appends must match the
+    # table's current default spec (a silent mismatch would split the table
+    # across layouts); overwrite may introduce a new spec (fresh spec-id,
+    # like Iceberg partition-spec evolution).
     spec_fields = [
-        {"name": pf_["name"], "transform": pf_["transform"],
-         "source-id": _field_id(schema_json, pf_["src"]),
-         "field-id": 1000 + i}
-        for i, pf_ in enumerate(part_fields)
+        {"name": c, "transform": "identity",
+         "source-id": _field_id(schema_json, c), "field-id": 1000 + i}
+        for i, c in enumerate(part_cols)
     ]
-    col_types = {f["name"]: f["type"] for f in schema_json["fields"]}
-    for pf_ in part_fields:
-        src_t = col_types[pf_["src"]]
-        tr = pf_["transform"]
-        if not isinstance(src_t, str):
-            raise TypeError(
-                f"partition_by column {pf_['src']!r} has a nested type "
-                f"{src_t!r}; partition transforms need primitive sources"
-            )
-        if tr == "identity":
-            if src_t not in _IDENTITY_SOURCE_TYPES:
-                raise TypeError(
-                    f"partition_by column {pf_['src']!r} has type "
-                    f"{src_t!r}; identity specs support "
-                    f"{sorted(_IDENTITY_SOURCE_TYPES)} (use day()/month() "
-                    "for date/timestamp layouts)"
-                )
-        elif tr in _TIME_TRANSFORMS:
-            if src_t not in _TRANSFORM_SOURCE_TYPES:
-                raise TypeError(
-                    f"{tr}() partition transform needs a "
-                    f"timestamp/date source column; {pf_['src']!r} is {src_t!r}"
-                )
-        elif tr.startswith("bucket["):
-            if src_t not in _BUCKET_SOURCE_TYPES:
-                raise TypeError(
-                    f"bucket() partition transform supports "
-                    f"{sorted(_BUCKET_SOURCE_TYPES)} sources; "
-                    f"{pf_['src']!r} is {src_t!r}"
-                )
-        elif tr.startswith("truncate["):
-            if src_t not in _TRUNCATE_SOURCE_TYPES:
-                raise TypeError(
-                    f"truncate() partition transform supports "
-                    f"{sorted(_TRUNCATE_SOURCE_TYPES)} sources; "
-                    f"{pf_['src']!r} is {src_t!r}"
-                )
-
-    def _result_type(pf_: dict) -> str:
-        tr = pf_["transform"]
-        if tr == "identity" or tr.startswith("truncate["):
-            return col_types[pf_["src"]]
-        if tr.startswith("bucket["):
-            return "int"
-        return _TRANSFORM_RESULT_TYPE[tr]
-
-    # partition FIELD name -> stored value type (source type for identity
-    # and truncate, int for bucket, the transform's result type for
-    # day/month)
-    part_types = {pf_["name"]: _result_type(pf_) for pf_ in part_fields}
-    spec_key = [(pf_["name"], pf_["transform"]) for pf_ in part_fields]
+    part_types = {c: col_types[c] for c in part_cols}
+    spec_key = [(c, "identity") for c in part_cols]
 
     def _sp_key(sp: dict) -> list[tuple[str, str]]:
         return [(f["name"], f.get("transform", "identity"))
@@ -876,45 +589,16 @@ def write_iceberg_table(
     while os.path.exists(data_dir):
         attempt += 1
         data_dir = os.path.join(path, "data", f"snap-{snapshot_id}-r{attempt}")
-    # time-transform timezone guard (r6 advice): day()/month() over a
-    # TIMESTAMP source evaluate through session-timezone-dependent
-    # expressions (cast('date'), F.year/F.month); a non-UTC session would
-    # write ordinals that disagree with day_ordinal()/month_ordinal()
-    # filters and the spec's UTC ordinals — silent wrong pruning on later
-    # reads. Fail loud at write instead. DATE sources are tz-independent
-    # (a date has no zone), and bucket(timestamp) hashes unix_micros,
-    # which is tz-independent too — neither needs the guard.
-    tz_parts = [
-        pf_["name"] for pf_ in part_fields
-        if pf_["transform"] in ("day", "month")
-        and col_types[pf_["src"]] in ("timestamp", "timestamptz")
-    ]
-    if tz_parts:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
-            raise ValueError(
-                f"partition fields {tz_parts} use day()/month() over a "
-                f"timestamp source, but spark.sql.session.timeZone is "
-                f"{tz!r} — the written ordinals would disagree with the "
-                "spec's UTC ordinals and with day_ordinal()/"
-                "month_ordinal() filters. Set the session timezone to "
-                "UTC (session.get_spark/get_job_spark pin it)."
-            )
-    if part_fields:
+    if part_cols:
         # directory layout on a _p_<name> ALIAS: partitionBy strips its
         # columns from the data files, but partition SOURCE columns may
         # stay in the files per spec — keeping them means the read path
         # (explicit-schema read of file lists) needs no manifest-constant
-        # fill-in. Transformed fields are computed here, once, at write.
-        w = df
-        for pf_ in part_fields:
-            w = w.withColumn(
-                f"_p_{pf_['name']}",
-                _transform_expr(pf_["transform"], pf_["src"],
-                                pf_["param"], col_types[pf_["src"]]),
-            )
-        w.write.mode("errorifexists").partitionBy(
-            *[f"_p_{pf_['name']}" for pf_ in part_fields]
+        # fill-in.
+        df.select(
+            "*", *[F.col(c).alias(f"_p_{c}") for c in part_cols]
+        ).write.mode("errorifexists").partitionBy(
+            *[f"_p_{c}" for c in part_cols]
         ).parquet(data_dir)
     else:
         df.write.mode("errorifexists").parquet(data_dir)
@@ -923,22 +607,13 @@ def write_iceberg_table(
     # stats_col accepts a single column or a list — every stats column gets
     # [min, max] bounds in the manifest and becomes a pruning predicate.
     scan = spark.read.parquet(data_dir)
-    stats_cols = (
-        [stats_col] if isinstance(stats_col, str)
-        else list(stats_col or [])
-    )
     aggs = [F.count("*").alias("n")]
-    t = dict((f.name, f.dataType.typeName()) for f in df.schema.fields)
     for sc in stats_cols:
-        if t.get(sc) in ("timestamp", "timestamp_ntz"):
-            c = F.unix_micros(F.col(sc))
-        elif t.get(sc) in ("long", "integer", "date"):
-            c = F.col(sc).cast("long")
-        else:
-            raise ValueError(
-                f"stats column {sc!r} must be long/int/timestamp/date, "
-                f"got {t.get(sc)!r}"
-            )
+        c = (
+            F.unix_micros(F.col(sc))
+            if spark_types[sc].startswith("timestamp")
+            else F.col(sc).cast("long")
+        )
         aggs += [F.min(c).alias(f"lo_{sc}"), F.max(c).alias(f"hi_{sc}")]
     # empty-string guard (ADVICE r5): Spark's partitionBy writes
     # __HIVE_DEFAULT_PARTITION__ for BOTH null and '' values, so an
@@ -949,15 +624,7 @@ def write_iceberg_table(
     # job) and the raise lands BEFORE the metadata commit — the orphaned
     # snap dir is reclaimed by remove_orphan_files, the standard
     # crashed-commit path.
-    # identity AND truncate of a string both emit '' exactly when the
-    # source is '' (a W-char prefix of a non-empty string is non-empty),
-    # so the same source-column check covers both
-    id_str_parts = [
-        pf_["src"] for pf_ in part_fields
-        if (pf_["transform"] == "identity"
-            or pf_["transform"].startswith("truncate["))
-        and col_types[pf_["src"]] == "string"
-    ]
+    id_str_parts = [c for c in part_cols if col_types[c] == "string"]
     for c in id_str_parts:
         aggs.append(F.max(F.col(c) == F.lit("")).alias(f"emptyp_{c}"))
     stats = {
@@ -1285,21 +952,6 @@ def remove_orphan_files(path: str) -> dict:
     return {"deleted_files": removed, "live_files": len(live)}
 
 
-def iceberg_added_files(
-    path: str, from_snapshot_id: int, to_snapshot_id: int | None = None
-) -> list[str]:
-    """Data files live in ``to`` (default: current) but not in ``from`` —
-    the incremental-consumption primitive: a periodic encode job processes
-    only the files new commits added, never rescanning the table. Computed
-    as a set difference of the two snapshots' live file lists, which is
-    correct for appends AND overwrites (an overwrite's files are all
-    "added")."""
-    old, _ = iceberg_data_files(path, from_snapshot_id)
-    new, _ = iceberg_data_files(path, to_snapshot_id)
-    old_set = set(old)
-    return [f for f in new if f not in old_set]
-
-
 def read_iceberg_incremental(
     spark: SparkSession,
     path: str,
@@ -1309,15 +961,14 @@ def read_iceberg_incremental(
     """DataFrame over ONLY the rows added after ``from_snapshot_id`` — what
     the encode pipeline consumes per ingestion cycle. Composes with the
     content-addressed resume contract: even a re-run over an already-seen
-    diff skips every chunk."""
-    meta = read_table_meta(path)
-    files = iceberg_added_files(path, from_snapshot_id, to_snapshot_id)
-    # schema of the TO side (the snapshot whose rows are being consumed)
-    to_snap = _resolve_snapshot(meta, to_snapshot_id)
-    ddl = ddl_for_iceberg_schema(_schema_for_snapshot(meta, to_snap))
-    if not files:
-        return spark.createDataFrame([], ddl)
-    return spark.read.schema(ddl).parquet(*files)
+    diff skips every chunk.
+
+    The rows are those of the data files live in ``to`` (default: current)
+    but not in ``from``, read under the ``to`` snapshot's schema — correct
+    for appends AND overwrites (an overwrite's files are all "added"). An
+    expired ``from`` raises ``SnapshotNotFoundError``."""
+    seen, _ = iceberg_data_files(path, from_snapshot_id)
+    return read_iceberg_file_diff(spark, path, seen, to_snapshot_id)
 
 
 def read_iceberg_file_diff(

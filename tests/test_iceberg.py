@@ -7,6 +7,7 @@ iceberg_lite replaces the directory walk with manifest-driven planning and
 adds atomic commits the reference never had.
 """
 
+import glob
 import os
 
 import pytest
@@ -28,6 +29,14 @@ def _fingerprint(df):
     return df.select(
         F.bit_xor(F.xxhash64(*cols)).alias("h"), F.count("*").alias("n")
     ).collect()[0]
+
+
+def _data_files(tbl):
+    """Every file under a table's data/ directory."""
+    return [
+        f for f in glob.glob(os.path.join(tbl, "data", "**"), recursive=True)
+        if os.path.isfile(f)
+    ]
 
 
 def test_iceberg_roundtrip_bit_identical(spark, tmp_path):
@@ -252,6 +261,18 @@ def test_iceberg_column_subset_and_schema_guard(spark, tmp_path):
         write_iceberg_table(
             pages.withColumn("lang", F.length("lang")), tbl, mode="append"
         )
+    # a bad stats column (a DATE column, a misspelled name) fails before
+    # any data file is written, on a fresh path and on an existing table
+    dated = pages.withColumn("d", F.to_date("warc_ts"))
+    n_files = len(_data_files(tbl))
+    for bad in ("d", "dd"):
+        fresh = str(tmp_path / f"fresh_{bad}")
+        with pytest.raises(ValueError, match="stats column"):
+            write_iceberg_table(dated, fresh, mode="overwrite", stats_col=bad)
+        assert _data_files(fresh) == []
+        with pytest.raises(ValueError, match="stats column"):
+            write_iceberg_table(dated, tbl, mode="append", stats_col=bad)
+    assert len(_data_files(tbl)) == n_files
     # the failed commits did not advance the table version
     assert read_table_meta(tbl)["current-snapshot-id"] == 1
 
@@ -463,110 +484,6 @@ def test_iceberg_partition_values_with_special_chars(spark, tmp_path):
     assert 0 < st["files_kept"] < st["files_total"]
 
 
-def test_iceberg_day_transform_partition_prunes_and_reads_exact(spark, tmp_path):
-    """day(warc_ts) time-transform partition spec (r5 verdict item 7): the
-    idiomatic Iceberg layout for crawl data keyed by capture time (spec
-    §Partition Transforms). Day ordinals are recorded in manifest entries,
-    prune files at PLAN time, and reads stay value-exact — the table-format
-    analogue of the reference's typed partition-value parse
-    (HdfsSerDeImportService.java:519-566)."""
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import day_ordinal
-
-    tbl = str(tmp_path / "tbl")
-    # the synthetic crawl spans <1 min of warc_ts — spread it over 4 days
-    # so the day transform has multiple partitions to prune between
-    pages = (
-        synthesize_pages(spark, 400, seed=23)
-        .withColumn(
-            "warc_ts",
-            F.timestamp_micros(
-                F.unix_micros("warc_ts")
-                + F.pmod(F.xxhash64("url"), F.lit(4)) * F.lit(86_400_000_000)
-            ),
-        )
-        .cache()
-    )
-    write_iceberg_table(
-        pages, tbl, mode="overwrite", partition_by="day(warc_ts)"
-    )
-    meta = read_table_meta(tbl)
-    spec = meta["partition-specs"][meta["default-spec-id"]]
-    assert [(f["name"], f["transform"]) for f in spec["fields"]] == [
-        ("warc_ts_day", "day")
-    ]
-    days = sorted(
-        r["d"]
-        for r in pages.select(
-            F.datediff(F.col("warc_ts").cast("date"), F.lit("1970-01-01"))
-            .alias("d")
-        ).distinct().collect()
-    )
-    assert len(days) > 1  # the synthetic corpus spans multiple days
-    pick = days[0]
-    _, st = iceberg_data_files(tbl, partition_filter={"warc_ts_day": pick})
-    assert 0 < st["files_kept"] < st["files_total"]
-    pruned = read_iceberg(spark, tbl, partition_filter={"warc_ts_day": pick})
-    expect = pages.filter(
-        F.datediff(F.col("warc_ts").cast("date"), F.lit("1970-01-01")) == pick
-    )
-    assert _fingerprint(pruned) == _fingerprint(expect)
-    # day_ordinal builds the same stored value from a date string
-    iso = (
-        pages.select(F.date_format(F.col("warc_ts").cast("date"), "yyyy-MM-dd")
-                     .alias("s")).orderBy("s").first()["s"]
-    )
-    assert day_ordinal(iso) == pick
-    # full read unchanged; appends must match name AND transform
-    assert _fingerprint(read_iceberg(spark, tbl)) == _fingerprint(pages)
-    with pytest.raises(ValueError, match="must use the current spec"):
-        write_iceberg_table(
-            pages.limit(10), tbl, mode="append", partition_by="month(warc_ts)"
-        )
-    write_iceberg_table(
-        pages.limit(10), tbl, mode="append", partition_by="day(warc_ts)"
-    )
-    pages.unpersist()
-
-
-def test_iceberg_month_transform_and_ordinal_helpers(spark, tmp_path):
-    """month() transform stores months-from-1970-01 ordinals; the helpers
-    translate human dates to stored filter values."""
-    from pyspark.sql import Row
-
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import (
-        day_ordinal,
-        month_ordinal,
-    )
-
-    assert day_ordinal("1970-01-01") == 0
-    assert day_ordinal("1970-02-01") == 31
-    assert month_ordinal("1970-01") == 0
-    assert month_ordinal("2024-03") == (2024 - 1970) * 12 + 2
-
-    tbl = str(tmp_path / "tbl")
-    import datetime as dt
-
-    rows = [
-        Row(doc_id=i, ts=dt.datetime(2024, 1 + (i % 3), 5, 12, 0, 0))
-        for i in range(30)
-    ]
-    df = spark.createDataFrame(rows)
-    write_iceberg_table(df, tbl, mode="overwrite", partition_by="month(ts)")
-    pick = month_ordinal("2024-02")
-    _, st = iceberg_data_files(tbl, partition_filter={"ts_month": pick})
-    assert 0 < st["files_kept"] < st["files_total"]
-    pr = read_iceberg(spark, tbl, partition_filter={"ts_month": pick})
-    assert _fingerprint(pr) == _fingerprint(
-        df.filter(F.month("ts") == 2)
-    )
-    # a non-time column rejects time transforms loudly
-    with pytest.raises(TypeError, match="timestamp/date source"):
-        write_iceberg_table(
-            df, str(tmp_path / "bad"), mode="overwrite",
-            partition_by="day(doc_id)",
-        )
-
-
 def test_iceberg_empty_string_partition_value_rejected(spark, tmp_path):
     """Spark's Hive layout writes __HIVE_DEFAULT_PARTITION__ for BOTH null
     and '' — indistinguishable in the manifest, so a pruned read for ''
@@ -589,209 +506,22 @@ def test_iceberg_empty_string_partition_value_rejected(spark, tmp_path):
     assert _fingerprint(read_iceberg(spark, tbl)) == _fingerprint(ok)
 
 
-def test_bucket_hash_matches_iceberg_spec_vectors():
-    """The bucket transform's hash is spec murmur3_x86_32 seed 0 — pinned
-    to the PUBLIC test vectors in the Iceberg spec (Appendix B), so
-    bucket-partitioned tables this engine writes place rows in the same
-    buckets a real Iceberg writer would."""
-    import numpy as np
-
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import (
-        _murmur3_bytes,
-        _murmur3_long,
-        bucket_value,
-    )
-
-    assert int(_murmur3_long(np.array([34]))[0]) == 2017239379
-    assert int(_murmur3_long(np.array([17486]))[0]) == -653330422  # date
-    assert int(_murmur3_long(np.array([1510871468000000]))[0]) == -2047944441
-    assert int(_murmur3_bytes([b"iceberg"])[0]) == 1210000089
-    # the batch kernel agrees with a scalar re-derivation on every tail
-    # length (0-3 bytes past the last full block), incl. the empty string
-    def scalar(b: bytes) -> int:
-        h = np.zeros(1, dtype=np.uint32)
-        from hadoop_etl_udfs_spark.sources.iceberg_lite import (
-            _MM_C1, _MM_C2, _mm_fmix, _mm_mix, _mm_rotl,
-        )
-        n = len(b)
-        for i in range(0, n - n % 4, 4):
-            h = _mm_mix(h, np.array([int.from_bytes(b[i:i+4], "little")],
-                                    dtype=np.uint32))
-        if n % 4:
-            k = np.array([int.from_bytes(b[n - n % 4:], "little")],
-                         dtype=np.uint32)
-            k = k * _MM_C1
-            k = _mm_rotl(k, 15)
-            k = k * _MM_C2
-            h = h ^ k
-        return int(_mm_fmix(h ^ np.uint32(n)).view(np.int32)[0])
-
-    probes = [b"", b"a", b"ab", b"abc", b"abcd", b"abcdefg", b"hello world!!"]
-    batch = _murmur3_bytes(probes)
-    assert [int(x) for x in batch] == [scalar(p) for p in probes]
-    assert bucket_value("iceberg", 16) == (1210000089 & 0x7FFFFFFF) % 16
-    assert bucket_value(34, 7) == (2017239379 & 0x7FFFFFFF) % 7
-    # r7 flat-buffer rewrite: one outlier-length value in a large batch
-    # must neither disturb the other rows nor hash differently itself
-    # (the old dense layout inflated the batch to n*max_len bytes; the
-    # refactor's hazard is cross-row contamination through the flat
-    # buffer, which the tail mask must prevent)
-    outlier = b"y" * 100_001
-    mixed = [b"x"] * 5000 + [outlier] + [b"trail", b""]
-    got = _murmur3_bytes(mixed)
-    assert (got[:5000] == int(_murmur3_bytes([b"x"])[0])).all()
-    assert int(got[5000]) == int(_murmur3_bytes([outlier])[0])
-    assert int(got[5001]) == scalar(b"trail")
-    assert int(got[5002]) == scalar(b"")
-
-
-def test_iceberg_day_transform_rejects_non_utc_session(spark, tmp_path):
-    """day()/month() over a TIMESTAMP source are session-tz-dependent
-    expressions; a non-UTC session must be rejected at write (r6 advice)
-    — silently writing non-UTC ordinals would disagree with
-    day_ordinal()/month_ordinal() filters and the spec."""
-    import pytest
-
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import (
-        write_iceberg_table,
-    )
-
-    df = spark.sql(
-        "SELECT 1 AS id, TIMESTAMP '2024-03-01 23:30:00' AS ts"
-    )
-    tz0 = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        with pytest.raises(ValueError, match="timeZone"):
-            write_iceberg_table(
-                df, str(tmp_path / "tz_guard"), partition_by=["day(ts)"]
-            )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz0)
-    # UTC session: same write commits fine
-    write_iceberg_table(
-        df, str(tmp_path / "tz_ok"), partition_by=["day(ts)"]
-    )
-
-
-def test_iceberg_bucket_transform_prunes_and_reads_exact(spark, tmp_path):
-    """bucket(N, url): the point-lookup layout for a high-cardinality
-    key. A partition_filter on bucket_value(url, N) keeps ~1/N of the
-    files and the pruned read is value-exact."""
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import bucket_value
-
-    tbl = str(tmp_path / "tbl")
-    pages = synthesize_pages(spark, 600, seed=7).cache()
-    write_iceberg_table(
-        pages, tbl, mode="overwrite", partition_by="bucket(8, url)"
-    )
-    meta = read_table_meta(tbl)
-    spec = meta["partition-specs"][meta["default-spec-id"]]
-    assert [(f["name"], f["transform"]) for f in spec["fields"]] == [
-        ("url_bucket", "bucket[8]")
-    ]
-    url = pages.select("url").first()["url"]
-    b = bucket_value(url, 8)
-    _, st = iceberg_data_files(tbl, partition_filter={"url_bucket": b})
-    assert 0 < st["files_kept"] < st["files_total"]
-    pruned = read_iceberg(spark, tbl, partition_filter={"url_bucket": b})
-    # the pruned read contains every row of the looked-up url, exactly
-    got = pruned.filter(F.col("url") == url)
-    expect = pages.filter(F.col("url") == url)
-    assert _fingerprint(got) == _fingerprint(expect)
-    assert _fingerprint(read_iceberg(spark, tbl)) == _fingerprint(pages)
-    # append must carry the same transform AND parameter
-    with pytest.raises(ValueError, match="must use the current spec"):
-        write_iceberg_table(
-            pages.limit(5), tbl, mode="append", partition_by="bucket(16, url)"
-        )
-    pages.unpersist()
-
-
-def test_iceberg_bucket_long_and_null_handling(spark, tmp_path):
-    """bucket over a long source hashes the 8-byte little-endian form;
-    NULL sources land in the NULL partition, not bucket 0."""
-    from pyspark.sql import Row
-
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import bucket_value
-
-    tbl = str(tmp_path / "tbl")
-    rows = [Row(doc_id=i, v=(None if i % 5 == 0 else i * 37)) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, v long")
-    write_iceberg_table(df, tbl, mode="overwrite", partition_by="bucket(4, v)")
-    back = read_iceberg(spark, tbl)
-    assert _fingerprint(back) == _fingerprint(df)
-    pick = bucket_value(37, 4)
-    pr = read_iceberg(spark, tbl, partition_filter={"v_bucket": pick})
-    assert pr.filter(F.col("v") == 37).count() == 1
-    # NULL rows survive a full read and are absent from any bucket filter
-    assert back.filter(F.col("v").isNull()).count() == 8
-    assert pr.filter(F.col("v").isNull()).count() == 0
-
-
-def test_iceberg_truncate_transform_long_and_string(spark, tmp_path):
-    """truncate[W]: floor binning for longs (spec: truncate(-1, 10) = -10,
-    via pmod) and W-char prefixes for strings."""
-    from pyspark.sql import Row
-
-    tbl_l = str(tmp_path / "tl")
-    df = spark.createDataFrame(
-        [Row(doc_id=i, v=v) for i, v in enumerate([-21, -1, 0, 1, 9, 10, 95])],
-        "doc_id long, v long",
-    )
-    write_iceberg_table(df, tbl_l, mode="overwrite", partition_by="truncate(10, v)")
-    meta = read_table_meta(tbl_l)
-    spec = meta["partition-specs"][meta["default-spec-id"]]
-    assert spec["fields"][0]["transform"] == "truncate[10]"
-    # spec floor semantics: -1 -> -10, -21 -> -30
-    _, st = iceberg_data_files(tbl_l, partition_filter={"v_trunc": -10})
-    assert 0 < st["files_kept"] < st["files_total"]
-    pr = read_iceberg(spark, tbl_l, partition_filter={"v_trunc": -10})
-    assert sorted(r["v"] for r in pr.collect()) == [-1]
-    pr = read_iceberg(spark, tbl_l, partition_filter={"v_trunc": -30})
-    assert sorted(r["v"] for r in pr.collect()) == [-21]
-    assert _fingerprint(read_iceberg(spark, tbl_l)) == _fingerprint(df)
-
-    tbl_s = str(tmp_path / "ts")
-    ds = spark.createDataFrame(
-        [Row(doc_id=i, u=u) for i, u in
-         enumerate(["alpha", "alps", "beta", "be", "gamma"])],
-        "doc_id long, u string",
-    )
-    write_iceberg_table(ds, tbl_s, mode="overwrite", partition_by="truncate(2, u)")
-    pr = read_iceberg(spark, tbl_s, partition_filter={"u_trunc": "al"})
-    assert sorted(r["u"] for r in pr.collect()) == ["alpha", "alps"]
-    pr = read_iceberg(spark, tbl_s, partition_filter={"u_trunc": "be"})
-    assert sorted(r["u"] for r in pr.collect()) == ["be", "beta"]
-    assert _fingerprint(read_iceberg(spark, tbl_s)) == _fingerprint(ds)
-
-
-def test_iceberg_parameterized_transform_validation(spark, tmp_path):
-    """Loud rejects: missing/zero parameter, wrong source type, and the
-    empty-string guard extends to truncate(string) sources (a '' source
-    truncates to '' and Hive layout conflates that with NULL)."""
+def test_iceberg_partition_by_is_identity_only(spark, tmp_path):
+    """partition_by names identity columns only: a transform expression or
+    a missing column is not a column (ValueError), and a column outside
+    string/long/int is the wrong type (TypeError). Both fail before any
+    data file is written."""
     from pyspark.sql import Row
 
     df = spark.createDataFrame([Row(doc_id=1, v=2.5, u="x")])
-    with pytest.raises(ValueError, match="positive parameter"):
-        write_iceberg_table(df, str(tmp_path / "a"), partition_by="bucket(u)")
-    with pytest.raises(ValueError, match="positive parameter"):
-        write_iceberg_table(
-            df, str(tmp_path / "b"), partition_by="truncate(0, u)"
-        )
-    with pytest.raises(TypeError, match="bucket"):
-        write_iceberg_table(
-            df, str(tmp_path / "c"), partition_by="bucket(4, v)"
-        )
-    with pytest.raises(TypeError, match="truncate"):
-        write_iceberg_table(
-            df, str(tmp_path / "d"), partition_by="truncate(4, v)"
-        )
-    bad = spark.createDataFrame([Row(doc_id=1, u=""), Row(doc_id=2, u="ok")])
-    with pytest.raises(ValueError, match="empty-string"):
-        write_iceberg_table(
-            bad, str(tmp_path / "e"), partition_by="truncate(2, u)"
-        )
+    for i, bad in enumerate(["day(u)", "bucket(4, u)", "nope"]):
+        with pytest.raises(ValueError, match="identity partitions only"):
+            write_iceberg_table(df, str(tmp_path / f"t{i}"), partition_by=bad)
+    with pytest.raises(TypeError, match="identity partitions support"):
+        write_iceberg_table(df, str(tmp_path / "t3"), partition_by="v")
+    assert not any(
+        os.path.exists(tmp_path / f"t{i}" / "data") for i in range(4)
+    )
 
 
 def test_iceberg_list_column_roundtrip_time_travel_and_evolution(spark, tmp_path):
@@ -843,31 +573,3 @@ def test_iceberg_list_column_roundtrip_time_travel_and_evolution(spark, tmp_path
     assert allr.filter(F.col("emb2").isNull()).count() == emb.count()
     assert allr.filter(F.col("emb2").isNotNull()).count() == 10
     emb.unpersist()
-
-
-def test_iceberg_bucket_long_precision_with_nulls(spark, tmp_path):
-    """Regression (round-6 review): a nullable long column reaches a naive
-    pandas UDF as float64, rounding values above 2^53 BEFORE hashing —
-    wrong buckets in the manifest, silently pruned reads. The when/coalesce
-    wrapper keeps the UDF batch null-free int64, so bucket placement must
-    match bucket_value() exactly for 63-bit values even when the column
-    holds NULLs."""
-    from pyspark.sql import Row
-
-    from hadoop_etl_udfs_spark.sources.iceberg_lite import bucket_value
-
-    big = [(1 << 62) + 37, (1 << 60) + 12345, 9007199254740993,  # 2^53 + 1
-           (1 << 58) + 7, 123456789012345679]
-    rows = [Row(doc_id=i, v=v) for i, v in enumerate(big)]
-    rows += [Row(doc_id=99, v=None), Row(doc_id=98, v=None)]
-    df = spark.createDataFrame(rows, "doc_id long, v long")
-    tbl = str(tmp_path / "tbl")
-    write_iceberg_table(df, tbl, mode="overwrite", partition_by="bucket(8, v)")
-    assert _fingerprint(read_iceberg(spark, tbl)) == _fingerprint(df)
-    for v in big:
-        pr = read_iceberg(
-            spark, tbl, partition_filter={"v_bucket": bucket_value(v, 8)}
-        )
-        # the exact-hash filter must KEEP the file holding v — a rounded
-        # write-time hash would have placed it in a different bucket
-        assert pr.filter(F.col("v") == v).count() == 1, v
