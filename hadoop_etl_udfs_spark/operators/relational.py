@@ -504,9 +504,8 @@ def json_quoted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gap_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch gap-based sessionization (30-min inactivity splits a session):
-    lag + conditional flag + running sum — the batch twin of the engine's
-    stateful streaming sessionizer (streaming/encode_stream.py), here fully
-    SQL-expressible and oracle-checked. At scale this is one shuffle on
+    lag + conditional flag + running sum, fully SQL-expressible and
+    oracle-checked. At scale this is one shuffle on
     user_id; the two window functions share the same partitioning."""
     from pyspark.sql import Window
 

@@ -9,7 +9,7 @@ One invocation = one tick: encode-append exactly the snapshot diff since
 the sink's watermark (noop when the table hasn't moved). Run it from cron /
 an external scheduler; ticks are at-least-once safe — a tick that died
 mid-way replays and the content-addressed skip-set keeps the sink
-exactly-once (see streaming/encode_stream.iceberg_ingest_tick).
+exactly-once (see plans/lineage.iceberg_ingest_tick).
 Prints one JSON line describing what the tick did.
 """
 
@@ -41,7 +41,7 @@ def main() -> None:
     from hadoop_etl_udfs_spark.session import get_job_spark
 
     spark = get_job_spark("iceberg_ingest")
-    from hadoop_etl_udfs_spark.streaming.encode_stream import iceberg_ingest_tick
+    from hadoop_etl_udfs_spark.plans.lineage import iceberg_ingest_tick
 
     salt = (
         args.salt_buckets

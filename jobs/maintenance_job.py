@@ -25,8 +25,8 @@ on bloomed sinks even the key scan is bloom-pruned. ``--ids-file`` takes
 one key per line (utf-8); ``--int-ids`` parses ids as int64 for integer
 key columns — the sink's recorded bloom domain rejects a mismatch loud.
 
-compact: merges fragment chunks (n_rows < --min-rows) the streaming
-encode accretes; victims chosen from manifest metadata only.
+compact: merges fragment chunks (n_rows < --min-rows) that small appends
+and ingest ticks accrete; victims chosen from manifest metadata only.
 
 stats: scan-free per-column sink statistics from the manifest alone
 (plans.lineage.sink_stats) — one JSON line per column; payload bytes are

@@ -4,7 +4,7 @@ step — plans.lineage.recluster_sink).
 Rewrites an existing encoded-chunk sink range-clustered on a numeric-domain
 column, so time/range decodes prune at the scan
 (decode_chunks_where_clustered). Use on sinks built before clustering or
-appended incrementally by the streaming encode.
+appended incrementally without ``--cluster-by`` (appends, ingest ticks).
 
     python tools/package.py   # builds dist/hadoop_etl_udfs_spark.zip
     spark-submit --master 'local[8]' \

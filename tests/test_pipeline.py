@@ -307,6 +307,126 @@ def test_every_sink_append_goes_through_append_encoded():
     assert not bad, f"re-inlined resumable append at {bad}"
 
 
+def _sink_state(spark, out):
+    """(chunk id -> (distinct column rows, rows), decoded full-row hashes)
+    of the sink, both from ONE listing of its files."""
+    enc = lineage.read_encoded(spark, out)
+    chunks = {
+        r["chunk_id"]: (r["n_cols"], r["n_rows"])
+        for r in enc.groupBy("chunk_id")
+        .agg(F.countDistinct("column").alias("n_cols"),
+             F.max("n_rows").alias("n_rows")).collect()
+    }
+    return chunks, _row_hashes(decode_chunks(enc))
+
+
+def _row_hashes(df) -> list:
+    return [r[0] for r in df.select(F.xxhash64(*df.columns)).collect()]
+
+
+def test_append_is_chunk_atomic_to_a_concurrent_reader(spark, tmp_path):
+    """A reader of the sink while append_encoded runs sees the wave-1
+    chunks plus zero or more WHOLE wave-2 chunks — never a chunk missing a
+    column row, never a decoded row that differs from its input. Not "old
+    set or new set": the job commit renames task files into place one at
+    a time, and each file holds whole chunks, so only the chunk is
+    atomic. Wave 2 is one large unshuffled partition: a long append that
+    leaves the other cores to the reader."""
+    import threading
+    import time
+
+    out = str(tmp_path / "sink")
+    wave1 = synthesize_pages(spark, 500, seed=23)
+    wave2 = synthesize_pages(spark, 40000, seed=29, num_partitions=1)
+    want = set(_row_hashes(wave1)) | set(_row_hashes(wave2))
+    lineage.append_encoded(wave1, out)
+    ids1 = set(_sink_state(spark, out)[0])
+    sc, failed = spark.sparkContext, []
+
+    def append_wave2():
+        sc.setJobGroup("append", "append")
+        try:
+            lineage.append_encoded(wave2, out, shuffle=False)
+        except Exception as e:  # reported on the main thread
+            failed.append(e)
+
+    writer = threading.Thread(target=append_wave2)
+    st = sc.statusTracker()
+    seen, mid_reads = [], 0
+    deadline = time.monotonic() + 600
+    writer.start()
+    while writer.is_alive() and time.monotonic() < deadline:
+        mid = bool(
+            set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup("append"))
+        )
+        chunks, rows = _sink_state(spark, out)
+        torn = {c: n for c, (n, _) in chunks.items() if n != 5}
+        assert not torn, f"chunks missing a column row visible: {torn}"
+        assert ids1 <= set(chunks)
+        assert len(rows) == sum(n for _, n in chunks.values())
+        assert set(rows) <= want
+        seen.append(set(chunks) - ids1)
+        mid_reads += mid
+    writer.join(timeout=60)
+    assert not writer.is_alive() and not failed, failed
+    assert mid_reads >= 2, "the append finished before two mid-write reads"
+    ids2 = set(_sink_state(spark, out)[0]) - ids1
+    assert ids2 and all(s <= ids2 for s in seen)
+    res = verify_roundtrip(
+        wave1.unionAll(wave2), lineage.read_encoded(spark, out)
+    )
+    assert res["ok"], res
+
+
+def test_failed_append_leaves_the_sink_unchanged(spark, tmp_path):
+    """An append whose write stage fails after other tasks committed their
+    files to ``_temporary`` changes nothing a reader sees: the same chunk
+    ids, the same decoded rows, no data file outside ``_temporary``. (A
+    killed driver is the other half of the crash contract; it is exercised
+    by tools/kill_resume_evidence.py.)"""
+    import glob
+    import os
+
+    out = str(tmp_path / "sink")
+    lineage.append_encoded(synthesize_pages(spark, 1000, seed=29), out)
+    chunks_before, rows_before = _sink_state(spark, out)
+
+    def data_files():
+        return {
+            f for f in glob.glob(os.path.join(out, "**"), recursive=True)
+            if os.path.isfile(f) and "_temporary" not in f
+        }
+
+    files_before = data_files()
+    # 8 partitions on 4 cores: the last one runs after earlier tasks have
+    # committed, and local mode does not retry the failed task
+    n = 8
+    pages = synthesize_pages(spark, 4000, seed=31, num_partitions=n)
+    bad = pages.withColumn("text", F.when(
+        F.spark_partition_id() == n - 1, F.raise_error(F.lit("append aborted"))
+    ).otherwise(F.col("text")))
+    sc = spark.sparkContext
+    sc.setJobGroup("abort", "abort")
+    try:
+        with pytest.raises(Exception, match="append aborted"):
+            lineage.append_encoded(bad, out, shuffle=False)
+        st = sc.statusTracker()
+        (write,) = [
+            st.getJobInfo(j) for j in st.getJobIdsForGroup("abort")
+            if st.getJobInfo(j).status == "FAILED"
+        ]
+        done_tasks = sum(
+            st.getStageInfo(s).numCompletedTasks for s in write.stageIds
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done_tasks > 0  # some task output reached _temporary first
+    chunks_after, rows_after = _sink_state(spark, out)
+    assert chunks_after == chunks_before
+    assert sorted(rows_after) == sorted(rows_before)
+    assert data_files() == files_before
+
+
 def test_partial_duplicate_chunk_not_marked_complete(spark, pages):
     """ADVICE round 1: duplicate manifest rows must not let a chunk with a
     missing column count as complete (countDistinct, not count(*))."""

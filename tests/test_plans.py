@@ -1390,8 +1390,8 @@ def test_rewrites_on_duplicated_sink(spark, tmp_path):
 
 
 def test_compact_sink_merges_fragments_surgically(spark, tmp_path):
-    """Small-chunk compaction: fragment chunks (streaming micro-batch
-    leftovers) merge to full-size chunks chosen by MANIFEST metadata only;
+    """Small-chunk compaction: fragment chunks (small-append and
+    ingest-tick leftovers) merge to full-size chunks chosen by MANIFEST metadata only;
     full-size chunks carry over raw (byte-identical payloads); content is
     exact; blooms re-stamp; stamped sinks require cluster_by and stay
     range-stamped; a lone fragment and a fragment-free sink are copies."""

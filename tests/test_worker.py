@@ -147,9 +147,6 @@ def test_kernel_walker_descends_into_lambdas():
 # for the reason given. Any other such name is code only tests reach: delete
 # it with its tests, or add it here with its reason.
 _TEST_ONLY = {
-    "start_encode_stream": "the sink's streaming write path (exactly-once tests)",
-    "start_curated_encode_stream": "the gated streaming write path (exactly-once tests)",
-    "start_decode_stream": "the sink's streaming read path (exactly-once tests)",
     "read_pages": "reference S1: format-dispatched scan",
     "supported_formats": "the format list that read_pages dispatches on",
     "save_catalog_table": "reference S9: catalog-backed sink",
