@@ -292,6 +292,8 @@ def encode_array(
     The reference's only write metric is the exact logical ``rowsExported``
     count (HdfsSerDeExportService.java:90) — same principle: account what
     was written, never infer it back from physical buffer sizes."""
+    from . import selector  # imports this module's codec tables
+
     col = arr if isinstance(arr, CanonicalColumn) else canonical_column(arr)
     typ, kind, n = col.arr.type, col.kind, len(col.arr)
 
@@ -321,9 +323,7 @@ def encode_array(
     elif kind == "varbytes":
         lengths, data = col.streams
         if codec == "auto":
-            from .selector import choose_bytes_codec
-
-            codec = choose_bytes_codec(
+            codec = selector.choose_bytes_codec(
                 lengths, data, global_dict=global_dict, cache_key=cache_key
             )
         enc = _BYTES_CODECS[codec][0]
@@ -335,17 +335,11 @@ def encode_array(
             sections, cmeta = enc(lengths, data)
     else:
         (values,) = col.streams
-        if kind == "float":
-            if codec == "auto":
-                from .selector import choose_float_codec
-
-                codec = choose_float_codec(values)
-            if codec not in ("raw", "dict"):
-                raise ValueError(f"codec {codec} unsupported for float chunks")
-        elif codec == "auto":
-            from .selector import choose_int_codec
-
-            codec = choose_int_codec(values)
+        allowed = ("raw", "dict") if kind == "float" else tuple(_INT_CODECS)
+        if codec == "auto":
+            codec = selector.choose_int_codec(values, allowed)
+        if codec not in allowed:
+            raise ValueError(f"codec {codec} unsupported for {kind} chunks")
         sections, cmeta = _INT_CODECS[codec][0](values)
 
     null_bm = col.null_bitmap()

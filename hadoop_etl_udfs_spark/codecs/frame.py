@@ -61,16 +61,6 @@ def block_decompress(enc: int, stored: bytes, raw_len: int) -> bytes:
     raise CorruptChunkError(f"unknown section encoding id {enc}")
 
 
-def block_trial_ratio(data, max_bytes: int = 1 << 16) -> float:
-    """Sampled compressed/raw ratio of ``data`` under the block codec —
-    the selector's cost-model input for 'raw + block stage'."""
-    window = bytes(data[:max_bytes]) if len(data) else b""
-    if len(window) < _MIN_COMPRESS:
-        return 1.0
-    _, stored = block_compress(window)
-    return len(stored) / len(window)
-
-
 def pack_sections(sections: dict[str, bytes]) -> bytes:
     parts = [MAGIC, struct.pack("<H", len(sections))]
     for name, payload in sections.items():

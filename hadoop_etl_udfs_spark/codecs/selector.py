@@ -1,188 +1,123 @@
-"""Sampled trial-encode cost model: pick the winning codec per column-chunk.
+"""Trial-pack cost model: pick the winning codec per column-chunk.
 
 The reference offers no such choice — every column goes through parquet-mr
 with dictionary-on and a single user-chosen block codec for the whole file
 (ExaParquetWriterImpl.java:36-45, COMPRESSION_TYPE at ExportHCatTable.java:44).
-Here each column-chunk independently gets the codec with the smallest
-estimated encoded size, estimated from cheap exact stats (ints) or a sampled
-trial encode (strings); ties break toward the cheaper-to-decode codec.
+Here each column-chunk independently gets the codec that stores the fewest
+bytes on one bounded sample of the chunk: every candidate is encoded with its
+real encoder and packed through the frame's block stage (zstd), so a codec is
+judged by its size after the block stage, as it will be stored. Ties break
+toward the cheaper-to-decode codec.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from . import fsst
+from . import dictenc, fsst
+from .api import _BYTES_CODECS, _INT_CODECS
 from .bitpack import bits_needed
+from .frame import pack_sections
 from .varbytes import varbytes_to_arrow
 
 # decode-cost rank for tie-breaking (lower = cheaper to decode)
 _DECODE_RANK = {"raw": 0, "forbp": 1, "dict": 2, "rle": 3, "fsst": 4}
 
-_SAMPLE_VALUES = 4096     # contiguous value sample for uniq/run stats
-_FSST_SAMPLE_BYTES = 1 << 16  # trial-encode window for fsst ratio
+# value bytes the trial packs: the whole chunk up to this size, otherwise
+# four non-overlapping windows of a quarter of it each. Capping bytes, not
+# values, keeps the trial's cost flat on long strings (html, text)
+_SAMPLE_BYTES = 1 << 16
 
 
-def _pick(estimates: dict[str, float]) -> str:
-    return min(estimates.items(), key=lambda kv: (kv[1], _DECODE_RANK[kv[0]]))[0]
+def _windows(offs: np.ndarray) -> list[tuple[int, int]]:
+    """Value-index ranges of the trial sample, from the chunk's cumulative
+    value byte offsets (``n + 1`` of them). Four windows spread across the
+    chunk keep run adjacency observable within each, and a value
+    distribution that drifts along the chunk (sorted data, constant head +
+    varied tail) cannot fool the trial the way a head-only sample does."""
+    n = len(offs) - 1
+    if offs[-1] <= _SAMPLE_BYTES:
+        return [(0, n)]
+    per = _SAMPLE_BYTES // 4
+    out, prev = [], 0
+    for s in (0, n // 4, n // 2, int(np.searchsorted(offs, offs[-1] - per))):
+        # at least one value per window; windows never overlap, so a
+        # value is never counted twice
+        s = max(min(s, n - 1), prev)
+        e = int(np.searchsorted(offs, offs[s] + per, side="right")) - 1
+        e = min(n, max(s + 1, e))
+        if s < e:
+            out.append((s, e))
+            prev = e
+    return out
 
 
-def choose_int_codec(values: np.ndarray) -> str:
+def _pick(sizes: dict[str, float]) -> str:
+    return min(sizes.items(), key=lambda kv: (kv[1], _DECODE_RANK[kv[0]]))[0]
+
+
+def choose_int_codec(
+    values: np.ndarray, candidates: tuple[str, ...] = ("raw", "forbp", "rle", "dict")
+) -> str:
+    """Fixed-width chunks (int64 canonical values). Floats pass their bit
+    patterns with ``candidates=("raw", "dict")``."""
     n = len(values)
     if n == 0:
         return "raw"
-    v = np.ascontiguousarray(values, dtype=np.int64)
-    vmin, vmax = int(v.min()), int(v.max())
-    w_for = bits_needed(vmax - vmin)
-    # exact run stats — one vector comparison
-    change = np.flatnonzero(v[1:] != v[:-1]) + 1
-    n_runs = len(change) + 1
-    starts = np.concatenate(([0], change))
-    run_lengths = np.diff(np.concatenate((starts, [n])))
-    w_rl = bits_needed(int(run_lengths.max()) - int(run_lengths.min()))
-    run_vals = v[starts]
-    w_rv = bits_needed(int(run_vals.max()) - int(run_vals.min())) if n_runs else 0
-    # sampled unique estimate for dict
-    sample = v[:: max(1, n // _SAMPLE_VALUES)][:_SAMPLE_VALUES]
-    u_frac = len(np.unique(sample)) / len(sample)
-    est_uniq = max(1, int(n * u_frac)) if u_frac < 0.999 else n
-    estimates = {
-        "raw": 8.0 * n,
-        "forbp": w_for * n / 8.0,
-        "rle": n_runs * (w_rv + w_rl) / 8.0,
-        "dict": est_uniq * 8.0 + n * bits_needed(est_uniq - 1) / 8.0,
-    }
-    return _pick(estimates)
-
-
-def choose_float_codec(bit_values: np.ndarray) -> str:
-    n = len(bit_values)
-    if n == 0:
-        return "raw"
-    sample = bit_values[:: max(1, n // _SAMPLE_VALUES)][:_SAMPLE_VALUES]
-    u_frac = len(np.unique(sample)) / len(sample)
-    if u_frac >= 0.999:
-        return "raw"
-    est_uniq = max(1, int(n * u_frac))
-    est_dict = est_uniq * 8.0 + n * bits_needed(est_uniq - 1) / 8.0
-    return _pick({"raw": 8.0 * n, "dict": est_dict})
-
-
-_EXACT_TRIAL_BYTES = 1 << 16  # below this, just encode every candidate
-
-
-def _exact_bytes_trial(lengths: np.ndarray, data: np.ndarray) -> str:
-    """Small chunks: encode raw/dict/rle for real and take the true minimum
-    (the sampled model can't see the block stage's behavior at tiny sizes).
-    FSST is excluded — training cost exceeds any possible win at this size."""
-    from . import dictenc, raw, rle
-    from .frame import pack_sections
-
-    sizes = {}
-    for name, enc in (
-        ("raw", raw.encode_bytes),
-        ("dict", dictenc.encode_bytes),
-        ("rle", rle.encode_bytes),
-    ):
-        try:
-            sections, _ = enc(lengths, data)
-            sizes[name] = len(pack_sections(sections))
-        except Exception:
-            continue
-    return _pick(sizes)
+    sample = np.concatenate([values[s:e] for s, e in _windows(np.arange(n + 1) * 8)])
+    return _pick({c: len(pack_sections(_INT_CODECS[c][0](sample)[0])) for c in candidates})
 
 
 def choose_bytes_codec(
     lengths: np.ndarray,
     data: np.ndarray,
     global_dict=None,
-    enable_fsst: bool = True,
     cache_key: str | None = None,
 ) -> str:
     n = len(lengths)
     if n == 0:
         return "raw"
-    total = float(data.nbytes)
-    if total <= _EXACT_TRIAL_BYTES and global_dict is None:
-        return _exact_bytes_trial(lengths, data)
-    avg_len = total / n
-    w_len = bits_needed(int(lengths.max()) - int(lengths.min()))
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offs[1:])
+    spans = _windows(offs)
+    s_lengths = np.concatenate([lengths[s:e] for s, e in spans])
+    s_data = np.concatenate([data[offs[s] : offs[e]] for s, e in spans])
+    scale = n / len(s_lengths)
 
-    # four contiguous windows spread across the chunk: run adjacency stays
-    # observable within each window, and a value distribution that drifts
-    # along the chunk (sorted data, constant head + varied tail) can't fool
-    # the cardinality / compressibility estimates the way a head-only
-    # sample does
-    k = min(n, _SAMPLE_VALUES)
-    if n <= _SAMPLE_VALUES:
-        s_lengths, s_data = lengths, data
-    else:
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offs[1:])
-        per = _SAMPLE_VALUES // 4
-        parts_l, parts_d = [], []
-        prev_end = 0
-        for s in (0, n // 4, n // 2, n - per):
-            # windows never overlap: double-counting head values (possible
-            # when n is barely above _SAMPLE_VALUES) would bias the
-            # cardinality/run estimates toward whatever the head holds
-            s = max(s, prev_end)
-            e = min(s + per, n)
-            if e <= s:
-                continue
-            parts_l.append(lengths[s:e])
-            parts_d.append(data[offs[s] : offs[e]])
-            prev_end = e
-        s_lengths = np.concatenate(parts_l)
-        s_data = np.concatenate(parts_d)
-        k = len(s_lengths)
-
-    # every codec's sections pass through the frame's block stage (zstd);
-    # 'raw' therefore costs total * sampled-zstd-ratio, not total
-    from .frame import block_trial_ratio
-
-    z_ratio = block_trial_ratio(s_data)
-    est_raw = total * z_ratio + n * w_len / 8.0
-
-    s_arr = varbytes_to_arrow(s_lengths, s_data, pa.large_binary())
-    s_dict = s_arr.dictionary_encode()
-    codes = s_dict.indices.to_numpy(zero_copy_only=False)
-    s_uniq = len(s_dict.dictionary)
-    u_frac = s_uniq / k
-    est_uniq = n if u_frac >= 0.999 else max(1, int(n * u_frac))
-    # dictionary values are plain bytes — they get the same block stage
-    est_dict = (
-        est_uniq * avg_len * z_ratio + est_uniq * 2 + n * bits_needed(est_uniq - 1) / 8.0
-    )
-
-    n_runs_s = int((codes[1:] != codes[:-1]).sum()) + 1
-    r_frac = n_runs_s / k
-    est_rle = (
-        est_uniq * avg_len * z_ratio
-        + est_uniq * 2
-        + n * r_frac * (bits_needed(est_uniq - 1) + bits_needed(n)) / 8.0
-    )
-
-    estimates = {"raw": est_raw, "dict": est_dict, "rle": est_rle}
+    encoders = {c: _BYTES_CODECS[c][0] for c in ("raw", "dict", "rle")}
     if global_dict is not None:
         # broadcast dictionary: codes only, no per-chunk dictionary storage
-        estimates["dict"] = n * bits_needed(len(global_dict[2]) - 1) / 8.0
+        encoders["dict"] = partial(dictenc.encode_bytes, global_dict=global_dict)
+    sizes = {
+        c: len(pack_sections(enc(s_lengths, s_data)[0])) * scale
+        for c, enc in encoders.items()
+    }
 
     # fsst can only beat raw+block-stage where the block codec struggles
-    # (z_ratio high) yet substring structure exists; when zstd already gets
-    # <1.67x on the sample, the fsst trial is pure overhead — skip it
-    if enable_fsst and total >= 1024 and u_frac > 0.05 and z_ratio > 0.6:
-        window = data[: min(data.nbytes, _FSST_SAMPLE_BYTES)]
+    # (z_ratio, the raw trial's packed bytes per sampled value byte, is
+    # high) yet substring structure exists; when zstd already gets <1.67x
+    # on the sample, the fsst trial is pure overhead — skip it. At or under
+    # the sample size, training costs more than any possible win
+    total = data.nbytes
+    if total <= _SAMPLE_BYTES:
+        return _pick(sizes)
+    z_ratio = sizes["raw"] / scale / max(1, s_data.nbytes)
+    s_arr = varbytes_to_arrow(s_lengths, s_data, pa.large_binary())
+    if z_ratio > 0.6 and pc.count_distinct(s_arr).as_py() / len(s_lengths) > 0.05:
+        window = data[:_SAMPLE_BYTES]
         cached = fsst._TABLE_CACHE.get(cache_key) if cache_key else None
         if cached is not None:
             # estimate with the worker's cached table: one apply, no training
             tokens = fsst.apply_table(window, cached[1])
         else:
             _, tokens = fsst.train_and_encode(window, max_merges=64)
-        used = np.unique(tokens)
-        w_tok = bits_needed(len(used) - 1)
-        ratio = (len(tokens) * w_tok / 8.0) / max(1.0, float(window.nbytes))
+        w_tok = bits_needed(len(np.unique(tokens)) - 1)
+        ratio = (len(tokens) * w_tok / 8.0) / float(window.nbytes)
+        w_len = bits_needed(int(lengths.max()) - int(lengths.min()))
         # packed FSST tokens still shed ~15-25% under the frame's block stage
-        estimates["fsst"] = total * ratio * 0.85 + 2048 + 1024 + n * w_len / 8.0
-    return _pick(estimates)
+        sizes["fsst"] = total * ratio * 0.85 + 2048 + 1024 + n * w_len / 8.0
+    return _pick(sizes)

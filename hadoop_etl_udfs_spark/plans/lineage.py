@@ -622,16 +622,17 @@ def completed_chunk_ids(spark: SparkSession, out_dir: str, n_columns: int) -> se
     count as done). countDistinct, not count(*): duplicate manifest rows (the
     documented duplicate-append scenario) must not let a chunk with a missing
     column pass as complete. Only the missing-sink case (first run) maps to
-    the empty set — any other manifest read failure raises, because silently
-    disabling resume would re-encode and append duplicate chunk rows."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        manifest = read_manifest(spark, out_dir)
-    except AnalysisException:  # first run: no manifest yet
-        return set()
+    the empty set, and it is asked of the path's Hadoop FileSystem, so
+    ``file:`` and ``hdfs:`` sinks behave alike and no failed read query is
+    run (an ``Observation`` listener would log its stack trace). Any manifest
+    read failure raises, because silently disabling resume would re-encode
+    and append duplicate chunk rows."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(chunks_path(out_dir))
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
+        return set()  # first run: no sink yet
     rows = (
-        manifest.groupBy("chunk_id")
+        read_manifest(spark, out_dir).groupBy("chunk_id")
         .agg(F.countDistinct("column").alias("n_cols"))
         .filter(F.col("n_cols") >= n_columns)
         .select("chunk_id")

@@ -165,7 +165,6 @@ def test_auto_picks_sensible_codecs():
         # raw+frame-block-stage legitimately ties rle/dict on small
         # low-cardinality chunks, so those pins accept it too
         ("rle", "raw"): pa.array(sorted(["en"] * 5000 + ["de"] * 3000 + ["fr"] * 800)),
-        ("forbp",): pa.array(np.arange(1_000_000, 1_100_000, 7, dtype=np.int64)),
         ("dict", "raw"): pa.array(
             [f"host-{i % 37}.example.com" for i in rng.permutation(8000)]
         ),
@@ -174,6 +173,14 @@ def test_auto_picks_sensible_codecs():
         enc = encode_array(arr, codec="auto")
         assert enc.codec in expected, f"expected {expected}, got {enc.codec}"
         assert decode_array(enc.payload, enc.meta).equals(arr)
+    # a sorted key: raw+block-stage beats forbp, so the pin is the size —
+    # within 5% of the best candidate and <=16 bits/value
+    keys = pa.array(np.arange(1_000_000, 1_100_000, 7, dtype=np.int64))
+    enc = encode_array(keys, codec="auto")
+    best = min(encode_array(keys, codec=c).bytes_out for c in ("raw", "forbp", "rle", "dict"))
+    assert enc.bytes_out <= best * 1.05, (enc.codec, enc.bytes_out, best)
+    assert enc.bytes_out < len(keys) * 2
+    assert decode_array(enc.payload, enc.meta).equals(keys)
     # auto never loses to raw by much and always round-trips
     unique_strs = pa.array([f"{i}-{rng.integers(0, 2**60)}" for i in range(3000)])
     enc = encode_array(unique_strs, codec="auto")
